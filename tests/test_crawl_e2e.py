@@ -437,6 +437,62 @@ def test_validate_url_hash_contract(spark, fixture_tables):
         )
 
 
+def test_validate_url_hash_samples_every_file(spark, fixture_tables, tmp_path):
+    """ADVICE r5 (d): the url_hash check samples the whole table, not its
+    first rows — a wrong column confined to a second (smaller) file of a
+    two-file table fails validation."""
+    from tripwire_spark.operators.crawl import run_crawl
+
+    pages, seeds, robots = fixture_tables
+    path = str(tmp_path / "pages_two_files")
+    big = (
+        pages.crossJoin(spark.range(30))
+        .withColumn("url", F.concat("url", F.lit("?r="), F.col("id").cast("string")))
+        .drop("id")
+        .withColumn("url_hash", F.xxhash64(F.col("url")))
+    )
+    big.coalesce(1).write.parquet(path)
+    bad = pages.withColumn("url_hash", F.xxhash64(F.col("url"), F.lit(7)))
+    bad.coalesce(1).write.mode("append").parquet(path)
+    two_files = spark.read.parquet(path)
+    assert len(two_files.inputFiles()) == 2
+    with pytest.raises(ValueError, match="url_hash"):
+        run_crawl(
+            spark, seeds, two_files, robots, BLACKLIST_PATTERNS,
+            max_rounds=1, default_budget=2, validate_url_hash=True,
+        )
+
+
+def test_resume_fetch_join_auto_starts_from_last_claimed(
+    spark, fixture_tables, tmp_path, monkeypatch
+):
+    """ADVICE r5 (c): a resumed fetch_join='auto' crawl decides its first
+    round from the last committed round's claimed count instead of always
+    broadcasting."""
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    ck = str(tmp_path / "ck_fj")
+    crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+        max_rounds=1, default_budget=2, checkpoint_dir=ck,
+    )
+    joins = []
+    real = crawl.fetch_extract
+
+    def spy(claimed, pages, join="broadcast"):
+        joins.append(join)
+        return real(claimed, pages, join=join)
+
+    monkeypatch.setattr(crawl, "fetch_extract", spy)
+    crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+        max_rounds=2, default_budget=2, checkpoint_dir=ck, resume=True,
+        fetch_join="auto", fetch_join_threshold=1,
+    )
+    assert joins == ["shuffle_hash"]
+
+
 def test_fetch_auto_adds_no_driver_actions(spark, fixture_tables):
     """VERDICT r4 ask #4 'Done' criterion: a crawl at fetch_join='auto'
     runs the same driver-job count as fetch_join='broadcast' (the old

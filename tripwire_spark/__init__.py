@@ -20,4 +20,11 @@ Reference parity is documented per function/class with file:line citations
 into /root/reference (see SURVEY.md for the full inventory).
 """
 
+from tripwire_spark import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles one of our functions imports this
+# package; the patch then spares each later task in that worker a full
+# re-parse of every cached zip archive (see zipcache).
+_zipcache.install()

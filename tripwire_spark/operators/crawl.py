@@ -115,7 +115,7 @@ def fetch_extract(claimed: DataFrame, pages: DataFrame, join: str = "broadcast")
     # the same canonical url string the frontier hashes; a column
     # computed with a different hash (or over a non-canonical url form)
     # silently misjoins as dropped fetches.  run_crawl(
-    # validate_url_hash=True) samples 1000 rows and fails fast.
+    # validate_url_hash=True) samples ~1000 rows and fails fast.
     p_hash = (
         F.col("url_hash") if "url_hash" in pages.columns else F.xxhash64(F.col("url"))
     )
@@ -333,6 +333,36 @@ def crawl_metrics(state: "CrawlState") -> DataFrame | None:
     return f.join(d, "round", "full_outer").orderBy("round")
 
 
+URL_HASH_SAMPLE_ROWS = 1000
+
+
+def _check_url_hash(pages: DataFrame) -> None:
+    """Fail fast when a stored ``url_hash`` breaks the ``xxhash64(url)``
+    contract (run_crawl's ``validate_url_hash``).
+
+    The sample is Bernoulli over the whole table, not a prefix: a prefix
+    reads the first file only, so a bad column in any other file of a
+    multi-file table would pass."""
+    cols = pages.select("url", "url_hash")
+    n = cols.count()
+    if n == 0:
+        return
+    fraction = URL_HASH_SAMPLE_ROWS / n
+    if fraction < 1.0:
+        cols = cols.sample(fraction=fraction, seed=0)
+    row = cols.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("url_hash") != F.xxhash64(F.col("url"))).alias("bad"),
+    ).first()
+    if row["bad"]:
+        raise ValueError(
+            f"pages.url_hash violates the xxhash64(url) contract on {row['bad']}/"
+            f"{row['n']} sampled rows — the fetch join would silently drop these "
+            "fetches; recompute the column (sources/bucketed.py writes it "
+            "correctly) or drop it to fall back to the computed join key"
+        )
+
+
 @dataclass
 class CrawlState:
     frontier: DataFrame
@@ -424,7 +454,8 @@ def run_crawl(
     ``fetch_join='auto'`` likewise decides each round from the PREVIOUS
     round's claimed count (round 1 defaults to broadcast — the seed
     round's claim set is the seed list; pass ``fetch_join=
-    'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).
+    'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).  A resumed
+    crawl reads that count from the last frontier commit's summary.
 
     ``seen_bucketed``: checkpointed seen-state snapshots are written
     bucketed on ``bucket`` (``bloom_buckets`` buckets) so the cogroup
@@ -439,8 +470,10 @@ def run_crawl(
     ``url_hash = xxhash64(url)`` over the SAME canonical url string the
     frontier hashes; a pages table hashed differently (or over a
     non-canonical url form) silently misjoins as dropped fetches.  This
-    flag samples 1000 pages up front and fails fast on any mismatch —
-    one bounded job at crawl start, off by default."""
+    flag checks a uniform sample of about 1000 pages drawn across the
+    whole table up front and fails fast on any mismatch — a row count
+    and one scan of the ``url``/``url_hash`` columns at crawl start,
+    off by default."""
     tables = None
     start_round = 1
     if checkpoint_dir:
@@ -462,18 +495,7 @@ def run_crawl(
             )
         }
     if validate_url_hash and "url_hash" in pages.columns:
-        bad = (
-            pages.select("url", "url_hash").limit(1000)
-            .filter(F.col("url_hash") != F.xxhash64(F.col("url")))
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                f"pages.url_hash violates the xxhash64(url) contract on {bad}/1000 "
-                "sampled rows — the fetch join would silently drop these fetches; "
-                "recompute the column (sources/bucketed.py writes it correctly) or "
-                "drop it to fall back to the computed join key"
-            )
+        _check_url_hash(pages)
 
     clicked = None  # D2 state: ck hashes of texts followed in earlier rounds
     # Whether the D2 state can hold ANY row yet.  A fresh crawl's round 1
@@ -484,6 +506,7 @@ def run_crawl(
     # non-empty); otherwise the first executed round does.
     d2_nonempty = False
     assignments = None  # sticky identity<->domain state (host, iid, group, type)
+    prev_claimed: int | None = None  # fetch-join auto input, one round stale
     if resume and tables and tables["frontier"].latest_id():
         frontier = tables["frontier"].read()
         results = tables["results"].read() if tables["results"].latest_id() else None
@@ -498,6 +521,11 @@ def run_crawl(
             assignments = tables["assignments"].read()
         last = tables["frontier"].snapshots()[-1]["summary"]
         start_round = int(last.get("round", 0)) + 1
+        # fetch_join='auto' picks from the previous round's claimed
+        # count; a crawled round's commit recorded it (the seeded round
+        # 0 did not).
+        if last.get("claimed") is not None:
+            prev_claimed = int(last["claimed"])
     else:
         frontier = build_frontier(seeds, patterns, vid=vid)
         decision_log = seed_decision_log(seeds, patterns).select(
@@ -607,7 +635,6 @@ def run_crawl(
                 crawl_caches.append(seen_base)
 
     budget_cap = None  # T8: None = healthy, no throttle
-    prev_claimed: int | None = None  # fetch-join auto input, one round stale
     for r in range(start_round, max_rounds + 1):
         claimed, disabled = politeness_schedule(
             state.frontier, robots, default_budget=default_budget, round_no=r,
@@ -655,7 +682,8 @@ def run_crawl(
         # actions as a fixed strategy (round-4 ADVICE: the dedicated
         # claimed.count() here was itself a serial-constant term).
         # Round 1 (prev_claimed None) broadcasts: the seed round's claim
-        # set is the seed list (docstring).
+        # set is the seed list (docstring).  A resumed crawl starts from
+        # the last committed round's count.
         strategy = fetch_join
         if fetch_join == "auto":
             strategy = (

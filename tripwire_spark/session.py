@@ -7,11 +7,30 @@ handling, partition counts sized by data not by default-200).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Upper bound of the default driver heap (the bench host's setting).
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+_log = logging.getLogger(__name__)
+
+
+def default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: half of physical RAM, capped at 48g.
+
+    Local mode runs every executor inside the driver JVM, so a heap sized
+    for a large host gets the JVM OOM-killed on a small one.  Falls back
+    to the cap where physical RAM cannot be read.
+    """
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(MAX_DRIVER_MEMORY_MB, phys // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -30,6 +49,8 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cores, DEFAULT_SHUFFLE_PARTITIONS)))
     )
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
+    _log.info("spark.driver.memory=%s", driver_memory)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -44,7 +65,7 @@ def get_spark(
         # cluster sizes (the N->4N scaling criterion) are biased toward
         # fewer, fatter partitions.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Cached page/state blocks trade memory for CPU: columnar-cache
