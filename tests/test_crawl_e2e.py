@@ -3,6 +3,8 @@ deterministic ordering, seen-set exactness (SURVEY.md §5.2/5.4)."""
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -519,3 +521,96 @@ def test_fetch_auto_adds_no_driver_actions(spark, fixture_tables):
     a = count_jobs("jobcount-auto", fetch_join="auto")
     b = count_jobs("jobcount-bcast", fetch_join="broadcast")
     assert abs(a - b) <= 1, (a, b)
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Operator names of a physical plan: adaptive plans are descended
+    into, a cached relation's own plan is not (reading a cache runs none
+    of the operators that built it)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_node_names(plan.executedPlan())
+    names = [name]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_node_names(children.apply(i))
+    return names
+
+
+def test_round_tasks_follow_rows(spark, tmp_path, monkeypatch):
+    """A round's O(new) writes run in tasks sized by their rows, not one
+    per seen-state bucket: the seen-sketch delta append and the frontier
+    commit of a 64-bucket crawl each write a handful of files, and the
+    decision-log append reads the canonicalized links from the round's
+    cache instead of re-running the Python UDF chain over every link.
+
+    Fixture: 40 seeded hosts with 8 links a page, so round 1 admits a
+    few hundred urls and touches nearly every bucket."""
+    from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    pages = synth_pages(spark, 40, 16, 8).persist()
+    seeds = synth_seeds(spark, n_seeds=40)
+    robots = synth_robots(spark, 40)
+    plans = {}
+    real_append = SnapshotTable.commit_append
+
+    def spy(self, delta, summary=None):
+        plans[self.name] = _plan_node_names(delta._jdf.queryExecution().executedPlan())
+        return real_append(self, delta, summary)
+
+    monkeypatch.setattr(SnapshotTable, "commit_append", spy)
+    buckets = 64
+    ck = tmp_path / "ck_tasks"
+    st = run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+        max_rounds=1, checkpoint_dir=str(ck), bloom_buckets=buckets,
+    )
+    assert st.rounds_run == 1
+
+    def round1_files(table):
+        snaps = json.loads((ck / table / "manifest.json").read_text())["snapshots"]
+        (snap,) = [s for s in snaps if s["summary"].get("round") == 1]
+        return snap["files"]
+
+    files = {t: len(round1_files(t)) for t in ("seen_sketch", "frontier")}
+    assert all(0 < n < buckets // 4 for n in files.values()), files
+    assert "InMemoryTableScan" in plans["decision_log"]
+    assert "ArrowEvalPython" not in plans["decision_log"], plans["decision_log"]
+    pages.unpersist()
+
+
+def test_seen_sketch_segment_bound(spark, tmp_path):
+    """The per-bucket segment bound ``run_crawl``'s ``compact_every``
+    docstring promises: the seen state a round's admit reads holds at
+    most ``compact_every`` segments per bucket, and each segment is one
+    row (the admit output's rebalance moves a bucket's delta row whole)."""
+    from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.sources.snapshots import open_snapshot_table
+
+    pages = synth_pages(spark, 24, 12, 3).persist()
+    seeds = synth_seeds(spark, n_seeds=12)
+    every, rounds, buckets = 2, 5, 8
+    ck = str(tmp_path / "ck_segs")
+    st = run_crawl(
+        spark, seeds, pages, None, BLACKLIST_PATTERNS,
+        max_rounds=rounds, default_budget=1, checkpoint_dir=ck,
+        compact_every=every, bloom_buckets=buckets,
+    )
+    assert st.rounds_run == rounds
+    table = open_snapshot_table(
+        spark, ck, "seen_sketch", bucket_key="bucket", bucket_count=buckets
+    )
+    last_of_round = {s["summary"]["round"]: s["id"] for s in table.snapshots()}
+    assert sorted(last_of_round) == list(range(rounds + 1))
+    grew = 0
+    for r, sid in sorted(last_of_round.items()):
+        segs = table.read(sid).groupBy("bucket", "seg").count()
+        worst = segs.groupBy("bucket").agg(
+            F.count("*").alias("segs"), F.max("count").alias("rows_per_seg")
+        ).agg(F.max("segs").alias("segs"), F.max("rows_per_seg").alias("rows")).first()
+        assert worst["rows"] == 1, (r, worst)
+        assert worst["segs"] <= every, (r, worst)
+        grew = max(grew, worst["segs"])
+    assert grew == every  # the bound is reached, not vacuous
+    pages.unpersist()

@@ -389,6 +389,78 @@ def test_jpeg_refusals_are_clean():
         decode_jpeg(b"not a jpeg at all")
 
 
+def _jpeg_segment(blob: bytes, marker: bytes) -> int:
+    """Offset of the first header segment with ``marker`` (walks the
+    length fields, so table bytes never match by accident)."""
+    pos = 2
+    while blob[pos : pos + 2] != marker:
+        pos += 2 + int.from_bytes(blob[pos + 2 : pos + 4], "big")
+    return pos
+
+
+def test_jpeg_fill_bytes_and_standalone_markers():
+    """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker,
+    and TEM/RSTn markers carry no length field; both decode to the same
+    pixels as the plain file."""
+    import numpy as np
+
+    from tripwire_spark.functions.jpeg import decode_jpeg, encode_jpeg
+
+    rng = np.random.default_rng(3)
+    img = rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
+    blob = encode_jpeg(img, quality=85, subsample=True)
+    ref = decode_jpeg(blob)
+    sos = _jpeg_segment(blob, b"\xff\xda")
+    for extra, at in (
+        (b"\xff\xff", 2),                # fill bytes before the first marker
+        (b"\xff" * 5, sos),               # fill bytes before SOS
+        (b"\xff\x01", 2),                # TEM
+        (b"\xff\xff\xd3", sos),          # fill byte, then a stray RST3
+    ):
+        assert (decode_jpeg(blob[:at] + extra + blob[at:]) == ref).all(), (extra, at)
+
+
+def test_jpeg_unsupported_scans_and_undefined_tables_refuse_typed():
+    """A baseline file spreading its components over several scans is
+    refused as NotImplementedError, and a scan or frame naming an
+    undefined Huffman or quantization table as ValueError — both in the
+    media pipelines' catch set, never a KeyError that kills the task."""
+    import numpy as np
+
+    from tripwire_spark.functions.jpeg import decode_jpeg, encode_jpeg
+
+    img = np.zeros((16, 16, 3), dtype=np.uint8)
+    img[..., 0] = np.arange(16)[:, None] * 15
+    blob = encode_jpeg(img, quality=90)
+    sos = _jpeg_segment(blob, b"\xff\xda")
+    ns = blob[sos + 4]
+    assert ns == 3
+    # first scan of a multi-scan file: component 1 alone
+    one = bytes([1]) + blob[sos + 5 : sos + 7] + blob[sos + 5 + 2 * ns : sos + 8 + 2 * ns]
+    multi = (
+        blob[:sos] + b"\xff\xda" + (2 + len(one)).to_bytes(2, "big") + one
+        + blob[sos + 8 + 2 * ns :]
+    )
+    with pytest.raises(NotImplementedError, match="multi-scan"):
+        decode_jpeg(multi)
+    # the scan's first component names DC/AC Huffman tables 3/3
+    bad_huff = bytearray(blob)
+    bad_huff[sos + 6] = 0x33
+    with pytest.raises(ValueError, match="huffman"):
+        decode_jpeg(bytes(bad_huff))
+    # the frame's first component names quantization table 3
+    sof = _jpeg_segment(blob, b"\xff\xc0")
+    bad_q = bytearray(blob)
+    bad_q[sof + 12] = 3  # SOF0: Lf(2) P(1) Y(2) X(2) Nf(1), then Ci Hi|Vi Tqi
+    with pytest.raises(ValueError, match="quantization"):
+        decode_jpeg(bytes(bad_q))
+    # a scan naming a component the frame lacks
+    bad_id = bytearray(blob)
+    bad_id[sos + 5] = 9
+    with pytest.raises(ValueError, match="component 9"):
+        decode_jpeg(bytes(bad_id))
+
+
 def test_jpeg_feeds_stats_thumbs_and_phash(spark):
     """The Spark-side plumbing treats JPEG as a first-class decodable
     codec: stats report fmt='jpeg' with real dims/luminance, thumbnails

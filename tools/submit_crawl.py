@@ -89,8 +89,13 @@ def main() -> int:
     spark = SparkSession.getActiveSession()
     if spark is None:
         if "PYSPARK_GATEWAY_PORT" in os.environ:
+            from tripwire_spark.session import CACHED_PLAN_COALESCE_CONF
+
             spark = SparkSession.builder.appName("tripwire-crawl").getOrCreate()
             spark.sparkContext.setLogLevel("WARN")
+            # a runtime SQL conf: the cluster path plans cached frames
+            # exactly as get_spark's sessions do
+            spark.conf.set(CACHED_PLAN_COALESCE_CONF, "true")
         else:
             from tripwire_spark.session import get_spark
 

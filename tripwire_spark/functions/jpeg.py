@@ -185,6 +185,12 @@ def decode_jpeg(content: bytes) -> np.ndarray:
         if content[pos] != 0xFF:
             raise ValueError(f"bad marker alignment at {pos}")
         marker = content[pos + 1]
+        if marker == 0xFF:  # T.81 B.1.1.2: fill bytes may precede a marker
+            pos += 1
+            continue
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM, RSTn: no length field
+            pos += 2
+            continue
         (seglen,) = struct.unpack_from(">H", content, pos + 2)
         seg = content[pos + 4 : pos + 2 + seglen]
         pos += 2 + seglen
@@ -237,8 +243,18 @@ def decode_jpeg(content: bytes) -> np.ndarray:
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
     by_id = {c["id"]: c for c in comps}
     for cid, td, ta in scan_comps:
-        c = by_id[cid]
-        c["td"], c["ta"] = td, ta
+        if cid not in by_id:
+            raise ValueError(f"JPEG scan names component {cid}, absent from the frame")
+        by_id[cid]["td"], by_id[cid]["ta"] = td, ta
+    if any("td" not in c for c in comps):
+        # T.81 allows a baseline frame to spread its components over
+        # several non-interleaved scans; only the one-scan shape decodes.
+        raise NotImplementedError("multi-scan baseline JPEG")
+    for c in comps:
+        if c["td"] not in huff_dc or c["ta"] not in huff_ac:
+            raise ValueError(f"JPEG component {c['id']} uses an undefined huffman table")
+        if c["tq"] not in qt:
+            raise ValueError(f"JPEG component {c['id']} uses an undefined quantization table")
 
     # --- entropy segment: unstuff FF00, split on restart markers -------
     raw = content[pos:]

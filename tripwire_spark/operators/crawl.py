@@ -25,9 +25,16 @@ Per round:
    resume = read latest committed round).
 
 Stage budget: ~10 stages / 3 driver actions per round (politeness
-windows, fetch+extract+admit chain, settle checkpoint).  Keeping this count low matters as much on a 1000-executor
+windows, fetch+extract+admit chain, settle checkpoint).  Task budget:
+a stage's task count follows its rows.  Only the html parse (one task
+per input split) and the cogroup admit (one task per seen-state bucket)
+run wide; AQE coalesces every persist()ed intermediate (session.py lets
+it change a cached plan's partitioning), the admit output is rebalanced
+before its O(new) consumers, and each link is canonicalized once per
+round.  Keeping both counts low matters as much on a 1000-executor
 cluster as locally: the frontier loop is latency-bound on scheduler
-round-trips, not data volume, once the per-round claim set is bounded.
+round-trips and per-task set-up, not data volume, once the per-round
+claim set is bounded.
 """
 
 from __future__ import annotations
@@ -204,6 +211,13 @@ def discover(
         scored = scored.join(seen_text, "__ck", "left")
     else:
         scored = scored.withColumn("__clicked", F.lit(None).cast("boolean"))
+    scored = scored.select("parent_qid", "pos", "curl", "weight", "__ck", "__clicked")
+    if caches is not None:
+        # The canonicalization UDF chain runs once per link: the decision
+        # log below and the admit candidates (whose two readers are the
+        # touched-bucket broadcast and the cogroup) all read this cache.
+        scored = scored.persist()
+        caches.append(scored)
     # Decision log for every candidate (S9).
     decisions = scored.withColumn(
         "decision",
@@ -233,11 +247,9 @@ def discover(
     if seen_state is not None and state is not None:
         from tripwire_spark.operators.seen import SeenState
 
-        # Persisted so the admit pass's TWO readers — the touched-bucket
-        # broadcast (distinct buckets) and the cogroup itself — run the
-        # scoring/canonicalization UDF chain once, not twice.  The
-        # broadcast job materializes the cache before the cogroup
-        # stages consume it (both live inside the one admit action).
+        # Not persisted: both readers of the admit pass (the touched-
+        # bucket broadcast and the cogroup) re-derive these JVM-only
+        # filters and the hash from the cached `scored`.
         cands = kept.select(
             "curl",
             url_hash("curl").alias("url_hash"),
@@ -245,8 +257,8 @@ def discover(
             "parent_qid",
             "pos",
             "__ck",
-        ).persist()
-        # Lazy persist is deliberate here (unlike `parsed`): eagerly
+        )
+        # Lazy persist of `admitted` is deliberate (unlike `parsed`): eagerly
         # checkpointing the cogroup serialized the round's DAG and
         # measured ~25% SLOWER at 8 slots; the admit chain reads the
         # already-materialized parsed blocks, so its cache race window
@@ -261,13 +273,19 @@ def discover(
         # state_deltas: append segments since the last compaction,
         # shipped candidate-side in cogroup mode, unioned in scan mode.
         # next_seg=round_no skips the per-admit max(seg) state scan.
+        # The admit output is bucket-aligned (n_buckets partitions over
+        # the bucketed base); the rebalance re-sizes it by its bytes so
+        # every O(new) consumer after it — the new rows' host UDF, the
+        # frontier commit, the seen-sketch delta append — runs a few
+        # tasks, not one per bucket.  That exchange carries the fresh
+        # candidates plus ONE delta segment row per touched bucket:
+        # O(new) bytes, never state bytes.
         admitted = seen_state.admit(
             cands, state, hash_col="url_hash",
             order_cols=["__negw", "parent_qid", "pos"],
             mode=seen_mode, next_seg=round_no, delta_side=state_deltas,
-        ).persist()
+        ).hint("rebalance").persist()
         if caches is not None:
-            caches.append(cands)
             caches.append(admitted)
         fresh, state_delta = SeenState.split(
             admitted, ["curl", "url_hash", "__negw", "parent_qid", "pos", "__ck"]
@@ -437,7 +455,9 @@ def run_crawl(
     the segmented seen state is compacted (one merged segment per
     bucket, committed as a full snapshot) and, in the no-checkpoint
     path, lineage-truncated — amortized O(total/K) maintenance, keeping
-    the per-round admit cost O(new).
+    the per-round admit cost O(new).  So the seen state a round's admit
+    reads holds at most ``compact_every`` segments per bucket, one row
+    each (tests/test_crawl_e2e.py pins it).
 
     ``seen_mode='auto'`` re-resolves the admit read strategy EVERY
     round from two zero-cost estimates (no dedicated count jobs): the
@@ -781,7 +801,7 @@ def run_crawl(
             n_claimed = claimed.count()
             if n_claimed == 0:
                 # drained: drop EVERY cache this round pinned (parsed,
-                # admitted, new_rows), not just claimed/parsed
+                # scored, admitted, new_rows), not just claimed/parsed
                 claimed.unpersist()
                 for c in round_caches:
                     c.unpersist()

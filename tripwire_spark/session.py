@@ -13,6 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Lets AQE coalesce a persist()ed plan's partitions, so a cached frame of
+# a few thousand rows runs (and is re-read) as a few tasks, not 32.
+CACHED_PLAN_COALESCE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 # Upper bound of the default driver heap (the bench host's setting).
 MAX_DRIVER_MEMORY_MB = 48 * 1024
 
@@ -58,6 +61,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(CACHED_PLAN_COALESCE_CONF, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Fixed Arrow batch size: per-row Python/Arrow overhead must not
