@@ -1620,7 +1620,7 @@ def q_seen_admit(spark: SparkSession, sf: str) -> DataFrame:
         F.col("event_id").alias("ord"),
         url.alias("url"),
     ).withColumn("url_hash", F.xxhash64("url"))
-    admitted = svc.admit(cand, state, "url_hash", order_cols=["ord"])
+    admitted = svc.admit(cand, state, "url_hash", order_cols=["ord"], next_seg=1)
     fresh, _delta = SeenState.split(admitted, ["ord", "url", "url_hash"])
     return fresh.select("ord", "url")
 

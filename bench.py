@@ -232,11 +232,9 @@ def crawl_bench(
     from tripwire_spark.operators.crawl import run_crawl
     from tripwire_spark.sources.synth import BLACKLIST_PATTERNS, synth_pages, synth_robots
 
-    # A/B knobs (BENCH_SEEN_MODE / BENCH_FETCH_JOIN) flow into every
-    # run_crawl below so strategy experiments use the exact protocol.
+    # A/B knob (BENCH_FETCH_JOIN) flows into every run_crawl below so
+    # strategy experiments use the exact protocol.
     crawl_kwargs = dict(crawl_kwargs or {})
-    if os.environ.get("BENCH_SEEN_MODE"):
-        crawl_kwargs.setdefault("seen_mode", os.environ["BENCH_SEEN_MODE"])
     if os.environ.get("BENCH_FETCH_JOIN"):
         crawl_kwargs.setdefault("fetch_join", os.environ["BENCH_FETCH_JOIN"])
     cached = False

@@ -167,8 +167,8 @@ def test_crawl_deterministic_across_runs(spark, fixture_tables):
 
 def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
     """fetch_join='shuffle_hash' (the past-10^8-claimed switchover) and
-    the cogroup seen mode must both produce the exact broadcast+scan
-    frontier — the flags trade plan shape, never results."""
+    fetch_join='auto' must produce the exact broadcast frontier — the
+    flag trades plan shape, never results."""
     from tripwire_spark.operators.crawl import run_crawl
 
     pages, seeds, robots = fixture_tables
@@ -182,14 +182,11 @@ def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
         st.release()
         return out
 
-    base = rows()  # seen_mode='auto' resolves to cogroup at this scale
+    base = rows()
     assert rows(fetch_join="shuffle_hash") == base
-    assert rows(seen_mode="cogroup") == base
-    assert rows(seen_mode="scan") == base
-    # auto modes re-resolve per ROUND from zero-cost estimates (r5):
-    # threshold=1 flips seen to scan / fetch to shuffle_hash from round
-    # 2 on (round 1 has no prior-round numbers and takes the defaults)
-    assert rows(seen_mode="auto", seen_mode_threshold=1) == base
+    # auto re-resolves per ROUND from the prior round's claimed count:
+    # threshold=1 flips fetch to shuffle_hash from round 2 on (round 1
+    # has no prior-round number and broadcasts)
     assert rows(fetch_join="auto", fetch_join_threshold=1) == base
     assert rows(fetch_join="auto") == base  # stays broadcast at this scale
 
@@ -374,22 +371,22 @@ def test_recrawl_schedule_estimator_and_plan(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_checkpoint_bucketed_cogroup_matches_scan(spark, fixture_tables, tmp_path):
+def test_checkpointed_crawl_matches_in_memory(spark, fixture_tables, tmp_path):
     """VERDICT r4 ask #2 end-to-end: a checkpointed crawl whose admit
-    runs in cogroup mode over the BUCKETED seen-sketch base (with round
-    deltas riding the candidate side) lands on the exact frontier of the
-    in-memory scan-mode crawl — with compact_every=2 so both a
-    delta-on-base round AND a post-compaction round are exercised."""
+    reads the BUCKETED seen-sketch base (with round deltas riding the
+    candidate side) lands on the exact frontier of the in-memory crawl —
+    with compact_every=2 so both a delta-on-base round (2) AND a
+    post-compaction round (3) are exercised."""
     from tripwire_spark.operators.crawl import run_crawl
 
     pages, seeds, robots = fixture_tables
     ref = run_crawl(
         spark, seeds, pages, robots, BLACKLIST_PATTERNS,
-        max_rounds=3, default_budget=2, seen_mode="scan",
+        max_rounds=3, default_budget=2,
     )
     ck = run_crawl(
         spark, seeds, pages, robots, BLACKLIST_PATTERNS,
-        max_rounds=3, default_budget=2, seen_mode="cogroup",
+        max_rounds=3, default_budget=2,
         checkpoint_dir=str(tmp_path / "ck_bk"), compact_every=2,
     )
     a = sorted(map(tuple, ref.frontier.select("qid", "url", "status", "try").collect()))
@@ -614,3 +611,15 @@ def test_seen_sketch_segment_bound(spark, tmp_path):
         grew = max(grew, worst["segs"])
     assert grew == every  # the bound is reached, not vacuous
     pages.unpersist()
+
+
+def test_seen_mode_accepts_only_auto(spark, fixture_tables):
+    """The seen-state admit has one plan; ``seen_mode`` survives only as
+    the ``'auto'`` keyword its callers pass, and any other value fails
+    before any work."""
+    from tripwire_spark.operators.crawl import run_crawl
+
+    pages, seeds, robots = fixture_tables
+    for mode in ("scan", "cogroup"):
+        with pytest.raises(ValueError, match="seen_mode"):
+            run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, seen_mode=mode)

@@ -142,6 +142,7 @@ def test_discover_clicked_text_memory(spark):
     # D2: a candidate repeating an earlier-round clicked text on the
     # same site is skipped and logged
     from tripwire_spark.operators.crawl import discover
+    from tripwire_spark.operators.seen import SeenState
 
     links = spark.createDataFrame(
         [
@@ -152,12 +153,14 @@ def test_discover_clicked_text_memory(spark):
         "parent_qid long, parent_url string, href string, anchor_text string, pos int",
     )
     seen = spark.createDataFrame([], "url string, url_hash long")
+    svc = SeenState(n_buckets=4)
     # clicked state = xxhash64(parent host, anchor text) keys
     clicked = spark.createDataFrame([("s1.test", "Sign up")], "phost string, lt string").select(
         F.xxhash64("phost", "lt").alias("ck")
     )
     new_rows, decisions, _, new_clicked = discover(
-        links, seen, ["blacklisted-nothing"], round_no=2, clicked=clicked
+        links, ["blacklisted-nothing"], round_no=2, seen_state=svc,
+        state=svc.init(seen, "url_hash"), clicked=clicked,
     )
     urls = {r["url"] for r in new_rows.collect()}
     assert "http://s1.test/new" not in urls  # repeated text on same site skipped

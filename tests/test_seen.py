@@ -1,9 +1,14 @@
-"""Bloom seen-set properties: zero false negatives, FP rate within
-bound, filter_unseen exactness (SURVEY.md §5.4)."""
+"""Seen-state properties: the per-bucket admit kernel against a Python
+model, O(new) delta segments, touched-bucket pruning, the bucketed base
+with candidate-side deltas, and compaction (SURVEY.md §5.4)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 import pyspark.sql.functions as F
 
@@ -17,146 +22,101 @@ def _urls(spark, start, n):
     )
 
 
-def test_bloom_no_false_negatives(spark):
-    from tripwire_spark.operators.seen import BloomSeenSet
+# -- the per-bucket kernel, Spark-free ------------------------------------
 
-    bloom = BloomSeenSet(n_buckets=8, bits_per_key=10)
-    seen = _urls(spark, 0, 5000)
-    sketch = bloom.build(seen).persist()
-    flagged = bloom.probe(seen, sketch).persist()
-    assert flagged.filter(F.col("maybe_seen").isNull()).count() == 0  # every row flagged
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0  # NEVER miss a seen url
+I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 
 
-def test_bloom_fp_rate(spark):
-    from tripwire_spark.operators.seen import BloomSeenSet
-
-    bloom = BloomSeenSet(n_buckets=8, bits_per_key=10)
-    sketch = bloom.build(_urls(spark, 0, 5000)).persist()
-    unseen = _urls(spark, 1_000_000, 5000)
-    fp = bloom.probe(unseen, sketch).filter(F.col("maybe_seen")).count()
-    assert fp / 5000 < 0.03  # theoretical ~1% at 10 bits/key; 3x slack
-
-
-def test_filter_unseen_exact(spark):
-    from tripwire_spark.operators.seen import BloomSeenSet, filter_unseen
-
-    bloom = BloomSeenSet(n_buckets=8, bits_per_key=10)
-    seen = _urls(spark, 0, 3000).persist()
-    sketch = bloom.build(seen).persist()
-    # candidates: half overlap the seen set, half are new
-    cands = _urls(spark, 1500, 3000)
-    out = filter_unseen(cands, seen, sketch, bloom)
-    got = sorted(r.url for r in out.collect())
-    want = sorted(r.url for r in _urls(spark, 3000, 1500).collect())
-    assert got == want  # bloom+backstop == exact anti-join result
+@st.composite
+def _admit_case(draw):
+    """A bucket's stored segments (base + deltas) and a candidate batch
+    drawn from one small pool of full-range int64 hashes, so batches
+    repeat hashes and hit both base and delta segments."""
+    pool = draw(st.lists(I64, min_size=1, max_size=24, unique=True))
+    seg = st.lists(st.sampled_from(pool), max_size=12).map(
+        lambda xs: np.unique(np.array(xs, dtype=np.int64))
+    )
+    base = draw(st.lists(seg, max_size=2))
+    deltas = draw(st.lists(seg, max_size=3))
+    rows = draw(st.lists(st.tuples(st.sampled_from(pool), I64, st.integers(0, 3)), max_size=40))
+    return pool, base, deltas, rows
 
 
-def test_incremental_merge_equals_full_build(spark):
-    from tripwire_spark.operators.seen import BloomSeenSet
+@settings(max_examples=300, deadline=None)
+@given(_admit_case())
+def test_admit_bucket_matches_model(case):
+    """Fresh rows are the set difference, first row per hash by
+    ``order_cols``; the companion int64 survives byte-exact; the delta
+    segment holds exactly the fresh hashes; compaction keeps membership."""
+    from tripwire_spark.operators.seen import _bloom_of, admit_bucket, compact_bucket
 
-    bloom = BloomSeenSet(n_buckets=8, bits_per_key=10, capacity=100_000)
-    a, b = _urls(spark, 0, 2000), _urls(spark, 2000, 2000)
-    merged = bloom.merge(bloom.build(a), b).persist()
-    # merged sketch must contain every url from both halves
-    flagged = bloom.probe(_urls(spark, 0, 4000), merged)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0
-    assert flagged.filter(F.col("maybe_seen").isNull()).count() == 0
-    # and byte-identical to a one-shot build over the union
-    full = {r.bucket: r.bits for r in bloom.build(a.unionByName(b)).collect()}
-    inc = {r.bucket: r.bits for r in merged.collect()}
-    assert full == inc
+    pool, base, deltas, rows = case
+    m_bits, k, bucket, next_seg = 512, 7, 3, 5
+    cand = pd.DataFrame(
+        {
+            "url_hash": np.array([r[0] for r in rows], dtype=np.int64),
+            "ck": np.array([r[1] for r in rows], dtype=np.int64),
+            "ord": np.array([r[2] for r in rows], dtype=np.int64),
+            "pos": np.arange(len(rows), dtype=np.int64),
+        }
+    )
+    segs = base + deltas
+    stored = set().union(*(s.tolist() for s in segs))
+    first: dict[int, tuple] = {}
+    for pos, (h, ck, order) in enumerate(rows):
+        if h not in stored and (h not in first or (order, pos) < first[h][2:]):
+            first[h] = (h, ck, order, pos)
+    want = set(first.values())
 
+    out = admit_bucket(bucket, cand, segs, next_seg, m_bits, k, "url_hash", ["ord", "pos"])
+    assert list(out.columns) == [
+        "kind", "bucket", "seg", "url_hash", "ck", "ord", "pos",
+        "bloom", "hashes", "n_items", "m_bits", "k",
+    ]
+    fresh = out[out["kind"] == 0]
+    got = {tuple(int(r[c]) for c in ("url_hash", "ck", "ord", "pos")) for _, r in fresh.iterrows()}
+    assert got == want
+    assert len(fresh) == len(want)
+    delta = out[out["kind"] == 1]
+    if not want:
+        assert len(delta) == 0
+        new_segs = []
+    else:
+        (d,) = delta.itertuples(index=False)
+        assert (d.bucket, d.seg, d.n_items, d.m_bits, d.k) == (bucket, next_seg, len(want), m_bits, k)
+        fhs = np.frombuffer(d.hashes, dtype=np.int64)
+        assert fhs.tolist() == sorted(first)
+        assert d.bloom == _bloom_of(fhs, m_bits, k)
+        new_segs = [fhs]
 
-def test_sketch_snapshot_roundtrip(spark, tmp_path):
-    from tripwire_spark.operators.seen import BloomSeenSet
-    from tripwire_spark.sources.snapshots import SnapshotTable
-
-    bloom = BloomSeenSet(n_buckets=4, bits_per_key=10)
-    sk = bloom.build(_urls(spark, 0, 1000))
-    t = SnapshotTable(spark, str(tmp_path), "seen_sketch")
-    t.commit(sk, {"round": 1})
-    restored = t.read()
-    flagged = bloom.probe(_urls(spark, 0, 1000), restored).persist()
-    assert flagged.filter(F.col("maybe_seen").isNull()).count() == 0
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_no_false_negatives_and_fp(spark):
-    from tripwire_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8, capacity=50_000)
-    seen = _urls(spark, 0, 5000)
-    state = ck.build(seen).persist()
-    flagged = ck.probe(seen, state).persist()
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0  # no false negatives
-    unseen = _urls(spark, 1_000_000, 5000)
-    fp = ck.probe(unseen, state).filter(F.col("maybe_seen")).count()
-    assert fp / 5000 < 0.01  # 16-bit fingerprints: ~1.2e-4 expected
-
-
-def test_cuckoo_delete_readmits(spark):
-    from tripwire_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8, capacity=50_000)
-    a, b = _urls(spark, 0, 2000).persist(), _urls(spark, 2000, 2000).persist()
-    state = ck.build(a.unionByName(b)).persist()
-    # delete half -> those urls probe as unseen again, the rest stay seen
-    state2 = ck.delete(state, b).persist()
-    still = ck.probe(a, state2).filter(~F.col("maybe_seen")).count()
-    gone = ck.probe(b, state2).filter(F.col("maybe_seen")).count()
-    assert still == 0  # a fully present (fp collisions with b possible but 0 expected)
-    assert gone == 0   # b fully removed
-    # and re-insert works
-    state3 = ck.insert(state2, b).persist()
-    assert ck.probe(b, state3).filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_high_load_no_false_negatives(spark):
-    """Regression: the primary index must not be derived from the same
-    low bits as the shard key (both mod powers of two), or each shard
-    collapses to n_entries/n_buckets usable entries and silently drops
-    items well below nominal load."""
-    from tripwire_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=64, capacity=60_000)  # ~76% shard load below
-    seen = _urls(spark, 0, 50_000)
-    state = ck.build(seen).persist()
-    # every inserted item must be reported stored...
-    assert sum(r.n_items for r in state.collect()) == seen.select("url_hash").distinct().count()
-    # ...and must probe as seen
-    assert ck.probe(seen, state).filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_reinsert_is_idempotent(spark):
-    """Insert of already-present hashes must not store duplicate
-    fingerprints: one delete then removes the item completely."""
-    from tripwire_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8, capacity=50_000)
-    b = _urls(spark, 0, 1000).persist()
-    state = ck.insert(ck.build(b), b).persist()  # second insert is a no-op
-    assert sum(r.n_items for r in state.collect()) == 1000
-    gone = ck.delete(state, b)
-    assert ck.probe(b, gone).filter(F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_incremental_matches_full_build(spark):
-    from tripwire_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8, capacity=50_000)
-    a, b = _urls(spark, 0, 2000), _urls(spark, 2000, 2000)
-    merged = ck.insert(ck.build(a), b).persist()
-    assert ck.probe(_urls(spark, 0, 4000), merged).filter(~F.col("maybe_seen")).count() == 0
+    all_segs = segs + new_segs
+    if not all_segs:
+        return
+    seg_rows = pd.DataFrame(
+        {
+            "bloom": [_bloom_of(s, m_bits, k) for s in all_segs],
+            "hashes": [s.tobytes() for s in all_segs],
+            "m_bits": m_bits,
+            "k": k,
+        }
+    )
+    (c,) = compact_bucket(bucket, seg_rows).itertuples(index=False)
+    merged = np.frombuffer(c.hashes, dtype=np.int64)
+    assert c.seg == 0 and c.n_items == len(merged)
+    assert c.bloom == _bloom_of(merged, m_bits, k)  # OR of blooms = bloom of the union
+    for h in pool:  # membership unchanged by compaction
+        assert (h in merged) == any(h in s for s in all_segs)
+    again = admit_bucket(bucket, cand, [merged], next_seg + 1, m_bits, k, "url_hash", ["ord", "pos"])
+    assert len(again) == 0
 
 
 # -- SeenState delta segments (O(new) per-round state) -------------------
 
 
-def _admit(svc, cands, state, mode="scan"):
+def _admit(svc, cands, state, next_seg=1):
     from tripwire_spark.operators.seen import SeenState
 
-    out = svc.admit(cands, state, hash_col="url_hash", mode=mode).persist()
+    out = svc.admit(cands, state, hash_col="url_hash", next_seg=next_seg).persist()
     fresh, delta = SeenState.split(out, ["url", "url_hash"])
     return fresh, delta
 
@@ -204,7 +164,7 @@ def test_seen_state_untouched_buckets_byte_identical(spark):
         .filter(svc.bucket_col(F.col("url_hash")).isin(0, 1))
         .persist()
     )
-    out = svc.admit(cands, state, hash_col="url_hash", mode="cogroup").persist()
+    out = svc.admit(cands, state, hash_col="url_hash", next_seg=1).persist()
     # the state side of the cogroup is pruned to touched buckets only
     assert "LeftSemi" in out._jdf.queryExecution().executedPlan().toString()
     _, delta = SeenState.split(out, ["url", "url_hash"])
@@ -216,19 +176,18 @@ def test_seen_state_untouched_buckets_byte_identical(spark):
     assert all(b in (0, 1) for (b, s) in set(after) - set(before))
 
 
-@pytest.mark.parametrize("mode", ["scan", "cogroup"])
-def test_seen_state_segmented_membership_and_compact(spark, mode):
+def test_seen_state_segmented_membership_and_compact(spark):
     """Multi-round segmented state is membership-exact, re-admitting seen
     urls yields zero fresh, and compact() folds all segments into one per
-    bucket while preserving the exact hash set — in BOTH admit modes."""
+    bucket while preserving the exact hash set."""
     from tripwire_spark.operators.seen import SeenState
 
     svc = SeenState(n_buckets=4)
     state = svc.init(_urls(spark, 0, 1000), "url_hash").persist()
     hwm = 1000  # ids 0..hwm-1 admitted so far
-    for start in (500, 1200, 1800):  # three overlapping rounds
+    for rnd, start in enumerate((500, 1200, 1800), 1):  # three overlapping rounds
         cands = _urls(spark, start, 1000).persist()
-        fresh, delta = _admit(svc, cands, state, mode=mode)
+        fresh, delta = _admit(svc, cands, state, next_seg=rnd)
         # fresh = candidates minus everything admitted before (exact)
         got = sorted(r.url for r in fresh.collect())
         want = sorted(r.url for r in _urls(spark, hwm, start + 1000 - hwm).collect())
@@ -239,7 +198,7 @@ def test_seen_state_segmented_membership_and_compact(spark, mode):
     total = sum(r.n_items for r in state.collect())
     assert total == 2800
     # re-admitting anything in range yields zero fresh
-    again, delta2 = _admit(svc, _urls(spark, 0, 2800), state, mode=mode)
+    again, delta2 = _admit(svc, _urls(spark, 0, 2800), state, next_seg=4)
     assert again.count() == 0
     assert delta2.count() == 0  # no fresh -> no delta segment at all
     # compact: one seg=0 row per bucket, same membership
@@ -247,52 +206,8 @@ def test_seen_state_segmented_membership_and_compact(spark, mode):
     rows = compacted.collect()
     assert len(rows) == len({r.bucket for r in rows}) and all(r.seg == 0 for r in rows)
     assert sum(r.n_items for r in rows) == 2800
-    again2, _ = _admit(svc, _urls(spark, 0, 2800), compacted, mode=mode)
+    again2, _ = _admit(svc, _urls(spark, 0, 2800), compacted, next_seg=4)
     assert again2.count() == 0
-
-
-def test_seen_state_scan_mode_state_bytes_never_shuffled(spark):
-    """VERDICT r3 #4 (the last O(total)-per-round term): in scan mode
-    the state's segment blobs must move ZERO hops — no Exchange anywhere
-    in the admit plan may output a ``hashes``/``bloom`` column.  (The
-    delta's hashes exist only downstream of the applyInPandas build,
-    after every exchange.)  The cogroup mode plan FAILS this check by
-    design — that asymmetry is what the mode switch buys."""
-    from tripwire_spark.operators.seen import SeenState
-
-    def exchange_outputs(df):
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # formatted explain: numbered nodes, then per-node detail blocks
-        # "(n) Exchange ... Output [...]" — collect each Exchange block
-        blocks, cur = [], None
-        for line in plan.splitlines():
-            if line.startswith("(") and ")" in line:
-                name = line.split(")", 1)[1].strip()
-                cur = name if name.startswith("Exchange") else None
-            elif cur and line.strip().startswith("Input"):
-                blocks.append(line)
-        return blocks
-
-    svc = SeenState(n_buckets=8)
-    state = svc.init(_urls(spark, 0, 4000), "url_hash").persist()
-    cands = _urls(spark, 2000, 4000)
-    scan = svc.admit(cands, state, hash_col="url_hash", mode="scan")
-    for b in exchange_outputs(scan):
-        assert "hashes" not in b and "bloom" not in b, b
-    # the discriminating control: cogroup mode DOES exchange state blobs
-    cg = svc.admit(cands, state, hash_col="url_hash", mode="cogroup")
-    assert any("hashes" in b for b in exchange_outputs(cg))
-    # and scan mode's answer is exactly cogroup mode's answer
-    fresh_s, delta_s = _admit(svc, cands, state, mode="scan")
-    fresh_c, delta_c = _admit(svc, cands, state, mode="cogroup")
-    assert sorted(r.url for r in fresh_s.collect()) == sorted(
-        r.url for r in fresh_c.collect()
-    )
-    assert sorted((r.bucket, r.n_items) for r in delta_s.collect()) == sorted(
-        (r.bucket, r.n_items) for r in delta_c.collect()
-    )
 
 
 def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
@@ -314,8 +229,7 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
     base = tbl.read_base()
     # one delta segment batch on top of the base (urls 3000..3999)
     d_out = svc.admit(
-        _urls(spark, 3000, 1000), base, hash_col="url_hash", mode="cogroup",
-        next_seg=1,
+        _urls(spark, 3000, 1000), base, hash_col="url_hash", next_seg=1,
     ).persist()
     _, delta = SeenState.split(d_out, ["url", "url_hash"])
     tbl.commit_append(delta, {"round": 1})
@@ -330,14 +244,12 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
         "__ck", F.xxhash64("url", F.lit("salt"))
     )
     out = svc.admit(
-        cands, base, hash_col="url_hash", mode="cogroup", next_seg=2,
-        delta_side=deltas,
+        cands, base, hash_col="url_hash", next_seg=2, delta_side=deltas,
     ).persist()
     fresh, delta2 = SeenState.split(out, ["url", "url_hash", "__ck"])
-    # (a) answer == the plain cogroup over the unioned state
+    # (a) answer == the admit over the unioned state
     ref_out = svc.admit(
-        cands, SeenState.advance(base, deltas), hash_col="url_hash",
-        mode="cogroup", next_seg=2,
+        cands, SeenState.advance(base, deltas), hash_col="url_hash", next_seg=2,
     ).persist()
     ref_fresh, ref_delta = SeenState.split(ref_out, ["url", "url_hash", "__ck"])
     assert sorted((r["url"], r["__ck"]) for r in fresh.collect()) == sorted(
@@ -385,27 +297,51 @@ def test_seen_compact_rejects_mixed_geometry(spark):
         a.compact(mixed).collect()
 
 
-def test_scan_mode_preserves_full_range_int64_columns(spark):
-    """Round-5 regression (real bug found in review): with >=1 hit row
-    in a batch, scan mode's null-padded tagged union float64-upcast the
-    candidates' OTHER int64 columns, silently rounding 64-bit hashes
-    (D2 ck, discovery parent qids) past the 52-bit mantissa — 1491 of
-    1500 companion hashes corrupted in the repro.  Zero-filled now;
-    this pins byte-exact survival and scan==cogroup on those columns."""
+def test_admit_preserves_full_range_int64_columns(spark):
+    """Round-5 regression (real bug found in review): a null-padded
+    tagged union float64-upcast the candidates' OTHER int64 columns,
+    silently rounding 64-bit hashes (D2 ck, discovery parent qids) past
+    the 52-bit mantissa — 1491 of 1500 companion hashes corrupted in the
+    repro.  Pins byte-exact survival through admit."""
     from tripwire_spark.operators.seen import SeenState
 
     svc = SeenState(n_buckets=8)
-    with_ck = lambda df: df.withColumn("ck64", F.xxhash64("url", F.lit("ck")))  # noqa: E731
     state = svc.init(_urls(spark, 0, 3000), "url_hash").persist()
-    cands = with_ck(_urls(spark, 2500, 2000))  # 500 hits, 1500 fresh
-    outs = {}
-    for mode in ("scan", "cogroup"):
-        out = svc.admit(cands, state, hash_col="url_hash", mode=mode, next_seg=1)
-        fresh, _ = SeenState.split(out, ["url", "url_hash", "ck64"])
-        bad = fresh.filter(
-            F.col("ck64") != F.xxhash64("url", F.lit("ck"))
-        ).count()
-        assert bad == 0, f"{mode}: {bad} corrupted 64-bit companion values"
-        outs[mode] = sorted((r["url"], r["ck64"]) for r in fresh.collect())
-        assert len(outs[mode]) == 1500
-    assert outs["scan"] == outs["cogroup"]
+    cands = _urls(spark, 2500, 2000).withColumn("ck64", F.xxhash64("url", F.lit("ck")))
+    out = svc.admit(cands, state, hash_col="url_hash", next_seg=1)  # 500 hits, 1500 fresh
+    fresh, _ = SeenState.split(out, ["url", "url_hash", "ck64"])
+    bad = fresh.filter(F.col("ck64") != F.xxhash64("url", F.lit("ck"))).count()
+    assert bad == 0, f"{bad} corrupted 64-bit companion values"
+    assert fresh.count() == 1500
+
+
+def test_admit_delta_side_matches_model(spark):
+    """End to end through Arrow and pandas with ``delta_side``: the delta
+    segments ride the candidate exchange padded to the candidate shape,
+    and the answer is the model's — candidates minus base and deltas,
+    the first row per url by ``order_cols``, a full-range int64
+    companion intact, one delta segment per touched bucket."""
+    from tripwire_spark.operators.seen import SeenState
+
+    svc = SeenState(n_buckets=8)
+    base = svc.init(_urls(spark, 0, 1000), "url_hash").persist()
+    d_out = svc.admit(_urls(spark, 1000, 500), base, next_seg=1).persist()
+    _, deltas = SeenState.split(d_out, ["url", "url_hash"])
+    # ids 800..1799 twice each: hits in the base (800..999) and in the
+    # deltas (1000..1499), fresh 1500..1799, every url repeated in-batch
+    reps = spark.range(2).select(F.col("id").alias("rep"))
+    cands = _urls(spark, 800, 1000).crossJoin(reps).withColumn("ck64", F.xxhash64("url", "rep"))
+    out = svc.admit(
+        cands, base, order_cols=["rep"], next_seg=2, delta_side=deltas
+    ).persist()
+    fresh, delta = SeenState.split(out, ["url", "url_hash", "rep", "ck64"])
+    want = _urls(spark, 1500, 300).withColumn("rep", F.lit(0).cast("long")).withColumn(
+        "ck64", F.xxhash64("url", "rep")
+    )
+    cols = ["url", "url_hash", "rep", "ck64"]
+    assert sorted(map(tuple, fresh.select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
+    drows = delta.collect()
+    assert len(drows) == len({r.bucket for r in drows}) and all(r.seg == 2 for r in drows)
+    assert sum(r.n_items for r in drows) == 300

@@ -58,10 +58,6 @@ def main() -> int:
     ap.add_argument("--budget", type=int, default=3)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--backpressure", action="store_true")
-    ap.add_argument("--seen-mode", default="auto",
-                    choices=["auto", "scan", "cogroup"],
-                    help="seen-state admit read strategy (auto re-resolves "
-                         "per round from zero-cost estimates)")
     ap.add_argument("--fetch-join", default="auto",
                     choices=["auto", "broadcast", "shuffle_hash"],
                     help="claimed->pages join strategy (auto: prior round's "
@@ -132,7 +128,7 @@ def main() -> int:
         max_rounds=args.rounds, default_budget=args.budget,
         checkpoint_dir=args.checkpoint_dir, resume=args.resume,
         backpressure=args.backpressure, trap_limit=args.trap_limit,
-        seen_mode=args.seen_mode, fetch_join=args.fetch_join,
+        fetch_join=args.fetch_join,
         seen_bucketed=not args.no_seen_bucketed,
         validate_url_hash=args.validate_url_hash,
     )

@@ -17,8 +17,8 @@ Per round:
    candidates (vectorized pandas UDFs)
 4. link scoring (C18 + D3 combine), blacklist (F1), canonicalize, then
    ONE cogrouped seen-state pass (seen.py SeenState.admit): in-round
-   dedup + membership + bloom/hash-state update in a single shuffle —
-   D7 / F2 analog
+   dedup + exact membership + the new delta segment in a single
+   shuffle — D7 / F2 analog
 5. settle: status transitions (T2), hash-derived qids for discoveries,
    fetch_log (S10) + decision_log (S9) appends
 6. snapshot commit per state table (= Iceberg snapshot per round;
@@ -42,7 +42,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tripwire_spark.functions.html import extract_page
@@ -57,6 +57,7 @@ from tripwire_spark.operators.frontier import (
     seed_decision_log,
     settle,
 )
+from tripwire_spark.operators.seen import SeenState
 from tripwire_spark.sources.snapshots import open_snapshot_table
 
 # Discovered URLs carry qid = their FULL 64-bit url_hash — unique among
@@ -151,20 +152,18 @@ PAGE_GUARD = r"(?i)(google\.|facebook\.com)"
 
 def discover(
     links: DataFrame,
-    seen: DataFrame,
     patterns: list[str],
     round_no: int,
+    seen_state: SeenState,
+    state: DataFrame,
     vid: int = 1,
     queue: str = "default",
-    seen_state=None,
-    state: DataFrame | None = None,
     caches: list | None = None,
     clicked: DataFrame | None = None,
     trap_limit: int | None = None,
     trap_keep: int = 5,
-    seen_mode: str = "scan",
     state_deltas: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Score, filter, canonicalize, dedup, and seen-filter new links.
 
     Returns (new_frontier_rows, decision_log_rows, state_delta,
@@ -179,10 +178,10 @@ def discover(
     the FIFO order of the page that found it — the deterministic analog
     of 'click the best link first' (pagefinder.js:122,246-249).
 
-    With a ``seen_state`` (SeenState), in-round dedup + membership test
-    + state update collapse into ONE cogrouped pass (see seen.py);
-    without one, falls back to a window-dedup + exact anti-join against
-    ``seen`` (the frontier's urls).
+    In-round dedup + membership test + state update are ONE cogrouped
+    ``seen_state.admit`` pass over ``state`` (the seen state's base) and
+    ``state_deltas`` (segments appended since its last compaction); see
+    seen.py.
 
     ``clicked`` (D2, pagefinder.js:101-104,277-279): per-site anchor
     texts already followed in EARLIER rounds; candidates repeating a
@@ -243,64 +242,41 @@ def discover(
         from tripwire_spark.operators.frontier import filter_url_traps
 
         kept = filter_url_traps(kept, "curl", limit=trap_limit, keep=trap_keep)
-    state_delta = None
-    if seen_state is not None and state is not None:
-        from tripwire_spark.operators.seen import SeenState
-
-        # Not persisted: both readers of the admit pass (the touched-
-        # bucket broadcast and the cogroup) re-derive these JVM-only
-        # filters and the hash from the cached `scored`.
-        cands = kept.select(
-            "curl",
-            url_hash("curl").alias("url_hash"),
-            (-F.col("weight")).alias("__negw"),
-            "parent_qid",
-            "pos",
-            "__ck",
-        )
-        # Lazy persist of `admitted` is deliberate (unlike `parsed`): eagerly
-        # checkpointing the cogroup serialized the round's DAG and
-        # measured ~25% SLOWER at 8 slots; the admit chain reads the
-        # already-materialized parsed blocks, so its cache race window
-        # is narrow.
-        # seen_mode="scan" (default): the state is only SCANNED — its
-        # bytes never enter an exchange; every admit shuffle/broadcast
-        # is O(new links).  "cogroup" is the one-wide-shuffle pass
-        # (right for small state, or past ~10^8 new urls/round where
-        # the candidate-hash broadcast would outgrow the exchange it
-        # avoids — and over a BUCKETED-stored state its state side is
-        # exchange-free too, see SeenState.admit(delta_side=...)).
-        # state_deltas: append segments since the last compaction,
-        # shipped candidate-side in cogroup mode, unioned in scan mode.
-        # next_seg=round_no skips the per-admit max(seg) state scan.
-        # The admit output is bucket-aligned (n_buckets partitions over
-        # the bucketed base); the rebalance re-sizes it by its bytes so
-        # every O(new) consumer after it — the new rows' host UDF, the
-        # frontier commit, the seen-sketch delta append — runs a few
-        # tasks, not one per bucket.  That exchange carries the fresh
-        # candidates plus ONE delta segment row per touched bucket:
-        # O(new) bytes, never state bytes.
-        admitted = seen_state.admit(
-            cands, state, hash_col="url_hash",
-            order_cols=["__negw", "parent_qid", "pos"],
-            mode=seen_mode, next_seg=round_no, delta_side=state_deltas,
-        ).hint("rebalance").persist()
-        if caches is not None:
-            caches.append(admitted)
-        fresh, state_delta = SeenState.split(
-            admitted, ["curl", "url_hash", "__negw", "parent_qid", "pos", "__ck"]
-        )
-    else:
-        w = Window.partitionBy("curl").orderBy(F.col("weight").desc(), "parent_qid", "pos")
-        deduped = kept.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-        fresh = deduped.join(seen.select(F.col("url").alias("curl")), "curl", "left_anti").select(
-            "curl",
-            url_hash("curl").alias("url_hash"),
-            (-F.col("weight")).alias("__negw"),
-            "parent_qid",
-            "pos",
-            "__ck",
-        )
+    # Not persisted: both readers of the admit pass (the touched-bucket
+    # broadcast and the cogroup) re-derive these JVM-only filters and
+    # the hash from the cached `scored`.
+    cands = kept.select(
+        "curl",
+        url_hash("curl").alias("url_hash"),
+        (-F.col("weight")).alias("__negw"),
+        "parent_qid",
+        "pos",
+        "__ck",
+    )
+    # Lazy persist of `admitted` is deliberate (unlike `parsed`): eagerly
+    # checkpointing the cogroup serialized the round's DAG and measured
+    # ~25% SLOWER at 8 slots; the admit chain reads the already-
+    # materialized parsed blocks, so its cache race window is narrow.
+    # state_deltas ride the candidate-side exchange, so over a bucketed
+    # base no state bytes move (SeenState.admit).  next_seg=round_no
+    # gives every round's delta segment its own id.
+    # The admit output is bucket-aligned (n_buckets partitions over the
+    # bucketed base); the rebalance re-sizes it by its bytes so every
+    # O(new) consumer after it — the new rows' host UDF, the frontier
+    # commit, the seen-sketch delta append — runs a few tasks, not one
+    # per bucket.  That exchange carries the fresh candidates plus ONE
+    # delta segment row per touched bucket: O(new) bytes, never state
+    # bytes.
+    admitted = seen_state.admit(
+        cands, state, hash_col="url_hash",
+        order_cols=["__negw", "parent_qid", "pos"],
+        next_seg=round_no, delta_side=state_deltas,
+    ).hint("rebalance").persist()
+    if caches is not None:
+        caches.append(admitted)
+    fresh, state_delta = SeenState.split(
+        admitted, ["curl", "url_hash", "__negw", "parent_qid", "pos", "__ck"]
+    )
     # Deterministic qid = the full 64-bit url_hash.  The seen set
     # guarantees a hash enters the frontier exactly once, so the qid is
     # exactly as unique as the hash identity the whole engine keys on,
@@ -411,7 +387,6 @@ def run_crawl(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     vid: int = 1,
-    use_bloom: bool = True,
     bloom_buckets: int = 64,
     backpressure: bool = False,
     backpressure_miss_rate: float = 0.5,
@@ -420,9 +395,6 @@ def run_crawl(
     compact_every: int = 8,
     trap_limit: int | None = None,
     seen_mode: str = "auto",
-    seen_mode_threshold: int = 50_000_000,
-    scan_cand_limit: int = 100_000_000,
-    est_links_per_page: int = 50,
     fetch_join: str = "broadcast",
     fetch_join_threshold: int = 100_000_000,
     seen_preload: DataFrame | None = None,
@@ -459,19 +431,16 @@ def run_crawl(
     reads holds at most ``compact_every`` segments per bucket, one row
     each (tests/test_crawl_e2e.py pins it).
 
-    ``seen_mode='auto'`` re-resolves the admit read strategy EVERY
-    round from two zero-cost estimates (no dedicated count jobs): the
-    running state size (restored ``n_items`` on resume + per-round
-    candidate upper bounds) and the previous round's candidate volume
-    (exact from the decision-log commit manifest when checkpointing,
-    else ``claimed x est_links_per_page``).  Small state →
-    ``cogroup``; large state + bounded candidates → ``scan`` (state
-    bytes move zero hops); large state AND > ``scan_cand_limit``
-    candidates → ``cogroup`` again, which with ``seen_bucketed``
-    storage reads its state side exchange-free from the bucketed
-    snapshot — so the 10^10-state ∧ 10^8-new-urls corner ships only
-    O(new x rounds-since-compaction) bytes through any exchange.
-    ``fetch_join='auto'`` likewise decides each round from the PREVIOUS
+    The seen-state admit has one plan: a cogroup of the candidates
+    against the state's base, with the segments appended since the last
+    compaction riding the candidate side (``SeenState.admit``).  With
+    ``seen_bucketed`` storage the base is read exchange-free, so the
+    10^10-state ∧ 10^8-new-urls corner ships only O(new x
+    rounds-since-compaction) bytes through any exchange.
+    ``seen_mode`` accepts only ``'auto'``, the value callers pass; any
+    other value raises ``ValueError``.
+
+    ``fetch_join='auto'`` decides each round from the PREVIOUS
     round's claimed count (round 1 defaults to broadcast — the seed
     round's claim set is the seed list; pass ``fetch_join=
     'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).  A resumed
@@ -494,6 +463,8 @@ def run_crawl(
     whole table up front and fails fast on any mismatch — a row count
     and one scan of the ``url``/``url_hash`` columns at crawl start,
     off by default."""
+    if seen_mode != "auto":
+        raise ValueError(f"seen_mode must be 'auto', got {seen_mode!r}")
     tables = None
     start_round = 1
     if checkpoint_dir:
@@ -567,92 +538,62 @@ def run_crawl(
         # init, politeness, settle) reads the cached, host-clustered rows.
         state.frontier = state.frontier.localCheckpoint(eager=True)
 
-    # Bucket-sharded seen-state (bloom bits + sorted hash array per
-    # bucket): initialized ONCE over the seed frontier (restored from
-    # its snapshot on resume), then carried forward by each round's
-    # admit() pass — O(new) update per round.
+    # Bucket-sharded seen-state (sorted hash segments per bucket):
+    # initialized ONCE over the seed frontier (restored from its
+    # snapshot on resume), then carried forward by each round's admit()
+    # pass — O(new) update per round.
     crawl_caches: list = []
-    seen_svc = None
-    seen_base = None    # full state (no-checkpoint) or the bucketed base snapshot (tables)
+    seen_svc = SeenState(n_buckets=bloom_buckets)
     seen_deltas = None  # append segments since the last full snapshot (tables path)
-    # Zero-action auto-mode estimators (docstring): running state size
-    # and last round's candidate volume.  A fresh crawl's initial state
-    # is the seed frontier — the smallest the state will ever be — so
-    # the small-state default (cogroup) is right without counting it;
-    # both numbers then update per round from values the loop already
-    # has (commit manifests / the claimed count), never a dedicated job.
-    est_state_items = 0
-    est_cand_rows: int | None = None
-    seen_mode_auto = seen_mode == "auto"
-
-    def _pick_seen_mode() -> str:
-        if est_state_items <= seen_mode_threshold:
-            return "cogroup"  # small state: one narrow exchange, no probe broadcast
-        if est_cand_rows is not None and est_cand_rows > scan_cand_limit:
-            # scan's O(candidates) probe broadcast would outgrow its
-            # win; cogroup over the bucketed base keeps the state bytes
-            # out of every exchange anyway (admit delta_side path)
-            return "cogroup"
-        return "scan"  # big state, bounded delta: state bytes move zero hops
-
-    if use_bloom:
-        from tripwire_spark.operators.seen import SeenState
-
-        seen_svc = SeenState(n_buckets=bloom_buckets)
-        if resume and tables and tables["seen_sketch"].latest_id():
+    if resume and tables and tables["seen_sketch"].latest_id():
+        # the bucketed base snapshot + the segments appended on top
+        seen_base = tables["seen_sketch"].read_base()
+        seen_deltas = tables["seen_sketch"].read_deltas()
+        # ONE metadata-only job on the resume path (blob columns
+        # pruned): fail fast on geometry drift — a checkpoint written
+        # under a different bloom_buckets/capacity/bits_per_key would
+        # emit delta segments whose blooms compact() cannot OR together,
+        # and a changed bloom_buckets would probe the wrong segments.
+        meta = tables["seen_sketch"].read().agg(
+            F.count_distinct("m_bits", "k").alias("geoms"),
+            F.first("m_bits").alias("m"),
+            F.first("k").alias("kk"),
+        ).first()
+        if meta["geoms"] is not None and int(meta["geoms"]) > 1:
+            raise ValueError(
+                "restored seen state carries mixed bloom geometry across "
+                "segments — compact it with the service it was written under "
+                "before resuming"
+            )
+        if meta["m"] is not None and (
+            int(meta["m"]) != seen_svc.m_bits or int(meta["kk"]) != seen_svc.k
+        ):
+            raise ValueError(
+                f"restored seen state geometry (m_bits={meta['m']}, k={meta['kk']}) "
+                f"!= this crawl's SeenState (m_bits={seen_svc.m_bits}, k={seen_svc.k}) "
+                "— resume with the same bloom_buckets/capacity/bits_per_key"
+            )
+    else:
+        # seen_preload: prior-corpus url hashes imported into the
+        # initial seen set (history import on a fresh checkpoint, and
+        # the knob behind the 10x-history scale experiment — preloaded
+        # hashes grow STATE SIZE without touching crawl results,
+        # isolating the admit read side's cost curve).
+        init_src = state.frontier.select("url_hash")
+        if seen_preload is not None:
+            init_src = init_src.unionByName(seen_preload.select("url_hash"))
+        seen_base = seen_svc.init(init_src, "url_hash")
+        if tables:
+            # Seed segments committed once (bucketed layout); every
+            # round then APPENDS its O(new) delta segments on top
+            # (resume reads base + file union, never a rewritten blob).
+            # The state is disk-backed from here on — the shape that
+            # holds when it no longer fits memory.
+            tables["seen_sketch"].commit(seen_base, {"round": 0, "stage": "seeded"})
             seen_base = tables["seen_sketch"].read_base()
-            seen_deltas = tables["seen_sketch"].read_deltas()
-            # ONE metadata-only job on the resume path (blob columns
-            # pruned): sizes the restored history for the auto-mode
-            # estimator AND fail-fasts on geometry drift — a checkpoint
-            # written under a different capacity/bits_per_key would emit
-            # delta segments whose blooms compact() cannot OR together.
-            meta = tables["seen_sketch"].read().agg(
-                F.sum("n_items").alias("n"),
-                F.count_distinct("m_bits", "k").alias("geoms"),
-                F.first("m_bits").alias("m"),
-                F.first("k").alias("kk"),
-            ).first()
-            est_state_items = int(meta["n"] or 0)
-            if meta["geoms"] is not None and int(meta["geoms"]) > 1:
-                raise ValueError(
-                    "restored seen state carries mixed bloom geometry across "
-                    "segments — compact it with the service it was written under "
-                    "before resuming"
-                )
-            if meta["m"] is not None and (
-                int(meta["m"]) != seen_svc.m_bits or int(meta["kk"]) != seen_svc.k
-            ):
-                raise ValueError(
-                    f"restored seen state geometry (m_bits={meta['m']}, k={meta['kk']}) "
-                    f"!= this crawl's SeenState (m_bits={seen_svc.m_bits}, k={seen_svc.k}) "
-                    "— resume with the same bloom_buckets/capacity/bits_per_key"
-                )
         else:
-            # seen_preload: prior-corpus url hashes imported into the
-            # initial seen set (history import on a fresh checkpoint,
-            # and the knob behind the 10x-history scale experiment —
-            # preloaded hashes grow STATE SIZE without touching crawl
-            # results, isolating the admit read side's cost curve).
-            init_src = state.frontier.select("url_hash")
-            if seen_preload is not None:
-                init_src = init_src.unionByName(seen_preload.select("url_hash"))
-                if seen_mode_auto:
-                    # one-off import-time measurement so round 1's mode
-                    # reflects the imported history's size
-                    est_state_items += seen_preload.count()
-            seen_base = seen_svc.init(init_src, "url_hash")
-            if tables:
-                # Seed segments committed once (bucketed layout); every
-                # round then APPENDS its O(new) delta segments on top
-                # (resume reads base + file union, never a rewritten
-                # blob).  The state is disk-backed from here on — the
-                # shape that holds when it no longer fits memory.
-                tables["seen_sketch"].commit(seen_base, {"round": 0, "stage": "seeded"})
-                seen_base = tables["seen_sketch"].read_base()
-            else:
-                seen_base = seen_base.persist()
-                crawl_caches.append(seen_base)
+            seen_base = seen_base.persist()
+            crawl_caches.append(seen_base)
 
     budget_cap = None  # T8: None = healthy, no throttle
     for r in range(start_round, max_rounds + 1):
@@ -751,14 +692,12 @@ def run_crawl(
             F.col("l.text").alias("anchor_text"),
             F.col("l.pos").alias("pos"),
         )
-        seen = state.frontier.select("url", "url_hash")
         round_caches: list = [parsed, *round_pre_caches]
-        round_seen_mode = _pick_seen_mode() if seen_mode_auto else seen_mode
         new_rows, link_decisions, state_delta, _admit_ck = discover(
-            links, seen, patterns, round_no=r, vid=vid,
-            seen_state=seen_svc, state=seen_base, caches=round_caches,
+            links, patterns, round_no=r, seen_state=seen_svc, state=seen_base,
+            vid=vid, caches=round_caches,
             clicked=clicked if d2_nonempty else None, trap_limit=trap_limit,
-            seen_mode=round_seen_mode, state_deltas=seen_deltas,
+            state_deltas=seen_deltas,
         )
         # (D2 fold happens at CLAIM time above — _admit_ck, the admitted
         # links' ck rows, is for standalone discover() callers only.)
@@ -792,7 +731,6 @@ def run_crawl(
         state.decision_log = state.decision_log.unionByName(link_decisions)
         state.rounds_run = r
 
-        nxt = None
         if tables:
             # Mutating tables (frontier, assignments) rewrite; every
             # append-only table commits ONLY this round's delta (the
@@ -819,38 +757,26 @@ def run_crawl(
             if assignments is not None:
                 tables["assignments"].commit(assignments, summary)
                 assignments = tables["assignments"].read()
-            if state_delta is not None:
-                tables["seen_sketch"].commit_append(state_delta, summary)
-                if seen_svc is not None and r % compact_every == 0:
-                    # Lazy maintenance: merge each bucket's segments into
-                    # one (full rewrite, amortized O(total/K) per round),
-                    # re-landing in the bucketed layout.
-                    tables["seen_sketch"].commit(
-                        seen_svc.compact(tables["seen_sketch"].read()),
-                        {"round": r, "stage": "compacted"},
-                    )
-                # Next round reads the (possibly just-recompacted)
-                # bucketed base + the small parquet deltas on top —
-                # lazy, disk-backed, and SPLIT so admit can keep the
-                # base's bytes out of every exchange in any mode.
-                seen_base = tables["seen_sketch"].read_base()
-                seen_deltas = tables["seen_sketch"].read_deltas()
+            tables["seen_sketch"].commit_append(state_delta, summary)
+            if r % compact_every == 0:
+                # Lazy maintenance: merge each bucket's segments into one
+                # (full rewrite, amortized O(total/K) per round),
+                # re-landing in the bucketed layout.
+                tables["seen_sketch"].commit(
+                    seen_svc.compact(tables["seen_sketch"].read()),
+                    {"round": r, "stage": "compacted"},
+                )
+            # Next round reads the (possibly just-recompacted) bucketed
+            # base + the small parquet deltas on top — lazy, disk-backed,
+            # and SPLIT so admit can keep the base's bytes out of every
+            # exchange.
+            seen_base = tables["seen_sketch"].read_base()
+            seen_deltas = tables["seen_sketch"].read_deltas()
             state.frontier = tables["frontier"].read()
             state.results = tables["results"].read()
             state.fetch_log = tables["fetch_log"].read()
             state.decision_log = tables["decision_log"].read()
             state.metrics.append(summary)
-            if seen_mode_auto:
-                # Estimator updates, all commit-manifest-derived (zero
-                # extra jobs): this round's candidate volume is the
-                # decision-log append's recorded row count, and
-                # admitted <= candidates bounds state growth from above
-                # (overestimating only flips to scan earlier — the safe
-                # direction at scale).
-                est_cand_rows = int(
-                    tables["decision_log"].snapshots()[-1].get("added_rows") or 0
-                )
-                est_state_items += est_cand_rows
         else:
             # No checkpoint: pin each round's frontier to break lineage
             # growth.  This one eager action also materializes the
@@ -864,20 +790,16 @@ def run_crawl(
                 state.frontier.explain("formatted")
             spark.sparkContext.setJobDescription(f"round {r}: settle+admit frontier checkpoint")
             state.frontier = state.frontier.localCheckpoint(eager=True)
-            if state_delta is not None:
-                # Prior segments are untouched; the delta is backed by
-                # the (now materialized) admitted cache — no extra
-                # action needed to advance.
-                from tripwire_spark.operators.seen import SeenState
-
-                nxt = SeenState.advance(seen_base, state_delta)
+            # Prior segments are untouched; the delta is backed by the
+            # (now materialized) admitted cache — no extra action needed
+            # to advance.
+            seen_base = SeenState.advance(seen_base, state_delta)
             if r % compact_every == 0:
                 # Bound plan growth of the per-round union chains (seen
                 # segments, clicked ck state, results/log DAGs): compact
                 # + pin every K rounds, so an arbitrary max_rounds crawl
                 # never accumulates an unbounded lineage.
-                if nxt is not None and seen_svc is not None:
-                    nxt = seen_svc.compact(nxt).localCheckpoint(eager=True)
+                seen_base = seen_svc.compact(seen_base).localCheckpoint(eager=True)
                 if clicked is not None:
                     clicked = clicked.localCheckpoint(eager=True)
                 state.results = state.results.localCheckpoint(eager=True)
@@ -886,21 +808,12 @@ def run_crawl(
             # Emptiness probe AFTER the round's one materializing action:
             # reads the claimed cache (cheap) instead of forcing an extra
             # politeness evaluation up front.  A drained frontier costs
-            # one no-op round instead of a per-round pre-check.  When an
-            # auto mode wants the claimed count, take count() INSTEAD of
-            # isEmpty() — still exactly one job on the cached frame, and
-            # the number feeds next round's strategy picks (no dedicated
-            # count jobs; round-4 ADVICE / VERDICT ask #4).
-            if fetch_join == "auto" or seen_mode_auto:
-                n_claimed = claimed.count()
-                prev_claimed = n_claimed
-                if seen_mode_auto:
-                    est_cand_rows = n_claimed * est_links_per_page
-                    est_state_items += est_cand_rows
-                drained = n_claimed == 0
-            else:
-                drained = claimed.isEmpty()
-            if drained:
+            # one no-op round instead of a per-round pre-check.  count()
+            # is one job on the cached frame, like isEmpty(), and its
+            # number feeds next round's fetch_join='auto' pick (no
+            # dedicated count job; round-4 ADVICE / VERDICT ask #4).
+            prev_claimed = claimed.count()
+            if prev_claimed == 0:
                 claimed.unpersist()
                 # the lazy results/log DAGs still reference this round's
                 # caches — hand them to CrawlState.release(), don't leak
@@ -924,8 +837,6 @@ def run_crawl(
 
         claimed.unpersist()
         d2_nonempty = True  # later rounds may claim ck-bearing discoveries
-        if nxt is not None:
-            seen_base = nxt  # no-checkpoint path; tables path updated at commit
         if tables:
             for c in round_caches:
                 c.unpersist()
