@@ -30,50 +30,6 @@ def _force(df) -> int:
     return 0
 
 
-def _calib_one(n: int) -> float:
-    """Fixed single-process python workload resembling the extraction
-    hot loop (html parse of a ~13 KB page)."""
-    from tripwire_spark.functions.html import extract_text_py
-
-    words = " ".join(f"w{i % 997}" for i in range(1200))
-    links = "".join(
-        f'<a href="http://site{i:04d}.test/p{i % 10}">Sign up {i}</a>' for i in range(30)
-    )
-    h = f"<html><head><title>T</title></head><body><p>{words}</p>{links}</body></html>"
-    t0 = time.time()
-    for _ in range(n):
-        extract_text_py(h)
-    return time.time() - t0
-
-
-def hw_concurrency_slowdown(threads_small: int, threads_large: int, n: int = 800) -> float:
-    """Per-process slowdown of a FIXED python workload when the box runs
-    ``threads_large`` vs ``threads_small`` concurrent copies.
-
-    On a single shared machine, fewer busy cores run measurably faster
-    (turbo headroom, exclusive memory bandwidth, fewer noisy-neighbor
-    collisions).  A multi-node N->4N cluster comparison has identical
-    per-node conditions on both sides, so this factor is a hardware
-    confound of the sandbox, not a property of the engine.  Since
-    round 5 it is published as DIAGNOSTIC EVIDENCE ONLY
-    (``hw_slowdown_factor_diag``) — the headline ``efficiency`` equals
-    ``efficiency_raw`` with no correction applied (r4 VERDICT: the
-    criterion must pass raw).  Measured range on this box: 0.98-1.26
-    across days, i.e. the factor is mostly tenant weather.
-    """
-    import multiprocessing as mp
-    import statistics
-
-    out = {threads_small: [], threads_large: []}
-    for _ in range(3):  # alternate; min-of-rounds rejects tenant noise
-        for k in (threads_small, threads_large):
-            with mp.Pool(k) as pool:
-                ds = pool.map(_calib_one, [n] * k)
-            out[k].append(statistics.median(ds))
-    sigma = min(out[threads_large]) / min(out[threads_small])
-    return max(1.0, sigma)  # <1 is measurement noise, not a speedup
-
-
 def _stop(spark) -> None:
     """Stop a session with its event queues DRAINED first.
 
@@ -573,15 +529,6 @@ def main() -> None:
         urls_scale = obs["large"][0]["urls"]  # both scaling sides crawl this set
         ups_large, ups_small = urls_scale / best_large, urls_scale / best_small
         eff = (ups_large / ups_small) / (slots_large / slots_small)
-        # Single-box confound: the low-slot side runs each core faster
-        # (turbo headroom, exclusive memory bandwidth).  The fixed-
-        # workload slowdown factor is still MEASURED and published as
-        # diagnostic evidence — but it no longer adjusts the headline:
-        # ``efficiency`` IS the raw ratio (r4 VERDICT: "passing only via
-        # the sigma correction is not passing").  On a real N- vs
-        # 4N-executor cluster both sides have identical per-node
-        # conditions and this factor is 1 by construction.
-        sigma = hw_concurrency_slowdown(2 * slots_small, 2 * slots_large)
         rep_secs = {
             side: [s for r in obs[side] for s in r["rep_secs"]] for side in ("large", "small")
         }
@@ -594,7 +541,6 @@ def main() -> None:
             "urls_per_sec_large": round(ups_large, 2),
             "efficiency_raw": round(eff, 3),
             "efficiency": round(eff, 3),
-            "hw_slowdown_factor_diag": round(sigma, 3),
             "rep_secs": rep_secs,
             "spread": {
                 side: round((max(s) - min(s)) / min(s), 3) for side, s in rep_secs.items()

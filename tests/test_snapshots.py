@@ -190,3 +190,26 @@ def test_bucketed_rollback_drops_registration(spark, tmp_path):
     t.rollback(sid1)
     assert not spark.catalog.tableExists(tbl2)
     assert t.read().count() == 10
+
+
+def test_manifest_paths_relative_and_absolute_still_read(spark, tmp_path):
+    """Manifests name data dirs relative to the table directory; a
+    manifest written with absolute paths (the older format) still reads."""
+    import json
+
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path), "log")
+    t.commit(_df(spark, 0, 100))
+    t.commit_append(_df(spark, 100, 150))
+    snaps = t.snapshots()
+    assert all(not os.path.isabs(p) for s in snaps for p in t._paths(s))
+    man = json.loads(open(t._manifest_path).read())
+    for s in man["snapshots"]:
+        if "paths" in s:
+            s["paths"] = [os.path.join(t.dir, p) for p in s["paths"]]
+        else:
+            s["path"] = os.path.join(t.dir, s["path"])
+    t._write_manifest(man)
+    assert t.read().count() == 150
+    assert t.read_deltas().count() == 50

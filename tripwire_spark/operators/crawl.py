@@ -22,10 +22,16 @@ Per round:
 5. settle: status transitions (T2), hash-derived qids for discoveries,
    fetch_log (S10) + decision_log (S9) appends
 6. snapshot commit per state table (= Iceberg snapshot per round;
-   resume = read latest committed round).
+   resume = read latest committed round), and the next round reads its
+   state back from those tables.
 
-Stage budget: ~10 stages / 3 driver actions per round (politeness
-windows, fetch+extract+admit chain, settle checkpoint).  Task budget:
+Every crawl commits its rounds to snapshot tables, under
+``checkpoint_dir`` or, without one, under a private scratch directory
+that ``CrawlState.release()`` deletes.
+
+Driver actions per round: the fetch+extract checkpoint, the drain
+count on the cached claim set, and one write per committed table (the
+admit chain runs inside the frontier commit).  Task budget:
 a stage's task count follows its rows.  Only the html parse (one task
 per input split) and the cogroup admit (one task per seen-state bucket)
 run wide; AQE coalesces every persist()ed intermediate (session.py lets
@@ -39,7 +45,9 @@ claim set is bounded.
 
 from __future__ import annotations
 
-import os
+import atexit
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -359,6 +367,12 @@ def _check_url_hash(pages: DataFrame) -> None:
 
 @dataclass
 class CrawlState:
+    """A crawl's state after ``run_crawl``: the frontier, results and
+    logs are lazy reads of its committed snapshot tables.  For a crawl
+    run without ``checkpoint_dir`` they live in ``scratch_dir``, which
+    ``release()`` deletes (or process exit, if nobody calls it); the
+    frames cannot be read after that."""
+
     frontier: DataFrame
     results: DataFrame | None = None
     fetch_log: DataFrame | None = None
@@ -366,14 +380,12 @@ class CrawlState:
     assignments: DataFrame | None = None  # sticky identity<->domain map
     rounds_run: int = 0
     metrics: list[dict] = field(default_factory=list)
-    # Persisted intermediates backing the lazy results/log DAGs when no
-    # checkpoint_dir is used; call .release() when done with the state.
-    caches: list = field(default_factory=list)
+    scratch_dir: str | None = None
 
     def release(self) -> None:
-        for c in self.caches:
-            c.unpersist()
-        self.caches = []
+        if self.scratch_dir:
+            shutil.rmtree(self.scratch_dir, ignore_errors=True)
+            self.scratch_dir = None
 
 
 def run_crawl(
@@ -401,16 +413,25 @@ def run_crawl(
     seen_bucketed: bool = True,
     validate_url_hash: bool = False,
 ) -> CrawlState:
-    """The full crawl loop; one snapshot commit per round when
-    ``checkpoint_dir`` is given; ``resume=True`` continues from the
-    latest committed round.
+    """The full crawl loop: one snapshot commit per round into
+    ``checkpoint_dir``; ``resume=True`` continues from the latest
+    committed round there (and raises ``ValueError`` without a
+    ``checkpoint_dir``).
+
+    Every crawl is checkpointed.  Without a ``checkpoint_dir`` the crawl
+    commits into a private scratch directory on the driver's local disk
+    (``tempfile.mkdtemp``) that ``CrawlState.release()`` deletes, so it
+    needs the same driver- and executor-visible filesystem any Parquet
+    stand-in checkpoint needs.
 
     ``backpressure`` (T8, run_queue_nowrap:29,124-126,219-231): when a
     round's miss rate exceeds ``backpressure_miss_rate`` the next
     round's politeness budget halves (min 1) — the batch analog of
     sleeping on bad proxy checks; a healthy round restores the default.
-    Costs two counts per round on already-cached frames; off by default
-    so the throughput bench path is action-identical.
+    Costs one count per round on the cached parse; off by default so
+    the throughput bench path is action-identical.  ``state.metrics``
+    holds one record per round: ``{round, claimed}``, plus ``fetched``,
+    ``miss_rate`` and ``budget_cap_next`` with backpressure on.
 
     ``identities`` (SURVEY §7 hard part 5; get_iid,
     common_utils.py:240-269): an identities dimension
@@ -425,11 +446,12 @@ def run_crawl(
     fast-appends via ``commit_append``); only the two mutating tables
     (frontier, assignments) rewrite.  ``compact_every``: every K rounds
     the segmented seen state is compacted (one merged segment per
-    bucket, committed as a full snapshot) and, in the no-checkpoint
-    path, lineage-truncated — amortized O(total/K) maintenance, keeping
-    the per-round admit cost O(new).  So the seen state a round's admit
-    reads holds at most ``compact_every`` segments per bucket, one row
-    each (tests/test_crawl_e2e.py pins it).
+    bucket, committed as a full snapshot) — amortized O(total/K)
+    maintenance, keeping the per-round admit cost O(new).  So the seen
+    state a round's admit reads holds at most ``compact_every`` segments
+    per bucket, one row each (tests/test_crawl_e2e.py pins it).  Every
+    round re-reads its state from the tables, so lineage never grows
+    with ``max_rounds``.
 
     The seen-state admit has one plan: a cogroup of the candidates
     against the state's base, with the segments appended since the last
@@ -446,11 +468,11 @@ def run_crawl(
     'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).  A resumed
     crawl reads that count from the last frontier commit's summary.
 
-    ``seen_bucketed``: checkpointed seen-state snapshots are written
-    bucketed on ``bucket`` (``bloom_buckets`` buckets) so the cogroup
-    admit's state side needs no exchange (plan-asserted in
-    tests/test_seen.py); plain layout when False (pre-round-5
-    checkpoints read back fine either way).
+    ``seen_bucketed``: seen-state snapshots are written bucketed on
+    ``bucket`` (``bloom_buckets`` buckets) so the cogroup admit's state
+    side needs no exchange (plan-asserted in tests/test_seen.py); plain
+    layout when False (pre-round-5 checkpoints read back fine either
+    way).
 
     ``validate_url_hash``: when the pages table carries a stored
     ``url_hash`` column the fetch join TRUSTS it as the join identity
@@ -465,28 +487,31 @@ def run_crawl(
     off by default."""
     if seen_mode != "auto":
         raise ValueError(f"seen_mode must be 'auto', got {seen_mode!r}")
-    tables = None
-    start_round = 1
-    if checkpoint_dir:
-        # Iceberg-backed when the runtime is on the classpath, else the
-        # Parquet stand-in — the loop is agnostic (same commit/append/
-        # read/rollback contract either way).  The seen sketch opts into
-        # the bucketed physical layout (full snapshots bucketed on
-        # ``bucket``) so admit's cogroup mode reads it exchange-free.
-        seen_bk = "bucket" if seen_bucketed else None
-        tables = {
-            name: open_snapshot_table(
-                spark, checkpoint_dir, name,
-                bucket_key=seen_bk if name == "seen_sketch" else None,
-                bucket_count=bloom_buckets if name == "seen_sketch" else None,
-            )
-            for name in (
-                "frontier", "results", "fetch_log", "decision_log", "seen_sketch",
-                "clicked", "assignments",
-            )
-        }
+    if resume and not checkpoint_dir:
+        raise ValueError("resume=True needs the checkpoint_dir of the crawl it continues")
     if validate_url_hash and "url_hash" in pages.columns:
         _check_url_hash(pages)
+    scratch_dir = None
+    if not checkpoint_dir:
+        checkpoint_dir = scratch_dir = tempfile.mkdtemp(prefix="tripwire-crawl-")
+        atexit.register(shutil.rmtree, scratch_dir, ignore_errors=True)
+    # Iceberg-backed when the runtime is on the classpath, else the
+    # Parquet stand-in — the loop is agnostic (same commit/append/
+    # read/rollback contract either way).  The seen sketch opts into
+    # the bucketed physical layout (full snapshots bucketed on
+    # ``bucket``) so admit's cogroup reads it exchange-free.
+    seen_bk = "bucket" if seen_bucketed else None
+    tables = {
+        name: open_snapshot_table(
+            spark, checkpoint_dir, name,
+            bucket_key=seen_bk if name == "seen_sketch" else None,
+            bucket_count=bloom_buckets if name == "seen_sketch" else None,
+        )
+        for name in (
+            "frontier", "results", "fetch_log", "decision_log", "seen_sketch",
+            "clicked", "assignments",
+        )
+    }
 
     clicked = None  # D2 state: ck hashes of texts followed in earlier rounds
     # Whether the D2 state can hold ANY row yet.  A fresh crawl's round 1
@@ -498,7 +523,8 @@ def run_crawl(
     d2_nonempty = False
     assignments = None  # sticky identity<->domain state (host, iid, group, type)
     prev_claimed: int | None = None  # fetch-join auto input, one round stale
-    if resume and tables and tables["frontier"].latest_id():
+    start_round = 1
+    if resume and tables["frontier"].latest_id():
         frontier = tables["frontier"].read()
         results = tables["results"].read() if tables["results"].latest_id() else None
         fetch_log = tables["fetch_log"].read() if tables["fetch_log"].latest_id() else None
@@ -528,24 +554,21 @@ def run_crawl(
         )
         results = None
         fetch_log = None
-        if tables:
-            tables["frontier"].commit(frontier, {"round": 0, "stage": "seeded"})
-            tables["decision_log"].commit(decision_log, {"round": 0})
+        tables["frontier"].commit(frontier, {"round": 0, "stage": "seeded"})
+        tables["decision_log"].commit(decision_log, {"round": 0})
 
-    state = CrawlState(frontier=frontier, results=results, fetch_log=fetch_log, decision_log=decision_log)
-    if not tables:
-        # Pin the seeded frontier once: every consumer below (seen-state
-        # init, politeness, settle) reads the cached, host-clustered rows.
-        state.frontier = state.frontier.localCheckpoint(eager=True)
+    state = CrawlState(
+        frontier=frontier, results=results, fetch_log=fetch_log,
+        decision_log=decision_log, scratch_dir=scratch_dir,
+    )
 
     # Bucket-sharded seen-state (sorted hash segments per bucket):
     # initialized ONCE over the seed frontier (restored from its
     # snapshot on resume), then carried forward by each round's admit()
     # pass — O(new) update per round.
-    crawl_caches: list = []
     seen_svc = SeenState(n_buckets=bloom_buckets)
-    seen_deltas = None  # append segments since the last full snapshot (tables path)
-    if resume and tables and tables["seen_sketch"].latest_id():
+    seen_deltas = None  # segments appended since the last full snapshot
+    if resume and tables["seen_sketch"].latest_id():
         # the bucketed base snapshot + the segments appended on top
         seen_base = tables["seen_sketch"].read_base()
         seen_deltas = tables["seen_sketch"].read_deltas()
@@ -582,18 +605,15 @@ def run_crawl(
         init_src = state.frontier.select("url_hash")
         if seen_preload is not None:
             init_src = init_src.unionByName(seen_preload.select("url_hash"))
-        seen_base = seen_svc.init(init_src, "url_hash")
-        if tables:
-            # Seed segments committed once (bucketed layout); every
-            # round then APPENDS its O(new) delta segments on top
-            # (resume reads base + file union, never a rewritten blob).
-            # The state is disk-backed from here on — the shape that
-            # holds when it no longer fits memory.
-            tables["seen_sketch"].commit(seen_base, {"round": 0, "stage": "seeded"})
-            seen_base = tables["seen_sketch"].read_base()
-        else:
-            seen_base = seen_base.persist()
-            crawl_caches.append(seen_base)
+        # Seed segments committed once (bucketed layout); every round
+        # then APPENDS its O(new) delta segments on top (resume reads
+        # base + file union, never a rewritten blob).  The state is
+        # disk-backed from here on — the shape that holds when it no
+        # longer fits memory.
+        tables["seen_sketch"].commit(
+            seen_svc.init(init_src, "url_hash"), {"round": 0, "stage": "seeded"}
+        )
+        seen_base = tables["seen_sketch"].read_base()
 
     budget_cap = None  # T8: None = healthy, no throttle
     for r in range(start_round, max_rounds + 1):
@@ -602,7 +622,8 @@ def run_crawl(
             budget_cap=budget_cap,
         )
         claimed = claimed.persist()
-        round_pre_caches = []
+        # every frame the round pins; all are dropped when it ends
+        round_caches = [claimed]
         if identities is not None:
             # Sticky identity claim: mapped hosts reuse, new hosts take
             # the lowest free iid (first-claim-wins; get_iid analog).
@@ -611,7 +632,7 @@ def run_crawl(
             assignments = sticky_assignments(
                 claimed.select("host"), assignments, identities
             ).persist()
-            round_pre_caches.append(assignments)
+            round_caches.append(assignments)
         round_clicked = None
         if track_clicked:
             # D2 fold at CLAIM time (pagefinder.js:277-279: links_clicked
@@ -621,19 +642,8 @@ def run_crawl(
             # Admitted-but-never-claimed links do not suppress anything
             # — the reference would still follow them.
             round_clicked = claimed.filter(F.col("ck").isNotNull()).select("ck").persist()
-            round_pre_caches.append(round_clicked)
+            round_caches.append(round_clicked)
             clicked = round_clicked if clicked is None else clicked.unionByName(round_clicked)
-        # parsed is the round's single most expensive computation (the
-        # html parse).  An ordinary persist() is NOT enough: the settle
-        # checkpoint and the admit chain materialize as CONCURRENT AQE
-        # jobs, and lazy-cache block races let both branches re-run the
-        # parse (event-log profiling showed the full pages scan + parse
-        # executing twice per round).  Eager localCheckpoint runs the
-        # parse exactly once and hands every consumer the same RDD
-        # blocks by identity — no plan-matching, no race.
-        # (Job descriptions name each round's driver actions so event-log
-        # profiling can attribute stages; zero cost otherwise.)
-        _explain = os.environ.get("TRIPWIRE_CRAWL_EXPLAIN") == "1"
         # Fetch-join switchover (round-3 3x experiment, BASELINE.md):
         # the driver-built claimed-set broadcast is per-round SERIAL
         # time growing with budget x hosts; past fetch_join_threshold
@@ -652,17 +662,33 @@ def run_crawl(
                 if prev_claimed is not None and prev_claimed > fetch_join_threshold
                 else "broadcast"
             )
-        parsed_df = fetch_extract(claimed, pages, join=strategy)
-        if _explain:
-            print(f"==== round {r} parsed plan ====")
-            parsed_df.explain("formatted")
+        # parsed is the round's single most expensive computation (the
+        # html parse).  An ordinary persist() is NOT enough: the
+        # commits' concurrent AQE jobs race on lazy-cache blocks and can
+        # each re-run the parse (event-log profiling showed the full
+        # pages scan + parse executing twice per round).  Eager
+        # localCheckpoint runs the parse exactly once and hands every
+        # consumer the same RDD blocks by identity — no plan-matching,
+        # no race.  (The job description names the action so event-log
+        # profiling can attribute its stages; zero cost otherwise.)
         spark.sparkContext.setJobDescription(f"round {r}: fetch+extract checkpoint")
-        parsed = parsed_df.localCheckpoint(eager=True)
-        # (qid, round_added) is the frontier's unique key — qid alone can
-        # collide between a seed (file_order) and a discovery (url_hash)
+        parsed = fetch_extract(claimed, pages, join=strategy).localCheckpoint(eager=True)
+        round_caches.append(parsed)
+        # Drain probe AFTER the parse, on the claimed cache the parse
+        # materialized (no extra politeness evaluation up front); its
+        # number also feeds next round's fetch_join='auto' pick and the
+        # round's record.  A drained round commits nothing.
+        n_claimed = claimed.count()
+        if n_claimed == 0:
+            for c in round_caches:
+                c.unpersist()
+            break
+        prev_claimed = n_claimed
         # Miss detection follows the same size logic: the parsed-keys
         # side is O(claimed), so its broadcast outgrows a shuffle at the
-        # same threshold the fetch join does.
+        # same threshold the fetch join does.  (qid, round_added) is the
+        # frontier's unique key — qid alone can collide between a seed
+        # (file_order) and a discovery (url_hash).
         anti_keys = parsed.select("qid", "round_added")
         if strategy == "broadcast":
             anti_keys = F.broadcast(anti_keys)
@@ -692,7 +718,6 @@ def run_crawl(
             F.col("l.text").alias("anchor_text"),
             F.col("l.pos").alias("pos"),
         )
-        round_caches: list = [parsed, *round_pre_caches]
         new_rows, link_decisions, state_delta, _admit_ck = discover(
             links, patterns, round_no=r, seen_state=seen_svc, state=seen_base,
             vid=vid, caches=round_caches,
@@ -720,130 +745,67 @@ def run_crawl(
             F.spark_partition_id().alias("partition_id"),
         )
 
-        state.frontier = settle(
+        settled = settle(
             state.frontier,
             fetched_meta.select("qid", "round_added", "try", "found"),
             new_urls=new_rows,
             disabled=disabled,
         )
-        state.results = round_results if state.results is None else state.results.unionByName(round_results)
-        state.fetch_log = log if state.fetch_log is None else state.fetch_log.unionByName(log)
-        state.decision_log = state.decision_log.unionByName(link_decisions)
+
+        # Mutating tables (frontier, assignments) rewrite; every
+        # append-only table commits ONLY this round's delta (the Iceberg
+        # fast-append) and is re-read as the file union — per-round
+        # commit cost is O(round delta), not O(table).
+        summary = {"round": r, "claimed": n_claimed}
+        tables["frontier"].commit(settled, summary)
+        tables["results"].commit_append(round_results, summary)
+        tables["fetch_log"].commit_append(log, summary)
+        tables["decision_log"].commit_append(link_decisions, summary)
+        if round_clicked is not None:
+            tables["clicked"].commit_append(round_clicked, summary)
+            clicked = tables["clicked"].read()
+        if assignments is not None:
+            tables["assignments"].commit(assignments, summary)
+            assignments = tables["assignments"].read()
+        tables["seen_sketch"].commit_append(state_delta, summary)
+        if r % compact_every == 0:
+            # Lazy maintenance: merge each bucket's segments into one
+            # (full rewrite, amortized O(total/K) per round),
+            # re-landing in the bucketed layout.
+            tables["seen_sketch"].commit(
+                seen_svc.compact(tables["seen_sketch"].read()),
+                {"round": r, "stage": "compacted"},
+            )
+        # Next round reads the (possibly just-recompacted) bucketed
+        # base + the small parquet deltas on top — lazy, disk-backed,
+        # and SPLIT so admit can keep the base's bytes out of every
+        # exchange.
+        seen_base = tables["seen_sketch"].read_base()
+        seen_deltas = tables["seen_sketch"].read_deltas()
+        state.frontier = tables["frontier"].read()
+        state.results = tables["results"].read()
+        state.fetch_log = tables["fetch_log"].read()
+        state.decision_log = tables["decision_log"].read()
         state.rounds_run = r
 
-        if tables:
-            # Mutating tables (frontier, assignments) rewrite; every
-            # append-only table commits ONLY this round's delta (the
-            # Iceberg fast-append) and is re-read as the file union —
-            # per-round commit cost is O(round delta), not O(table).
-            n_claimed = claimed.count()
-            if n_claimed == 0:
-                # drained: drop EVERY cache this round pinned (parsed,
-                # scored, admitted, new_rows), not just claimed/parsed
-                claimed.unpersist()
-                for c in round_caches:
-                    c.unpersist()
-                state.rounds_run = r - 1
-                break
-            prev_claimed = n_claimed
-            summary = {"round": r, "claimed": n_claimed}
-            tables["frontier"].commit(state.frontier, summary)
-            tables["results"].commit_append(round_results, summary)
-            tables["fetch_log"].commit_append(log, summary)
-            tables["decision_log"].commit_append(link_decisions, summary)
-            if round_clicked is not None:
-                tables["clicked"].commit_append(round_clicked, summary)
-                clicked = tables["clicked"].read()
-            if assignments is not None:
-                tables["assignments"].commit(assignments, summary)
-                assignments = tables["assignments"].read()
-            tables["seen_sketch"].commit_append(state_delta, summary)
-            if r % compact_every == 0:
-                # Lazy maintenance: merge each bucket's segments into one
-                # (full rewrite, amortized O(total/K) per round),
-                # re-landing in the bucketed layout.
-                tables["seen_sketch"].commit(
-                    seen_svc.compact(tables["seen_sketch"].read()),
-                    {"round": r, "stage": "compacted"},
-                )
-            # Next round reads the (possibly just-recompacted) bucketed
-            # base + the small parquet deltas on top — lazy, disk-backed,
-            # and SPLIT so admit can keep the base's bytes out of every
-            # exchange.
-            seen_base = tables["seen_sketch"].read_base()
-            seen_deltas = tables["seen_sketch"].read_deltas()
-            state.frontier = tables["frontier"].read()
-            state.results = tables["results"].read()
-            state.fetch_log = tables["fetch_log"].read()
-            state.decision_log = tables["decision_log"].read()
-            state.metrics.append(summary)
-        else:
-            # No checkpoint: pin each round's frontier to break lineage
-            # growth.  This one eager action also materializes the
-            # round's hits/links/admitted caches, which the lazy
-            # results/fetch_log/decision_log DAGs keep reading — so
-            # those caches live until the crawl ends (crawl_caches),
-            # not until the round ends.  The snapshot-table path instead
-            # rewrites state to disk and can drop caches per round.
-            if _explain:
-                print(f"==== round {r} settled-frontier plan ====")
-                state.frontier.explain("formatted")
-            spark.sparkContext.setJobDescription(f"round {r}: settle+admit frontier checkpoint")
-            state.frontier = state.frontier.localCheckpoint(eager=True)
-            # Prior segments are untouched; the delta is backed by the
-            # (now materialized) admitted cache — no extra action needed
-            # to advance.
-            seen_base = SeenState.advance(seen_base, state_delta)
-            if r % compact_every == 0:
-                # Bound plan growth of the per-round union chains (seen
-                # segments, clicked ck state, results/log DAGs): compact
-                # + pin every K rounds, so an arbitrary max_rounds crawl
-                # never accumulates an unbounded lineage.
-                seen_base = seen_svc.compact(seen_base).localCheckpoint(eager=True)
-                if clicked is not None:
-                    clicked = clicked.localCheckpoint(eager=True)
-                state.results = state.results.localCheckpoint(eager=True)
-                state.fetch_log = state.fetch_log.localCheckpoint(eager=True)
-                state.decision_log = state.decision_log.localCheckpoint(eager=True)
-            # Emptiness probe AFTER the round's one materializing action:
-            # reads the claimed cache (cheap) instead of forcing an extra
-            # politeness evaluation up front.  A drained frontier costs
-            # one no-op round instead of a per-round pre-check.  count()
-            # is one job on the cached frame, like isEmpty(), and its
-            # number feeds next round's fetch_join='auto' pick (no
-            # dedicated count job; round-4 ADVICE / VERDICT ask #4).
-            prev_claimed = claimed.count()
-            if prev_claimed == 0:
-                claimed.unpersist()
-                # the lazy results/log DAGs still reference this round's
-                # caches — hand them to CrawlState.release(), don't leak
-                crawl_caches.extend(round_caches)
-                state.rounds_run = r - 1
-                break
-
+        record = dict(summary)
         if backpressure:
             # T8: gate next round's claim budget on this round's health
-            # (counts read the round's caches — no recompute).
-            n_cl = claimed.count()
+            # (the count reads the round's parse — no recompute).
             n_ok = parsed.count()
-            miss = 0.0 if n_cl == 0 else 1.0 - (n_ok / n_cl)
+            miss = 1.0 - n_ok / n_claimed
             budget_cap = (
                 max(1, default_budget // 2) if miss > backpressure_miss_rate else None
             )
-            state.metrics.append(
-                {"round": r, "claimed": n_cl, "fetched": n_ok,
-                 "miss_rate": round(miss, 4), "budget_cap_next": budget_cap}
+            record.update(
+                fetched=n_ok, miss_rate=round(miss, 4), budget_cap_next=budget_cap
             )
+        state.metrics.append(record)
 
-        claimed.unpersist()
+        for c in round_caches:
+            c.unpersist()
         d2_nonempty = True  # later rounds may claim ck-bearing discoveries
-        if tables:
-            for c in round_caches:
-                c.unpersist()
-        else:
-            crawl_caches.extend(round_caches)
 
     spark.sparkContext.setJobDescription(None)
     state.assignments = assignments
-    state.caches = crawl_caches
     return state

@@ -12,6 +12,8 @@ its contract the engine relies on over plain Parquet:
   increasing id, the parent id, and a caller-supplied summary dict
   (per-round lineage metrics live here).
 - **time travel / resume**: ``read(snapshot_id)`` or latest.
+- **relocatable**: a manifest names its data dirs relative to the table
+  directory, so a checkpoint directory can be copied or moved whole.
 
 If real Iceberg is on the classpath (``iceberg_available()`` probes the
 JVM), the ``IcebergSnapshotTable`` subclass delegates data storage to
@@ -66,13 +68,16 @@ class SnapshotTable:
         os.makedirs(self.dir, exist_ok=True)
         self._manifest_path = os.path.join(self.dir, "manifest.json")
 
-    def _table_name(self, sid: int) -> str:
-        """Catalog identifier for a bucketed snapshot: unique per
-        (checkpoint dir, table, snapshot id) so parallel checkpoints in
-        one session never collide."""
+    def _table_name(self, sid: int, data_dir: str) -> str:
+        """Catalog identifier for a bucketed snapshot: unique per data
+        directory, so parallel checkpoints in one session never collide
+        and a copied checkpoint never reads its original's registration."""
         safe = re.sub(r"[^A-Za-z0-9_]", "_", self.name)
-        digest = hashlib.md5(self.dir.encode()).hexdigest()[:8]
+        digest = hashlib.md5(data_dir.encode()).hexdigest()[:8]
         return f"tw_{safe}_{digest}_snap{sid:06d}"
+
+    def _bucket_table(self, snap: dict) -> str:
+        return self._table_name(snap["id"], self._data_dirs(snap)[0])
 
     # -- manifest ---------------------------------------------------------
     def _manifest(self) -> dict:
@@ -90,8 +95,15 @@ class SnapshotTable:
 
     @staticmethod
     def _paths(snap: dict) -> list[str]:
-        """Data files of a snapshot (append snapshots list several)."""
+        """Data dirs of a snapshot as its manifest stores them (append
+        snapshots list several): relative to the table directory, so a
+        checkpoint can be copied or moved whole."""
         return snap.get("paths") or [snap["path"]]
+
+    def _data_dirs(self, snap: dict) -> list[str]:
+        """``_paths`` resolved against the table directory; an absolute
+        path (manifests written before paths were relative) stays as is."""
+        return [os.path.join(self.dir, p) for p in self._paths(snap)]
 
     def _write_manifest(self, man: dict) -> None:
         tmp = self._manifest_path + f".tmp.{uuid.uuid4().hex[:8]}"
@@ -136,7 +148,7 @@ class SnapshotTable:
         data_dir = self._new_data_dir(sid)
         bucket_info = None
         if self.bucket_key:
-            tbl = self._table_name(sid)
+            tbl = self._table_name(sid, data_dir)
             (
                 df.write.mode("overwrite")
                 .bucketBy(self.bucket_count, self.bucket_key)
@@ -161,7 +173,7 @@ class SnapshotTable:
         snap = {
             "id": sid,
             "parent": parent,
-            "path": data_dir,
+            "path": os.path.basename(data_dir),
             "op": "overwrite",
             "ts": time.time(),
             "summary": summary or {},
@@ -193,7 +205,7 @@ class SnapshotTable:
             {
                 "id": sid,
                 "parent": parent["id"],
-                "paths": self._paths(parent) + [data_dir],
+                "paths": self._paths(parent) + [os.path.basename(data_dir)],
                 "op": "append",
                 "ts": time.time(),
                 "summary": summary or {},
@@ -220,19 +232,20 @@ class SnapshotTable:
         the external table (DDL with the recorded bucket spec) when the
         session's catalog has never seen it — resume in a fresh JVM."""
         b = snap["bucket"]
-        if not self.spark.catalog.tableExists(b["table"]):
+        tbl = self._bucket_table(snap)
+        if not self.spark.catalog.tableExists(tbl):
             self.spark.sql(
-                f"CREATE TABLE {b['table']} ({b['schema']}) USING PARQUET "
+                f"CREATE TABLE {tbl} ({b['schema']}) USING PARQUET "
                 f"CLUSTERED BY ({b['key']}) SORTED BY ({b['key']}) "
-                f"INTO {b['n']} BUCKETS LOCATION '{snap['path']}'"
+                f"INTO {b['n']} BUCKETS LOCATION '{self._data_dirs(snap)[0]}'"
             )
-        return self.spark.table(b["table"])
+        return self.spark.table(tbl)
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         snap = self._select(snapshot_id)
         if snap.get("bucket") and snap["op"] == "overwrite":
             return self._read_bucketed(snap)
-        return self.spark.read.parquet(*self._paths(snap))
+        return self.spark.read.parquet(*self._data_dirs(snap))
 
     def _base_of(self, snap: dict) -> dict:
         """Most recent FULL snapshot at-or-before ``snap`` (every chain
@@ -250,15 +263,15 @@ class SnapshotTable:
         snap = self._base_of(self._select(snapshot_id))
         if snap.get("bucket"):
             return self._read_bucketed(snap)
-        return self.spark.read.parquet(*self._paths(snap))
+        return self.spark.read.parquet(*self._data_dirs(snap))
 
     def read_deltas(self, snapshot_id: int | None = None) -> DataFrame | None:
         """The append deltas on top of ``read_base()`` (None when the
         selected snapshot IS a full one) — O(appends since last full
         snapshot), the small side a caller ships through an exchange."""
         snap = self._select(snapshot_id)
-        base_paths = set(self._paths(self._base_of(snap)))
-        delta_paths = [p for p in self._paths(snap) if p not in base_paths]
+        base_paths = set(self._data_dirs(self._base_of(snap)))
+        delta_paths = [p for p in self._data_dirs(snap) if p not in base_paths]
         if not delta_paths:
             return None
         return self.spark.read.parquet(*delta_paths)
@@ -297,11 +310,11 @@ class SnapshotTable:
             (keep if s["id"] <= snapshot_id else drop).append(s)
         man["snapshots"] = keep
         self._write_manifest(man)
-        referenced = {p for s in keep for p in self._paths(s)}
+        referenced = {p for s in keep for p in self._data_dirs(s)}
         for s in drop:
             if s.get("bucket"):
-                self.spark.sql(f"DROP TABLE IF EXISTS {s['bucket']['table']}")
-            for p in self._paths(s):
+                self.spark.sql(f"DROP TABLE IF EXISTS {self._bucket_table(s)}")
+            for p in self._data_dirs(s):
                 if p not in referenced:
                     shutil.rmtree(p, ignore_errors=True)
 
@@ -310,17 +323,17 @@ class SnapshotTable:
         manifest history (Iceberg expire_snapshots)."""
         man = self._manifest()
         kept = man["snapshots"][-keep_last:]
-        referenced = {p for s in kept for p in self._paths(s)}
+        referenced = {p for s in kept for p in self._data_dirs(s)}
         for s in man["snapshots"][:-keep_last]:
             expired = False
-            for p in self._paths(s):
+            for p in self._data_dirs(s):
                 if p not in referenced and os.path.exists(p):
                     shutil.rmtree(p, ignore_errors=True)
                     expired = True
             if expired:
                 s["expired"] = True
                 if s.get("bucket"):
-                    self.spark.sql(f"DROP TABLE IF EXISTS {s['bucket']['table']}")
+                    self.spark.sql(f"DROP TABLE IF EXISTS {self._bucket_table(s)}")
         self._write_manifest(man)
 
 
