@@ -502,6 +502,43 @@ def test_resume_rejects_geometry_mismatch(spark, fixture_tables, tmp_path):
         )
 
 
+def test_resume_bucket_check_runs_no_spark_job(spark, fixture_tables, tmp_path):
+    """The resume check of the seen-state bucket count reads the
+    seen-sketch manifest only: a resume under another ``bloom_buckets``
+    fails before any Spark job runs, and so does a resume of a
+    checkpoint whose commits recorded no count."""
+    from tripwire_spark.operators.crawl import run_crawl
+
+    pages, seeds, robots = fixture_tables
+    sc = spark.sparkContext
+    ck = tmp_path / "ck_buckets"
+    run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+        max_rounds=1, default_budget=2, checkpoint_dir=str(ck), bloom_buckets=8,
+    )
+
+    def resume_jobs(tag, buckets, match):
+        sc.setJobGroup(tag, tag)
+        try:
+            with pytest.raises(ValueError, match=match):
+                run_crawl(
+                    spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+                    max_rounds=2, default_budget=2, checkpoint_dir=str(ck),
+                    resume=True, bloom_buckets=buckets,
+                )
+        finally:
+            sc.setJobGroup("bucketcheck-other", "other")
+        return list(sc.statusTracker().getJobIdsForGroup(tag))
+
+    assert resume_jobs("bucketcheck-changed", 16, "geometry") == []
+    manifest = ck / "seen_sketch" / "manifest.json"
+    man = json.loads(manifest.read_text())
+    for snap in man["snapshots"]:
+        del snap["summary"]["buckets"]
+    manifest.write_text(json.dumps(man))
+    assert resume_jobs("bucketcheck-unrecorded", 8, "records no bucket count") == []
+
+
 def test_validate_url_hash_contract(spark, fixture_tables):
     """ADVICE r4 #3: a pages table whose stored url_hash was computed
     with a different hash must FAIL FAST under validate_url_hash=True
@@ -669,7 +706,10 @@ def test_seen_sketch_segment_bound(spark, tmp_path):
     """The per-bucket segment bound ``run_crawl``'s ``compact_every``
     docstring promises: the seen state a round's admit reads holds at
     most ``compact_every`` segments per bucket, and each segment is one
-    row (the admit output's rebalance moves a bucket's delta row whole)."""
+    row (the admit output's rebalance moves a bucket's delta row whole).
+    The stored format: every seeded, delta and compacted row holds 8
+    bytes per hash and empty (not NULL) bloom columns, and every commit
+    records the bucket count."""
     from tripwire_spark.operators.crawl import run_crawl
     from tripwire_spark.sources.snapshots import open_snapshot_table
 
@@ -686,11 +726,24 @@ def test_seen_sketch_segment_bound(spark, tmp_path):
     table = open_snapshot_table(
         spark, ck, "seen_sketch", bucket_key="bucket", bucket_count=buckets
     )
+    assert all(s["summary"]["buckets"] == buckets for s in table.snapshots())
     last_of_round = {s["summary"]["round"]: s["id"] for s in table.snapshots()}
     assert sorted(last_of_round) == list(range(rounds + 1))
     grew = 0
     for r, sid in sorted(last_of_round.items()):
-        segs = table.read(sid).groupBy("bucket", "seg").count()
+        stored = table.read(sid)
+        fmt = stored.agg(
+            F.count("*").alias("rows"),
+            F.sum(
+                (
+                    F.col("bloom").isNotNull() & (F.length("bloom") == 0)
+                    & (F.col("m_bits") == 0) & (F.col("k") == 0)
+                    & (F.col("n_items") * 8 == F.length("hashes"))
+                ).cast("int")
+            ).alias("ok"),
+        ).first()
+        assert fmt["rows"] > 0 and fmt["ok"] == fmt["rows"], (r, fmt)
+        segs = stored.groupBy("bucket", "seg").count()
         worst = segs.groupBy("bucket").agg(
             F.count("*").alias("segs"), F.max("count").alias("rows_per_seg")
         ).agg(F.max("segs").alias("segs"), F.max("rows_per_seg").alias("rows")).first()

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -47,11 +46,13 @@ def _admit_case(draw):
 def test_admit_bucket_matches_model(case):
     """Fresh rows are the set difference, first row per hash by
     ``order_cols``; the companion int64 survives byte-exact; the delta
-    segment holds exactly the fresh hashes; compaction keeps membership."""
-    from tripwire_spark.operators.seen import _bloom_of, admit_bucket, compact_bucket
+    segment holds exactly the fresh hashes; compaction keeps membership.
+    Every row written stores empty bloom columns, also when compacting
+    an older checkpoint's rows that carry real bloom bits."""
+    from tripwire_spark.operators.seen import admit_bucket, compact_bucket
 
     pool, base, deltas, rows = case
-    m_bits, k, bucket, next_seg = 512, 7, 3, 5
+    bucket, next_seg = 3, 5
     cand = pd.DataFrame(
         {
             "url_hash": np.array([r[0] for r in rows], dtype=np.int64),
@@ -68,7 +69,7 @@ def test_admit_bucket_matches_model(case):
             first[h] = (h, ck, order, pos)
     want = set(first.values())
 
-    out = admit_bucket(bucket, cand, segs, next_seg, m_bits, k, "url_hash", ["ord", "pos"])
+    out = admit_bucket(bucket, cand, segs, next_seg, "url_hash", ["ord", "pos"])
     assert list(out.columns) == [
         "kind", "bucket", "seg", "url_hash", "ck", "ord", "pos",
         "bloom", "hashes", "n_items", "m_bits", "k",
@@ -83,30 +84,31 @@ def test_admit_bucket_matches_model(case):
         new_segs = []
     else:
         (d,) = delta.itertuples(index=False)
-        assert (d.bucket, d.seg, d.n_items, d.m_bits, d.k) == (bucket, next_seg, len(want), m_bits, k)
+        assert (d.bucket, d.seg, d.n_items, d.bloom, d.m_bits, d.k) == (
+            bucket, next_seg, len(want), b"", 0, 0,
+        )
         fhs = np.frombuffer(d.hashes, dtype=np.int64)
         assert fhs.tolist() == sorted(first)
-        assert d.bloom == _bloom_of(fhs, m_bits, k)
         new_segs = [fhs]
 
     all_segs = segs + new_segs
     if not all_segs:
         return
+    # the stored segments as an older checkpoint holds them: real bloom bits
     seg_rows = pd.DataFrame(
         {
-            "bloom": [_bloom_of(s, m_bits, k) for s in all_segs],
+            "bloom": [bytes(range(64)) for _ in all_segs],
             "hashes": [s.tobytes() for s in all_segs],
-            "m_bits": m_bits,
-            "k": k,
+            "m_bits": 512,
+            "k": 7,
         }
     )
     (c,) = compact_bucket(bucket, seg_rows).itertuples(index=False)
     merged = np.frombuffer(c.hashes, dtype=np.int64)
-    assert c.seg == 0 and c.n_items == len(merged)
-    assert c.bloom == _bloom_of(merged, m_bits, k)  # OR of blooms = bloom of the union
+    assert (c.seg, c.n_items, c.bloom, c.m_bits, c.k) == (0, len(merged), b"", 0, 0)
     for h in pool:  # membership unchanged by compaction
         assert (h in merged) == any(h in s for s in all_segs)
-    again = admit_bucket(bucket, cand, [merged], next_seg + 1, m_bits, k, "url_hash", ["ord", "pos"])
+    again = admit_bucket(bucket, cand, [merged], next_seg + 1, "url_hash", ["ord", "pos"])
     assert len(again) == 0
 
 
@@ -279,22 +281,6 @@ def test_seen_admit_bucketed_base_with_delta_side(spark, tmp_path):
             assert "__seg_tag" in inputs, (
                 f"state blobs in a non-delta exchange: {node} {inputs}"
             )
-
-
-def test_seen_compact_rejects_mixed_geometry(spark):
-    """ADVICE r4 #2: segments written under different bloom geometry
-    must fail compaction with a clear error, not a numpy shape error."""
-    from tripwire_spark.operators.seen import SeenState
-
-    a = SeenState(n_buckets=4, capacity=1_000_000)
-    b = SeenState(n_buckets=4, capacity=4_000_000)  # different m_bits
-    sa = a.init(_urls(spark, 0, 500), "url_hash")
-    sb = b.init(_urls(spark, 500, 500), "url_hash").withColumn(
-        "seg", F.lit(1)
-    )
-    mixed = SeenState.advance(sa, sb)
-    with pytest.raises(Exception, match="mixed bloom geometry"):
-        a.compact(mixed).collect()
 
 
 def test_admit_preserves_full_range_int64_columns(spark):

@@ -115,3 +115,20 @@ def test_c4_crlf_and_unicode_parity_paths(spark):
     # İİaabb -> buckets {OTHER:2, a:2, b:2} -> log2(3) bits
     import math
     assert abs(rows[2].H - math.log2(3)) < 1e-6
+
+
+def test_entropy_features_compile_without_codegen_fallback(spark):
+    """The three entropy columns compile to generated Java within the
+    JVM's 64 KB method limit: with ``spark.sql.codegen.fallback=false``
+    an over-limit method raises instead of falling back to
+    interpretation.  Values are the hand-traced ones above."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = _entropies(spark, ["aabb", "a!"])
+    finally:
+        spark.conf.set(key, old)
+    assert [r.n_chars for r in rows] == [4, 2]
+    assert [r.char_entropy for r in rows] == [1.0, 1.0]
+    assert rows[1].alnum_ratio == 0.5

@@ -1,36 +1,192 @@
-"""Per-stage scaling profiler for the crawl loop.
+"""Per-stage profiler for the crawl loop: one reader of Spark event logs.
 
 Runs ONE timed crawl rep at a given slot count over a pre-written pages
-parquet (same protocol as bench.py's scaling windows), with the Spark
-event log enabled, then attributes wall time:
+parquet (same protocol as bench.py's scaling windows) with the Spark
+event log enabled, or, with ``--eventlog PATH``, reads an existing
+event log (file, or a rolling-log directory) without running a crawl.
+Either way it attributes wall time:
 
-  * per-stage wall (submission -> completion) and executor run time
-  * DRIVER GAPS: wall intervals covered by no running stage — the
-    serial time Amdahl's c is made of (broadcast builds, plan
-    compilation, driver-side bookkeeping)
+  * per stage: wall (submission -> completion), executor run, CPU and
+    GC time, shuffle read/write, input and result bytes, tasks
+  * per job description (``setJobDescription``): run, CPU, tasks
+  * time at each task-concurrency level; level 0 is DRIVER GAP time —
+    the serial time Amdahl's c is made of (broadcast builds, plan
+    compilation, driver-side bookkeeping) — attributed to the job
+    description of the next stage submitted, plus the largest gaps
 
 Usage:
   python tools/profile_crawl.py --slots 4 --hosts 180000 \
       --pages /tmp/bench_pages_scale_sf0.1
+  python tools/profile_crawl.py --eventlog /tmp/crawl_eventlog/local-123
 
-Compare two runs (1 vs 4 slots): a stage whose wall does not shrink
-~4x is a non-scaling stage; gap time that stays constant is driver
-serial time.
+Compare two runs (1 vs 4 slots): a stage whose run time does not shrink
+~4x is a non-scaling stage (CPU < run means waiting); gap time that
+stays constant is driver serial time.
 """
 
 from __future__ import annotations
 
 import argparse
+import bisect
 import json
 import os
 import sys
 import time
+from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def iter_events(path: str):
+    """JSON events of an uncompressed event log: a file, or a directory
+    holding a rolling log's ``events_*`` files."""
+    files = [path]
+    if os.path.isdir(path):
+        files = [os.path.join(path, g) for g in sorted(os.listdir(path)) if g.startswith("events_")]
+    for f in files:
+        with open(f) as fh:
+            for line in fh:
+                try:
+                    yield json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+
+
+def _scope(si: dict) -> str:
+    for r in si.get("RDD Info", []):
+        try:
+            name = json.loads(r.get("Scope") or "{}").get("name", "")
+        except json.JSONDecodeError:
+            continue
+        if name:
+            return name
+    return ""
+
+
+def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]]]:
+    """(completed stages, task (launch, finish) intervals) of one log."""
+    stage_desc: dict[int, str] = {}
+    stages, tasks = [], []
+    for ev in iter_events(path):
+        t = ev.get("Event")
+        if t == "SparkListenerJobStart":
+            desc = (ev.get("Properties") or {}).get("spark.job.description") or ""
+            for sid in ev.get("Stage IDs", []):
+                stage_desc[sid] = desc
+        elif t == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            if not (si.get("Submission Time") and si.get("Completion Time")):
+                continue
+            acc = {a["Name"]: a.get("Value", 0) for a in si.get("Accumulables", [])}
+            stages.append({
+                "desc": stage_desc.get(si["Stage ID"], ""),
+                "label": _scope(si) or si["Stage Name"].split("\n")[0][:60],
+                "sub": si["Submission Time"],
+                "done": si["Completion Time"],
+                "tasks": si["Number of Tasks"],
+                "run_s": acc.get("internal.metrics.executorRunTime", 0) / 1000,
+                "cpu_s": acc.get("internal.metrics.executorCpuTime", 0) / 1e9,
+                "gc_s": acc.get("internal.metrics.jvmGCTime", 0) / 1000,
+                "shr_mb": (acc.get("internal.metrics.shuffle.read.remoteBytesRead", 0)
+                           + acc.get("internal.metrics.shuffle.read.localBytesRead", 0)) / 2**20,
+                "shw_mb": acc.get("internal.metrics.shuffle.write.bytesWritten", 0) / 2**20,
+                "in_mb": acc.get("internal.metrics.input.bytesRead", 0) / 2**20,
+                "res_mb": acc.get("internal.metrics.resultSize", 0) / 2**20,
+            })
+        elif t == "SparkListenerTaskEnd":
+            ti = ev["Task Info"]
+            tasks.append((ti["Launch Time"], ti["Finish Time"]))
+    return stages, tasks
+
+
+STAGE_COLS = ("run_s", "cpu_s", "gc_s", "tasks", "shr_mb", "shw_mb", "in_mb", "res_mb")
+
+
+def report(stages: list[dict], tasks: list[tuple[int, int]], window=None) -> None:
+    """Print every view over ``window`` = (t0_ms, t1_ms); default: the
+    span of the log's tasks."""
+    if not tasks:
+        print("no tasks in the event log")
+        return
+    t0, t1 = window or (min(a for a, _ in tasks), max(b for _, b in tasks))
+    stages = [s for s in stages if s["done"] >= t0 and s["sub"] <= t1]
+    tasks = [(max(a, t0), min(b, t1)) for a, b in tasks if b > t0 and a < t1]
+    wall = (t1 - t0) / 1000
+
+    print(f"== stages over {wall:.1f}s (wall_s run_s cpu_s gc_s tasks shR_mb shW_mb in_mb res_mb  x[n] [desc] label):")
+    agg: dict[tuple, dict] = defaultdict(lambda: defaultdict(float))
+    for s in stages:
+        a = agg[(s["desc"], s["label"])]
+        a["wall_s"] += (min(s["done"], t1) - max(s["sub"], t0)) / 1000
+        a["n"] += 1
+        for k in STAGE_COLS:
+            a[k] += s[k]
+    for (desc, label), a in sorted(agg.items(), key=lambda x: -x[1]["run_s"])[:30]:
+        tag = f"[{desc[:40]}] " if desc else ""
+        print(
+            f"  {a['wall_s']:7.1f} {a['run_s']:7.1f} {a['cpu_s']:7.1f} {a['gc_s']:5.1f} {int(a['tasks']):5d} "
+            f"{a['shr_mb']:7.0f} {a['shw_mb']:7.0f} {a['in_mb']:7.0f} {a['res_mb']:7.2f}  x{int(a['n']):<3d} {tag}{label}"
+        )
+
+    print("== by job description (run_s, cpu_s, tasks):")
+    by_desc: dict[str, dict] = defaultdict(lambda: defaultdict(float))
+    for s in stages:
+        d = by_desc[s["desc"] or "(no description)"]
+        for k in ("run_s", "cpu_s", "tasks"):
+            d[k] += s[k]
+    for desc, d in sorted(by_desc.items(), key=lambda x: -x[1]["run_s"]):
+        print(f"  {d['run_s']:8.1f} {d['cpu_s']:8.1f} {int(d['tasks']):6d}  {desc[:80]}")
+
+    # sweep the task timeline: time at each concurrency level; level 0
+    # (no task running) is driver time
+    edges = sorted([(a, 1) for a, _ in tasks] + [(b, -1) for _, b in tasks] + [(t1, 0)])
+    by_level: dict[int, float] = defaultdict(float)
+    gaps = []
+    cur, prev = 0, t0
+    for ts, d in edges:
+        if ts > prev:
+            by_level[cur] += (ts - prev) / 1000
+            if cur == 0:
+                gaps.append((prev, ts))
+            prev = ts
+        cur += d
+    print("== time at task concurrency level (s); 0 running = driver gap:")
+    for lvl in sorted(by_level):
+        print(f"  {lvl:3d} running: {by_level[lvl]:8.1f}")
+
+    subs = sorted((s["sub"], s["desc"] or s["label"]) for s in stages)
+    dones = sorted((s["done"], s["desc"] or s["label"]) for s in stages)
+    sub_ts, done_ts = [t for t, _ in subs], [t for t, _ in dones]
+
+    def next_stage(ts):
+        i = bisect.bisect_left(sub_ts, ts)
+        return subs[i][1] if i < len(subs) else "<<end>>"
+
+    def prev_stage(ts):
+        i = bisect.bisect_right(done_ts, ts)
+        return dones[i - 1][1] if i else "<<start>>"
+
+    attr: dict[str, float] = defaultdict(float)
+    for g0, g1 in gaps:
+        attr[next_stage(g1)] += (g1 - g0) / 1000
+    print("== driver-gap time by the next stage's job description (s):")
+    for desc, sec in sorted(attr.items(), key=lambda x: -x[1]):
+        print(f"  {sec:8.1f}  {desc[:90]}")
+    print("== largest gaps (offset_s, len_s, prev stage -> next stage):")
+    for g0, g1 in sorted(gaps, key=lambda g: g[0] - g[1])[:12]:
+        print(f"  +{(g0 - t0) / 1000:7.1f}s {(g1 - g0) / 1000:6.2f}s  {prev_stage(g0)[:55]} -> {next_stage(g1)[:55]}")
+
+
+def _find_log(eventlog_dir: str, app_id: str) -> str:
+    for f in os.listdir(eventlog_dir):
+        if app_id in f:
+            return os.path.join(eventlog_dir, f)
+    raise FileNotFoundError(f"no event log of {app_id} in {eventlog_dir}")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--eventlog", help="read this event log and exit; no crawl runs")
     ap.add_argument("--slots", type=int, default=4)
     ap.add_argument("--hosts", type=int, default=180_000)
     ap.add_argument("--pages", default="/tmp/bench_pages_scale_sf0.1")
@@ -40,6 +196,10 @@ def main() -> None:
     ap.add_argument("--skip-warmup", action="store_true")
     ap.add_argument("--mpb", type=int, default=None, help="spark.sql.files.maxPartitionBytes")
     args = ap.parse_args()
+
+    if args.eventlog:
+        report(*read_eventlog(args.eventlog))
+        return
 
     os.makedirs(args.eventlog_dir, exist_ok=True)
     from pyspark.sql import SparkSession
@@ -86,106 +246,15 @@ def main() -> None:
         max_rounds=args.rounds, default_budget=args.budget,
     )
     n = state.frontier.count()
-    wall = time.time() - t0
-    t_end_ms = time.time() * 1000
+    t1 = time.time()
     state.release()
-    print(f"== wall {wall:.1f}s  frontier {n}  slots {args.slots}  hosts {args.hosts}")
+    print(f"== wall {t1 - t0:.1f}s  frontier {n}  slots {args.slots}  hosts {args.hosts}")
 
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     spark.stop()
     time.sleep(1.0)
-
-    # ---- parse event log ----
-    log_path = None
-    for f in os.listdir(args.eventlog_dir):
-        if app_id in f:
-            p = os.path.join(args.eventlog_dir, f)
-            if os.path.isdir(p):  # eventlog_v2 rolling layout
-                for g in os.listdir(p):
-                    if g.startswith("events_"):
-                        log_path = os.path.join(p, g)
-            else:
-                log_path = p
-    stages = {}  # (stageId, attempt) -> dict
-    with open(log_path) as fh:
-        for line in fh:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            t = ev.get("Event")
-            if t == "SparkListenerStageSubmitted":
-                si = ev["Stage Info"]
-                stages[(si["Stage ID"], si["Stage Attempt ID"])] = {
-                    "name": si["Stage Name"].split("\n")[0][:90],
-                    "sub": si.get("Submission Time"),
-                    "tasks": si["Number of Tasks"],
-                }
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                k = (si["Stage ID"], si["Stage Attempt ID"])
-                if k in stages:
-                    stages[k]["sub"] = si.get("Submission Time", stages[k]["sub"])
-                    stages[k]["done"] = si.get("Completion Time")
-                    acc = {a["Name"]: a for a in si.get("Accumulables", [])}
-                    rt = acc.get("internal.metrics.executorRunTime", {}).get("Value", 0)
-                    stages[k]["exec_ms"] = rt
-
-    ivals = sorted(
-        (s["sub"], s["done"], k[0], s["name"], s.get("exec_ms", 0), s["tasks"])
-        for k, s in stages.items()
-        if s.get("sub") and s.get("done")
-    )
-    # restrict to the timed rep window
-    t_start_ms = t_end_ms - wall * 1000
-    ivals = [iv for iv in ivals if iv[1] >= t_start_ms]
-
-    # gap analysis over the timed window
-    covered = []
-    for sub, done, *_ in ivals:
-        sub, done = max(sub, t_start_ms), min(done, t_end_ms)
-        if done <= sub:
-            continue
-        if covered and sub <= covered[-1][1]:
-            covered[-1] = (covered[-1][0], max(covered[-1][1], done))
-        else:
-            covered.append((sub, done))
-    gap_total = t_end_ms - t_start_ms - sum(b - a for a, b in covered)
-    print(f"== driver-gap time (no stage running): {gap_total/1000:.1f}s of {wall:.1f}s")
-
-    # top stages by wall
-    print("== stages in timed window (wall_s, exec_s, tasks, name):")
-    agg = {}
-    for sub, done, sid, name, exec_ms, tasks in ivals:
-        w = (min(done, t_end_ms) - max(sub, t_start_ms)) / 1000
-        key = name
-        a = agg.setdefault(key, [0.0, 0.0, 0, 0])
-        a[0] += w
-        a[1] += exec_ms / 1000
-        a[2] += tasks
-        a[3] += 1
-    for name, (w, e, tk, cnt) in sorted(agg.items(), key=lambda x: -x[1][0])[:25]:
-        print(f"  {w:8.1f}  {e:8.1f}  {tk:5d}  x{cnt:<3d} {name}")
-
-    # gap intervals > 1s, with neighbors for attribution
-    print("== gaps > 1s (start_off_s, len_s, prev_stage -> next_stage):")
-    prev = None
-    evs = sorted(ivals, key=lambda x: x[0])
-    bounds = [(t_start_ms, "<<rep start>>")]
-    for sub, done, sid, name, *_ in evs:
-        bounds.append((done, name))
-    gap_list = []
-    last_end = t_start_ms
-    last_name = "<<rep start>>"
-    for sub, done, sid, name, *_ in evs:
-        if sub > last_end + 1000:
-            gap_list.append((last_end, sub - last_end, last_name, name))
-        if done > last_end:
-            last_end, last_name = done, name
-    if t_end_ms > last_end + 1000:
-        gap_list.append((last_end, t_end_ms - last_end, last_name, "<<rep end>>"))
-    for st, ln, pn, nn in sorted(gap_list, key=lambda x: -x[1])[:15]:
-        print(f"  +{(st-t_start_ms)/1000:7.1f}s  {ln/1000:6.1f}s  {pn[:60]} -> {nn[:60]}")
+    log = _find_log(args.eventlog_dir, app_id)
+    report(*read_eventlog(log), window=(t0 * 1000, t1 * 1000))
 
 
 if __name__ == "__main__":

@@ -62,8 +62,6 @@ def main() -> int:
                     choices=["auto", "broadcast", "shuffle_hash"],
                     help="claimed->pages join strategy (auto: prior round's "
                          "claimed count vs threshold)")
-    ap.add_argument("--no-seen-bucketed", action="store_true",
-                    help="disable the bucketed seen-sketch snapshot layout")
     ap.add_argument("--validate-url-hash", action="store_true",
                     help="sample-check a stored pages.url_hash column "
                          "against the xxhash64(url) contract at startup")
@@ -129,7 +127,6 @@ def main() -> int:
         checkpoint_dir=args.checkpoint_dir, resume=args.resume,
         backpressure=args.backpressure, trap_limit=args.trap_limit,
         fetch_join=args.fetch_join,
-        seen_bucketed=not args.no_seen_bucketed,
         validate_url_hash=args.validate_url_hash,
     )
     n = state.frontier.count()

@@ -83,6 +83,10 @@ from tripwire_spark.sources.snapshots import open_snapshot_table
 
 FETCH_COLS = ["qid", "round_added", "try", "url", "host"]
 
+# run_crawl(backpressure=True) halves the next round's politeness budget
+# when a round misses more than this share of its claimed urls.
+BACKPRESSURE_MISS_RATE = 0.5
+
 
 def fetch_extract(claimed: DataFrame, pages: DataFrame, join: str = "broadcast") -> DataFrame:
     """J11 fetch + single-parse extraction, fused.
@@ -388,6 +392,24 @@ class CrawlState:
             self.scratch_dir = None
 
 
+def _check_seen_buckets(summary: dict, bloom_buckets: int) -> None:
+    """Refuse to resume a seen state written under another bucket count
+    (``summary``: the latest seen-sketch commit's)."""
+    if "buckets" not in summary:
+        raise ValueError(
+            "seen-state geometry: the checkpoint records no bucket count "
+            "(written before seen-sketch commits recorded one), so it cannot "
+            "be checked against this crawl's bloom_buckets; resuming it "
+            "unchecked could re-admit urls"
+        )
+    if int(summary["buckets"]) != bloom_buckets:
+        raise ValueError(
+            f"seen-state geometry: checkpoint has {summary['buckets']} buckets, "
+            f"this crawl {bloom_buckets}; resume with the bloom_buckets it was "
+            "written under"
+        )
+
+
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -401,7 +423,6 @@ def run_crawl(
     vid: int = 1,
     bloom_buckets: int = 64,
     backpressure: bool = False,
-    backpressure_miss_rate: float = 0.5,
     track_clicked: bool = True,
     identities: DataFrame | None = None,
     compact_every: int = 8,
@@ -425,7 +446,7 @@ def run_crawl(
     stand-in checkpoint needs.
 
     ``backpressure`` (T8, run_queue_nowrap:29,124-126,219-231): when a
-    round's miss rate exceeds ``backpressure_miss_rate`` the next
+    round's miss rate exceeds ``BACKPRESSURE_MISS_RATE`` the next
     round's politeness budget halves (min 1) — the batch analog of
     sleeping on bad proxy checks; a healthy round restores the default.
     Costs one count per round on the cached parse; off by default so
@@ -455,24 +476,25 @@ def run_crawl(
 
     The seen-state admit has one plan: a cogroup of the candidates
     against the state's base, with the segments appended since the last
-    compaction riding the candidate side (``SeenState.admit``).  With
-    ``seen_bucketed`` storage the base is read exchange-free, so the
+    compaction riding the candidate side (``SeenState.admit``).  The
+    seen-state snapshots have one layout: full snapshots are written
+    bucketed on ``bucket`` (``bloom_buckets`` buckets), so the base is
+    read exchange-free (plan-asserted in tests/test_seen.py) and the
     10^10-state ∧ 10^8-new-urls corner ships only O(new x
-    rounds-since-compaction) bytes through any exchange.
-    ``seen_mode`` accepts only ``'auto'``, the value callers pass; any
-    other value raises ``ValueError``.
+    rounds-since-compaction) bytes through any exchange.  Every
+    seen-state commit records ``bloom_buckets`` in its summary
+    (``"buckets"``); a resume compares it with this crawl's
+    ``bloom_buckets`` from the manifest alone, before any Spark job,
+    and raises ``ValueError`` on a mismatch or on a checkpoint that
+    recorded no count.  ``seen_mode`` accepts only ``'auto'`` and
+    ``seen_bucketed`` only ``True``, the values callers pass; any other
+    value raises ``ValueError``.
 
     ``fetch_join='auto'`` decides each round from the PREVIOUS
     round's claimed count (round 1 defaults to broadcast — the seed
     round's claim set is the seed list; pass ``fetch_join=
     'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).  A resumed
     crawl reads that count from the last frontier commit's summary.
-
-    ``seen_bucketed``: seen-state snapshots are written bucketed on
-    ``bucket`` (``bloom_buckets`` buckets) so the cogroup admit's state
-    side needs no exchange (plan-asserted in tests/test_seen.py); plain
-    layout when False (pre-round-5 checkpoints read back fine either
-    way).
 
     ``validate_url_hash``: when the pages table carries a stored
     ``url_hash`` column the fetch join TRUSTS it as the join identity
@@ -487,6 +509,8 @@ def run_crawl(
     off by default."""
     if seen_mode != "auto":
         raise ValueError(f"seen_mode must be 'auto', got {seen_mode!r}")
+    if seen_bucketed is not True:
+        raise ValueError(f"seen_bucketed must be True, got {seen_bucketed!r}")
     if resume and not checkpoint_dir:
         raise ValueError("resume=True needs the checkpoint_dir of the crawl it continues")
     if validate_url_hash and "url_hash" in pages.columns:
@@ -497,14 +521,13 @@ def run_crawl(
         atexit.register(shutil.rmtree, scratch_dir, ignore_errors=True)
     # Iceberg-backed when the runtime is on the classpath, else the
     # Parquet stand-in — the loop is agnostic (same commit/append/
-    # read/rollback contract either way).  The seen sketch opts into
-    # the bucketed physical layout (full snapshots bucketed on
-    # ``bucket``) so admit's cogroup reads it exchange-free.
-    seen_bk = "bucket" if seen_bucketed else None
+    # read/rollback contract either way).  The seen sketch's full
+    # snapshots are bucketed on ``bucket`` so admit's cogroup reads it
+    # exchange-free.
     tables = {
         name: open_snapshot_table(
             spark, checkpoint_dir, name,
-            bucket_key=seen_bk if name == "seen_sketch" else None,
+            bucket_key="bucket" if name == "seen_sketch" else None,
             bucket_count=bloom_buckets if name == "seen_sketch" else None,
         )
         for name in (
@@ -512,6 +535,13 @@ def run_crawl(
             "clicked", "assignments",
         )
     }
+    # Every seen-sketch commit records its bucket count: a state read
+    # under another count would probe the wrong bucket's segments and
+    # re-admit urls it has seen.
+    seen_summary = {"buckets": bloom_buckets}
+    if resume and tables["seen_sketch"].latest_id():
+        # manifest only: runs before any table read, so no Spark job
+        _check_seen_buckets(tables["seen_sketch"].snapshots()[-1]["summary"], bloom_buckets)
 
     clicked = None  # D2 state: ck hashes of texts followed in earlier rounds
     # Whether the D2 state can hold ANY row yet.  A fresh crawl's round 1
@@ -572,30 +602,6 @@ def run_crawl(
         # the bucketed base snapshot + the segments appended on top
         seen_base = tables["seen_sketch"].read_base()
         seen_deltas = tables["seen_sketch"].read_deltas()
-        # ONE metadata-only job on the resume path (blob columns
-        # pruned): fail fast on geometry drift — a checkpoint written
-        # under a different bloom_buckets/capacity/bits_per_key would
-        # emit delta segments whose blooms compact() cannot OR together,
-        # and a changed bloom_buckets would probe the wrong segments.
-        meta = tables["seen_sketch"].read().agg(
-            F.count_distinct("m_bits", "k").alias("geoms"),
-            F.first("m_bits").alias("m"),
-            F.first("k").alias("kk"),
-        ).first()
-        if meta["geoms"] is not None and int(meta["geoms"]) > 1:
-            raise ValueError(
-                "restored seen state carries mixed bloom geometry across "
-                "segments — compact it with the service it was written under "
-                "before resuming"
-            )
-        if meta["m"] is not None and (
-            int(meta["m"]) != seen_svc.m_bits or int(meta["kk"]) != seen_svc.k
-        ):
-            raise ValueError(
-                f"restored seen state geometry (m_bits={meta['m']}, k={meta['kk']}) "
-                f"!= this crawl's SeenState (m_bits={seen_svc.m_bits}, k={seen_svc.k}) "
-                "— resume with the same bloom_buckets/capacity/bits_per_key"
-            )
     else:
         # seen_preload: prior-corpus url hashes imported into the
         # initial seen set (history import on a fresh checkpoint, and
@@ -611,7 +617,8 @@ def run_crawl(
         # disk-backed from here on — the shape that holds when it no
         # longer fits memory.
         tables["seen_sketch"].commit(
-            seen_svc.init(init_src, "url_hash"), {"round": 0, "stage": "seeded"}
+            seen_svc.init(init_src, "url_hash"),
+            {"round": 0, "stage": "seeded", **seen_summary},
         )
         seen_base = tables["seen_sketch"].read_base()
 
@@ -767,14 +774,14 @@ def run_crawl(
         if assignments is not None:
             tables["assignments"].commit(assignments, summary)
             assignments = tables["assignments"].read()
-        tables["seen_sketch"].commit_append(state_delta, summary)
+        tables["seen_sketch"].commit_append(state_delta, {**summary, **seen_summary})
         if r % compact_every == 0:
             # Lazy maintenance: merge each bucket's segments into one
             # (full rewrite, amortized O(total/K) per round),
             # re-landing in the bucketed layout.
             tables["seen_sketch"].commit(
                 seen_svc.compact(tables["seen_sketch"].read()),
-                {"round": r, "stage": "compacted"},
+                {"round": r, "stage": "compacted", **seen_summary},
             )
         # Next round reads the (possibly just-recompacted) bucketed
         # base + the small parquet deltas on top — lazy, disk-backed,
@@ -795,7 +802,7 @@ def run_crawl(
             n_ok = parsed.count()
             miss = 1.0 - n_ok / n_claimed
             budget_cap = (
-                max(1, default_budget // 2) if miss > backpressure_miss_rate else None
+                max(1, default_budget // 2) if miss > BACKPRESSURE_MISS_RATE else None
             )
             record.update(
                 fetched=n_ok, miss_rate=round(miss, 4), budget_cap_next=budget_cap

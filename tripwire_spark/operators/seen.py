@@ -11,17 +11,18 @@ exact ``searchsorted`` membership over the sorted segments, and the new
 delta segment — in numpy, with no per-row Python.
 
 Membership is hash-exact (JVM-side xxhash64): P[any collision] ≈
-n²/2^65 ≈ 0.003 even at 10^10 urls.  Each segment row also carries a
-bloom filter of its hashes (``bloom``/``m_bits``/``k``, double hashing
-h_i = h1 + i*h2 over the url hash).  Membership never reads it; it is
-kept so the stored schema, and every checkpoint written under it, stays
-readable, and so ``compact()`` can refuse state written under a
-different geometry.
+n²/2^65 ≈ 0.003 even at 10^10 urls.  The stored rows keep three columns
+of an earlier per-segment bloom filter (``bloom``/``m_bits``/``k``),
+which no probe ever read: every row written now holds ``bloom = b""``
+(empty, not NULL), ``m_bits = 0`` and ``k = 0``.  The columns stay so
+``STATE_SCHEMA`` and the checkpoints written under it are unchanged,
+and so readers that sum ``length(bloom)`` still get a number; rows of
+older checkpoints still carry real blooms, which admit ignores and
+``compact()`` drops.
 """
 
 from __future__ import annotations
 
-import math
 import warnings
 
 import numpy as np
@@ -30,32 +31,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MIX = np.int64(-7046029254386353131)  # 0x9E3779B97F4A7C15 as signed
 STATE_COLS = ["bucket", "seg", "bloom", "hashes", "n_items", "m_bits", "k"]
 _SEG_PAD = STATE_COLS[2:]  # the segment columns a fresh candidate row leaves null
 
 
-def _h2(h1: np.ndarray) -> np.ndarray:
-    """Avalanche-mix to an odd second hash (independent-ish of h1)."""
-    x = h1 * MIX
-    x = x ^ (x >> np.int64(29))
-    return x | np.int64(1)
-
-
-def _positions(h1: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(n, k) bit positions via double hashing, all-numpy."""
-    h2 = _h2(h1)
-    i = np.arange(k, dtype=np.int64)
-    pos = h1[:, None] + i[None, :] * h2[:, None]
-    return (pos % np.int64(m) + np.int64(m)) % np.int64(m)
-
-
-def _bloom_of(hs: np.ndarray, m_bits: int, k: int) -> bytes:
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    if len(hs):
-        pos = _positions(hs, k, m_bits).ravel()
-        np.bitwise_or.at(bits, pos // 8, np.uint8(1) << (pos % 8).astype(np.uint8))
-    return bits.tobytes()
+def _segment(bucket: int, seg: int, hs: np.ndarray) -> dict:
+    """One stored segment row over the sorted hashes ``hs``, with the
+    empty legacy bloom columns (module docstring)."""
+    return dict(
+        bucket=[bucket], seg=[seg], bloom=[b""], hashes=[hs.tobytes()],
+        n_items=[len(hs)], m_bits=[0], k=[0],
+    )
 
 
 def admit_bucket(
@@ -63,8 +49,6 @@ def admit_bucket(
     cand: pd.DataFrame,
     segs: list[np.ndarray],
     next_seg: int,
-    m_bits: int,
-    k: int,
     hash_col: str = "url_hash",
     order_cols: list[str] | None = None,
 ) -> pd.DataFrame:
@@ -76,7 +60,7 @@ def admit_bucket(
     found in any segment, and returns the admit output rows: the fresh
     candidates (kind=0, segment columns null) and, when any are fresh,
     ONE delta segment row (kind=1, seg=``next_seg``) holding exactly
-    their sorted hashes with a bloom of geometry (``m_bits``, ``k``)."""
+    their sorted hashes."""
     if order_cols:
         cand = cand.sort_values([hash_col, *order_cols], kind="mergesort")
     cand = cand.drop_duplicates(subset=[hash_col], keep="first")
@@ -97,14 +81,8 @@ def admit_bucket(
         fresh[c] = None
     if len(fhs) == 0:
         return fresh[out_cols]
-    # the delta bloom covers ONLY this segment's hashes; segment blooms
-    # OR together at compact() time (same m, same k)
     st_row = {c: [None] for c in cand_cols}
-    st_row.update(
-        kind=[1], bucket=[bucket], seg=[int(next_seg)],
-        bloom=[_bloom_of(fhs, m_bits, k)], hashes=[fhs.tobytes()],
-        n_items=[len(fhs)], m_bits=[m_bits], k=[k],
-    )
+    st_row.update(kind=[1], **_segment(bucket, int(next_seg), fhs))
     with warnings.catch_warnings():
         # all-NA padding columns are intentional (union schema)
         warnings.simplefilter("ignore", FutureWarning)
@@ -113,31 +91,11 @@ def admit_bucket(
 
 
 def compact_bucket(bucket: int, segs: pd.DataFrame) -> pd.DataFrame:
-    """Merge one bucket's segment rows into a single seg=0 row
-    (sorted-hash union, bloom OR): the per-bucket body of ``compact``."""
+    """Merge one bucket's segment rows into a single seg=0 row (the
+    sorted-hash union): the per-bucket body of ``compact``.  Legacy
+    bloom bits in ``segs`` are dropped, not merged."""
     hs = np.unique(np.concatenate([np.frombuffer(b, dtype=np.int64) for b in segs["hashes"]]))
-    blooms = [np.frombuffer(b, dtype=np.uint8) for b in segs["bloom"]]
-    if len({len(b) for b in blooms}) > 1 or segs["m_bits"].nunique() > 1:
-        # mixed-geometry segments (state written under different
-        # capacity/bits_per_key services) cannot OR together; fail with
-        # the cause instead of a shape error deep in numpy.
-        raise ValueError(
-            f"seen-state bucket {bucket}: segments carry mixed bloom "
-            f"geometry (m_bits={sorted(segs['m_bits'].unique().tolist())}) — "
-            "resume the crawl with the SeenState capacity/bits_per_key the "
-            "checkpoint was written under"
-        )
-    return pd.DataFrame(
-        {
-            "bucket": [bucket],
-            "seg": [0],
-            "bloom": [np.bitwise_or.reduce(blooms).tobytes()],
-            "hashes": [hs.tobytes()],
-            "n_items": [len(hs)],
-            "m_bits": [int(segs["m_bits"].iloc[0])],
-            "k": [int(segs["k"].iloc[0])],
-        }
-    )
+    return pd.DataFrame(_segment(bucket, 0, hs))
 
 
 class SeenState:
@@ -177,11 +135,8 @@ class SeenState:
         "bucket int, seg int, bloom binary, hashes binary, n_items long, m_bits long, k int"
     )
 
-    def __init__(self, n_buckets: int = 64, bits_per_key: int = 10, capacity: int = 1_000_000) -> None:
+    def __init__(self, n_buckets: int = 64) -> None:
         self.n_buckets = n_buckets
-        self.bits_per_key = bits_per_key
-        self.k = max(1, round(bits_per_key * math.log(2)))
-        self.m_bits = max(64, (capacity * bits_per_key) // n_buckets)
 
     def bucket_col(self, hash_col):
         return F.pmod(hash_col, F.lit(self.n_buckets)).cast("int")
@@ -189,21 +144,10 @@ class SeenState:
     def init(self, urls: DataFrame, hash_col: str = "url_hash") -> DataFrame:
         """Seed state from an initial url-hash set (e.g. the seeded
         frontier): one seg=0 row per bucket."""
-        k, m = self.k, self.m_bits
 
         def make(key, pdf: pd.DataFrame):
             hs = np.unique(pdf["h"].to_numpy(dtype=np.int64))
-            return pd.DataFrame(
-                {
-                    "bucket": [int(key[0])],
-                    "seg": [0],
-                    "bloom": [_bloom_of(hs, m, k)],
-                    "hashes": [hs.tobytes()],
-                    "n_items": [len(hs)],
-                    "m_bits": [m],
-                    "k": [k],
-                }
-            )
+            return pd.DataFrame(_segment(int(key[0]), 0, hs))
 
         prepared = urls.select(self.bucket_col(F.col(hash_col)).alias("bucket"), F.col(hash_col).alias("h"))
         return prepared.groupBy("bucket").applyInPandas(make, schema=self.STATE_SCHEMA)
@@ -237,7 +181,6 @@ class SeenState:
         upcast would corrupt 64-bit hashes).
         """
         order_cols = order_cols or []
-        m, k = self.m_bits, self.k
         cand_fields = [
             T.StructField(f.name, f.dataType, True) for f in candidates.schema.fields
         ]
@@ -296,8 +239,7 @@ class SeenState:
                 segs += [np.frombuffer(b, dtype=np.int64) for b in lf.loc[is_seg, "hashes"]]
                 lf = lf[~is_seg].drop(columns=["__seg_tag", *seg_cols])
             return admit_bucket(
-                int(key[0]), lf.drop(columns="__bucket"), segs, next_seg, m, k,
-                hash_col, order_cols,
+                int(key[0]), lf.drop(columns="__bucket"), segs, next_seg, hash_col, order_cols,
             )
 
         return (
@@ -323,7 +265,7 @@ class SeenState:
 
     def compact(self, state: DataFrame) -> DataFrame:
         """Merge every bucket's segments into one seg=0 row (sorted-hash
-        union, bloom OR).  Lazy maintenance: run every K rounds, so the
+        union).  Lazy maintenance: run every K rounds, so the
         per-round amortized rewrite is O(total/K) while admit() itself
         stays O(new)."""
         return state.groupBy("bucket").applyInPandas(

@@ -11,6 +11,8 @@ web-corpus curation practice (Gopher-style length/stopword gates).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -124,6 +126,30 @@ _NON_ASCII_RE = r"[^\x00-\x7f]"
 _ASCII_PLACEHOLDER = "\x7f"
 
 
+def _bind(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` computed once per row: a lambda
+    body re-evaluates every outer expression it names once per array
+    element, while a lambda variable is computed once."""
+    return F.transform(F.array(value), body)[0]
+
+
+def _sum(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0), lambda acc, x: acc + x)
+
+
+def _char_buckets(text: Column) -> Column:
+    """The 38 bucket counts of :func:`entropy_features` as one int array:
+    the ``ENTROPY_ALPHABET`` chars in order, then OTHER."""
+    alphabet = F.array(*(F.lit(c) for c in ENTROPY_ALPHABET))
+
+    def counts(s: Column) -> Column:
+        n = F.length(s)
+        per_char = F.transform(alphabet, lambda c: n - F.length(F.replace(s, c, F.lit(""))))
+        return _bind(per_char, lambda cs: F.concat(cs, F.array(n - _sum(cs))))
+
+    return _bind(F.lower(F.regexp_replace(text, _NON_ASCII_RE, _ASCII_PLACEHOLDER)), counts)
+
+
 def entropy_features(text: Column) -> dict[str, Column]:
     """Character-distribution quality signals (CCNet/Gopher-adjacent):
 
@@ -134,45 +160,47 @@ def entropy_features(text: Column) -> dict[str, Column]:
     - ``alnum_ratio``: fraction of characters that are [a-z0-9] after
       lowercasing — the classic symbol-soup gate.
 
-    Pure column expressions: per-char counts come from 37
-    ``length(replace(s, c, ''))`` deltas, so Catalyst codegens the whole
-    thing into the scan stage — no UDF, no explode, no shuffle — and the
-    DuckDB oracle twin is the SAME formula term-for-term (both engines
-    fold the entropy sum left-to-right; 6-dp rounding absorbs the
-    <=1e-12 cross-libm drift).  ~37 string passes/row is scan-speed at
-    100 TB: it is per-row map work on a column the scan already read.
-    Non-ASCII folds to one OTHER-bucket placeholder per char BEFORE
-    lowercasing (see ``_NON_ASCII_RE``) so both engines lowercase
-    identical ASCII.
+    Pure column expressions, no UDF, no explode, no shuffle: a
+    higher-order ``transform`` over the alphabet takes the per-char
+    counts as ``length(replace(s, c, ''))`` deltas, once per row, and
+    ``aggregate`` folds the entropy left-to-right from 0.0 — the DuckDB
+    oracle twin (``entropy_sql``) adds the SAME terms in the SAME order,
+    so both engines return the same doubles (6-dp rounding absorbs the
+    <=1e-12 cross-libm drift).  One CASE WHEN per bucket, written out,
+    made Spark's generated Java outgrow the JVM's 64 KB method limit.
+    ~37 string passes/row is scan-speed at 100 TB: it is per-row map
+    work on a column the scan already read.  Non-ASCII folds to one
+    OTHER-bucket placeholder per char BEFORE lowercasing (see
+    ``_NON_ASCII_RE``) so both engines lowercase identical ASCII.
     """
-    s = F.lower(F.regexp_replace(text, _NON_ASCII_RE, _ASCII_PLACEHOLDER))
-    n = F.length(s)
-    counts = [n - F.length(F.replace(s, F.lit(c), F.lit(""))) for c in ENTROPY_ALPHABET]
-    alnum = None
-    for c, cnt in zip(ENTROPY_ALPHABET, counts):
-        if c != " ":
-            alnum = cnt if alnum is None else alnum + cnt
-    covered = None
-    for cnt in counts:
-        covered = cnt if covered is None else covered + cnt
-    buckets = counts + [n - covered]
-    nd = n.cast("double")
-    ent = None
-    for cnt in buckets:
-        p = cnt.cast("double") / nd
-        term = F.when(cnt > 0, -p * F.log2(p)).otherwise(F.lit(0.0))
-        ent = term if ent is None else ent + term
+    n_alnum = ENTROPY_ALPHABET.index(" ")  # [a-z0-9] lead the alphabet
+
+    def entropy(bs: Column) -> Column:
+        def fold(nd: Column) -> Column:
+            def term(c: Column) -> Column:
+                p = c.cast("double") / nd
+                return F.when(c > 0, -p * F.log2(p)).otherwise(F.lit(0.0))
+
+            return F.aggregate(bs, F.lit(0.0), lambda acc, c: acc + term(c))
+
+        return _bind(_sum(bs).cast("double"), fold)
+
+    def alnum_ratio(bs: Column) -> Column:
+        return _bind(_sum(bs), lambda n: F.when(
+            n > 0, _sum(F.slice(bs, 1, n_alnum)).cast("double") / n.cast("double")
+        ).otherwise(F.lit(0.0)))
+
+    buckets = _char_buckets(text)
     return {
-        "n_chars": n.cast("long"),
-        "char_entropy": F.when(n > 0, ent).otherwise(F.lit(0.0)),
-        "alnum_ratio": F.when(n > 0, alnum.cast("double") / nd).otherwise(F.lit(0.0)),
+        "n_chars": _sum(buckets).cast("long"),
+        "char_entropy": _bind(buckets, entropy),
+        "alnum_ratio": _bind(buckets, alnum_ratio),
     }
 
 
 def entropy_sql(text_expr: str) -> dict[str, str]:
-    """ANSI-SQL twins of :func:`entropy_features`, built by the same
-    loop so the term ORDER (and therefore the float fold) matches the
-    Spark plan exactly."""
+    """ANSI-SQL twins of :func:`entropy_features`, with the entropy terms
+    in the same ORDER as the Spark fold, so the float sums match."""
     # 'g': DuckDB regexp_replace is first-match-only by default where
     # Spark's is global.
     s = f"lower(regexp_replace({text_expr}, '{_NON_ASCII_RE}', chr(127), 'g'))"
