@@ -645,17 +645,19 @@ def test_fetch_auto_adds_no_driver_actions(spark, fixture_tables):
     assert abs(a - b) <= 1, (a, b)
 
 
-def _plan_node_names(plan) -> list[str]:
+def _plan_node_names(plan, stop_at: tuple[str, ...] = ()) -> list[str]:
     """Operator names of a physical plan: adaptive plans are descended
     into, a cached relation's own plan is not (reading a cache runs none
-    of the operators that built it)."""
+    of the operators that built it), nor the subtree of a node named in
+    ``stop_at``."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return _plan_node_names(plan.executedPlan())
+        return _plan_node_names(plan.executedPlan(), stop_at)
     names = [name]
-    children = plan.children()
-    for i in range(children.size()):
-        names += _plan_node_names(children.apply(i))
+    if name not in stop_at:
+        children = plan.children()
+        for i in range(children.size()):
+            names += _plan_node_names(children.apply(i), stop_at)
     return names
 
 
@@ -700,6 +702,187 @@ def test_round_tasks_follow_rows(spark, tmp_path, monkeypatch):
     assert "InMemoryTableScan" in plans["decision_log"]
     assert "ArrowEvalPython" not in plans["decision_log"], plans["decision_log"]
     pages.unpersist()
+
+
+def _find_node(plan, name: str):
+    """First node called ``name`` in a physical plan (adaptive plans are
+    descended into), or None."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _find_node(plan.executedPlan(), name)
+    if plan.nodeName() == name:
+        return plan
+    children = plan.children()
+    for i in range(children.size()):
+        hit = _find_node(children.apply(i), name)
+        if hit is not None:
+            return hit
+    return None
+
+
+def test_admit_runs_one_wave_over_physical_buckets(spark, fixture_tables, tmp_path):
+    """run_crawl stores the seen-state base in P = min(bloom_buckets,
+    defaultParallelism) physical buckets, here fewer than
+    spark.sql.shuffle.partitions.  An admit over that base (plus the
+    round's delta) reads the base with no exchange on the state side
+    and runs one wave of at most P tasks, each over several of the 64
+    logical buckets, and still rejects every url the state holds."""
+    from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.operators.seen import SeenState
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    pages, seeds, robots = fixture_tables
+    slots, buckets = spark.sparkContext.defaultParallelism, 64
+    assert slots < int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ck = tmp_path / "ck_wave"
+    st = run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
+        max_rounds=1, default_budget=2, checkpoint_dir=str(ck), bloom_buckets=buckets,
+    )
+    table = SnapshotTable(spark, str(ck), "seen_sketch")
+    (base_snap,) = [s for s in table.snapshots() if s["op"] == "overwrite"]
+    assert base_snap["bucket"]["n"] == slots
+    assert all(s["summary"]["buckets"] == buckets for s in table.snapshots())
+
+    known = st.frontier.select("url", "url_hash")
+    n_known = known.count()
+    new = spark.range(0, 2000, numPartitions=1).select(
+        F.concat(F.lit("http://wave.test/"), F.col("id").cast("string")).alias("url")
+    ).withColumn("url_hash", F.xxhash64("url"))
+    out = SeenState(n_buckets=buckets).admit(
+        known.unionByName(new).coalesce(1), table.read_base(),
+        next_seg=2, delta_side=table.read_deltas(),
+    )
+    cogroup = _find_node(out._jdf.queryExecution().executedPlan(), "FlatMapCoGroupsInPandas")
+    # the touched-bucket broadcast below the state side is candidate work
+    state_side = _plan_node_names(cogroup.children().apply(1), stop_at=("BroadcastExchange",))
+    assert "Exchange" not in state_side, state_side  # a shuffle's node name
+    assert [n for n in state_side if n.startswith("Scan parquet spark_catalog")], state_side
+    assert out.rdd.getNumPartitions() <= slots
+    fresh, delta = SeenState.split(out.persist(), ["url", "url_hash"])
+    assert n_known > 0 and fresh.count() == 2000
+    assert delta.select("bucket").distinct().count() > slots
+    out.unpersist()
+    st.release()
+
+
+def test_resume_from_logical_count_base(spark, fixture_tables, tmp_path, monkeypatch):
+    """A checkpoint whose seen-sketch base was stored in as many physical
+    buckets as logical ones (the layout before the physical count
+    followed the task slots) resumes onto the uninterrupted crawl's
+    frontier and results, and its next compaction rewrites the base in
+    P = min(bloom_buckets, defaultParallelism) buckets."""
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    slots, buckets = spark.sparkContext.defaultParallelism, 16
+    assert slots < buckets
+    kw = dict(default_budget=2, compact_every=2, bloom_buckets=buckets)
+    full = crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=3,
+        checkpoint_dir=str(tmp_path / "ck_full"), **kw,
+    )
+    real_open = crawl.open_snapshot_table
+
+    def logical_layout(spark, base_dir, name, bucket_key=None, bucket_count=None):
+        return real_open(
+            spark, base_dir, name, bucket_key=bucket_key,
+            bucket_count=buckets if bucket_key else None,
+        )
+
+    ck = tmp_path / "ck_logical"
+    with monkeypatch.context() as m:
+        m.setattr(crawl, "open_snapshot_table", logical_layout)
+        crawl.run_crawl(
+            spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1,
+            checkpoint_dir=str(ck), **kw,
+        )
+
+    def base_counts():
+        snaps = json.loads((ck / "seen_sketch" / "manifest.json").read_text())["snapshots"]
+        return [s["bucket"]["n"] for s in snaps if s["op"] == "overwrite"]
+
+    assert base_counts() == [buckets]
+    resumed = crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=3,
+        checkpoint_dir=str(ck), resume=True, **kw,
+    )
+    assert resumed.rounds_run == 3
+    assert base_counts() == [buckets, slots]  # round 2 compacted
+    cols = ("qid", "url", "status", "try")
+    assert sorted(map(tuple, resumed.frontier.select(*cols).collect())) == sorted(
+        map(tuple, full.frontier.select(*cols).collect())
+    )
+    assert sorted(map(tuple, resumed.results.select("qid", "url", "text").collect())) == sorted(
+        map(tuple, full.results.select("qid", "url", "text").collect())
+    )
+
+
+def test_seeded_round_claims_from_committed_frontier(spark, fixture_tables, monkeypatch):
+    """Round 1 of a fresh crawl claims from the seed frontier read back
+    from its table, not from the lazy seed plan: the claimed frontier's
+    plan re-runs neither the seed canonicalization (Python UDFs) nor
+    its dedup (a window)."""
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    plans = []
+    real = crawl.politeness_schedule
+
+    def spy(frontier, *args, **kwargs):
+        plans.append(_plan_node_names(frontier._jdf.queryExecution().executedPlan()))
+        return real(frontier, *args, **kwargs)
+
+    monkeypatch.setattr(crawl, "politeness_schedule", spy)
+    st = crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, default_budget=2
+    )
+    st.release()
+    (names,) = plans
+    assert not [n for n in names if n == "ArrowEvalPython" or n.startswith("Window")], names
+
+
+def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch):
+    """Each of a round's driver actions runs under its own job
+    description, and the parse's is set only after its plan is built
+    (so a caller wrapping ``fetch_extract`` sees its action's jobs under
+    that description, not its own)."""
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    sc = spark.sparkContext
+    at_build = []
+    real = crawl.fetch_extract
+
+    def spy(*args, **kwargs):
+        at_build.append(sc.getLocalProperty("spark.job.description"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(crawl, "fetch_extract", spy)
+    tag = "phase-descriptions"
+    sc.setJobGroup(tag, tag)
+    try:
+        st = crawl.run_crawl(
+            spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, default_budget=2
+        )
+        assert sc.getLocalProperty("spark.job.description") is None
+    finally:
+        sc.setJobGroup("phase-descriptions-other", "other")
+    st.release()
+    assert at_build and not [d for d in at_build if d and d.endswith("fetch+extract checkpoint")]
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    descs = set()
+    for jid in sc.statusTracker().getJobIdsForGroup(tag):
+        d = store.job(jid).description()
+        descs.add(d.get() if d.isDefined() else None)
+    expected = {
+        "round 0: seeded frontier commit", "round 0: seen-state init commit",
+        "round 1: fetch+extract checkpoint", "round 1: drain count",
+        "round 1: frontier commit (admit+settle)", "round 1: results append",
+        "round 1: fetch_log append", "round 1: decision_log append",
+        "round 1: seen_sketch append",
+    }
+    assert expected <= descs, expected - descs
 
 
 def test_seen_sketch_segment_bound(spark, tmp_path):

@@ -12,7 +12,9 @@ Either way it attributes wall time:
   * time at each task-concurrency level; level 0 is DRIVER GAP time —
     the serial time Amdahl's c is made of (broadcast builds, plan
     compilation, driver-side bookkeeping) — attributed to the job
-    description of the next stage submitted, plus the largest gaps
+    description of the next stage submitted, plus the largest gaps.
+    A task occupies its slot from its launch to the end of its
+    executor-side work (``task_span``), so no level exceeds the slots.
 
 Usage:
   python tools/profile_crawl.py --slots 4 --hosts 180000 \
@@ -63,8 +65,25 @@ def _scope(si: dict) -> str:
     return ""
 
 
+def task_span(ti: dict, tm: dict | None) -> tuple[int, int]:
+    """(launch, end) of one task in ms.  The end is the launch plus the
+    executor's deserialize, run and result-serialization times, not the
+    ``Finish Time`` the driver stamps when it handles the result (by
+    then the slot may already run the next task).  Without metrics (a
+    lost task) the finish time stands."""
+    launch = ti["Launch Time"]
+    if not tm:
+        return launch, ti["Finish Time"]
+    busy = (
+        tm.get("Executor Deserialize Time", 0)
+        + tm.get("Executor Run Time", 0)
+        + tm.get("Result Serialization Time", 0)
+    )
+    return launch, min(launch + busy, ti["Finish Time"])
+
+
 def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]]]:
-    """(completed stages, task (launch, finish) intervals) of one log."""
+    """(completed stages, task (launch, end) intervals) of one log."""
     stage_desc: dict[int, str] = {}
     stages, tasks = [], []
     for ev in iter_events(path):
@@ -94,9 +113,26 @@ def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]]]:
                 "res_mb": acc.get("internal.metrics.resultSize", 0) / 2**20,
             })
         elif t == "SparkListenerTaskEnd":
-            ti = ev["Task Info"]
-            tasks.append((ti["Launch Time"], ti["Finish Time"]))
+            tasks.append(task_span(ev["Task Info"], ev.get("Task Metrics")))
     return stages, tasks
+
+
+def concurrency(tasks: list[tuple[int, int]], t0: int, t1: int):
+    """Sweep the task timeline over [t0, t1]: ({running tasks: seconds},
+    [(start, end) of every span with none running]) — level 0 is driver
+    time."""
+    edges = sorted([(a, 1) for a, _ in tasks] + [(b, -1) for _, b in tasks] + [(t1, 0)])
+    by_level: dict[int, float] = defaultdict(float)
+    gaps = []
+    cur, prev = 0, t0
+    for ts, d in edges:
+        if ts > prev:
+            by_level[cur] += (ts - prev) / 1000
+            if cur == 0:
+                gaps.append((prev, ts))
+            prev = ts
+        cur += d
+    return by_level, gaps
 
 
 STAGE_COLS = ("run_s", "cpu_s", "gc_s", "tasks", "shr_mb", "shw_mb", "in_mb", "res_mb")
@@ -137,19 +173,7 @@ def report(stages: list[dict], tasks: list[tuple[int, int]], window=None) -> Non
     for desc, d in sorted(by_desc.items(), key=lambda x: -x[1]["run_s"]):
         print(f"  {d['run_s']:8.1f} {d['cpu_s']:8.1f} {int(d['tasks']):6d}  {desc[:80]}")
 
-    # sweep the task timeline: time at each concurrency level; level 0
-    # (no task running) is driver time
-    edges = sorted([(a, 1) for a, _ in tasks] + [(b, -1) for _, b in tasks] + [(t1, 0)])
-    by_level: dict[int, float] = defaultdict(float)
-    gaps = []
-    cur, prev = 0, t0
-    for ts, d in edges:
-        if ts > prev:
-            by_level[cur] += (ts - prev) / 1000
-            if cur == 0:
-                gaps.append((prev, ts))
-            prev = ts
-        cur += d
+    by_level, gaps = concurrency(tasks, t0, t1)
     print("== time at task concurrency level (s); 0 running = driver gap:")
     for lvl in sorted(by_level):
         print(f"  {lvl:3d} running: {by_level[lvl]:8.1f}")

@@ -31,10 +31,14 @@ that ``CrawlState.release()`` deletes.
 
 Driver actions per round: the fetch+extract checkpoint, the drain
 count on the cached claim set, and one write per committed table (the
-admit chain runs inside the frontier commit).  Task budget:
-a stage's task count follows its rows.  Only the html parse (one task
-per input split) and the cogroup admit (one task per seen-state bucket)
-run wide; AQE coalesces every persist()ed intermediate (session.py lets
+admit chain runs inside the frontier commit); each carries its own job
+description ("round r: ..."), so an event log splits a round by phase.
+Task budget: a stage's task count follows its rows.  Only the html
+parse (one task per input split) and the cogroup admit run wide, and
+the admit runs one wave: one task per physical bucket of the stored
+seen-state base, P = ``min(bloom_buckets, defaultParallelism)`` tasks,
+each over ``bloom_buckets / P`` logical buckets (run_crawl docstring).
+AQE coalesces every persist()ed intermediate (session.py lets
 it change a cached plan's partitioning), the admit output is rebalanced
 before its O(new) consumers, and each link is canonicalized once per
 round.  Keeping both counts low matters as much on a 1000-executor
@@ -478,10 +482,21 @@ def run_crawl(
     against the state's base, with the segments appended since the last
     compaction riding the candidate side (``SeenState.admit``).  The
     seen-state snapshots have one layout: full snapshots are written
-    bucketed on ``bucket`` (``bloom_buckets`` buckets), so the base is
-    read exchange-free (plan-asserted in tests/test_seen.py) and the
-    10^10-state ∧ 10^8-new-urls corner ships only O(new x
-    rounds-since-compaction) bytes through any exchange.  Every
+    bucketed on ``bucket``, so the base is read exchange-free
+    (plan-asserted in tests/test_seen.py and tests/test_crawl_e2e.py)
+    and the 10^10-state ∧ 10^8-new-urls corner ships only O(new x
+    rounds-since-compaction) bytes through any exchange.  Two bucket
+    counts are at work.  The LOGICAL count ``bloom_buckets`` shards the
+    state (``bucket = url_hash % bloom_buckets``, one segment row per
+    bucket) and is what a resume checks.  The PHYSICAL count P =
+    ``min(bloom_buckets, spark.sparkContext.defaultParallelism)`` is the
+    ``bucketBy(P, "bucket")`` of the stored base: the admit's cogroup
+    runs one wave of P tasks, each over ``bloom_buckets / P`` logical
+    buckets.  P is read when ``run_crawl`` starts (under dynamic
+    allocation it can be small until executors register; the next
+    compaction rewrites the base at the then-current P).  A base is read
+    back at the P its manifest recorded, so a checkpoint written under
+    another P resumes unchanged.  Every
     seen-state commit records ``bloom_buckets`` in its summary
     (``"buckets"``); a resume compares it with this crawl's
     ``bloom_buckets`` from the manifest alone, before any Spark job,
@@ -523,25 +538,32 @@ def run_crawl(
     # Parquet stand-in — the loop is agnostic (same commit/append/
     # read/rollback contract either way).  The seen sketch's full
     # snapshots are bucketed on ``bucket`` so admit's cogroup reads it
-    # exchange-free.
+    # exchange-free, in one physical bucket per task slot: the cogroup
+    # then runs one wave of that many tasks, each over bloom_buckets/P
+    # logical buckets (docstring).
+    physical_buckets = min(bloom_buckets, spark.sparkContext.defaultParallelism)
     tables = {
         name: open_snapshot_table(
             spark, checkpoint_dir, name,
             bucket_key="bucket" if name == "seen_sketch" else None,
-            bucket_count=bloom_buckets if name == "seen_sketch" else None,
+            bucket_count=physical_buckets if name == "seen_sketch" else None,
         )
         for name in (
             "frontier", "results", "fetch_log", "decision_log", "seen_sketch",
             "clicked", "assignments",
         )
     }
-    # Every seen-sketch commit records its bucket count: a state read
-    # under another count would probe the wrong bucket's segments and
-    # re-admit urls it has seen.
+    # Every seen-sketch commit records its (logical) bucket count: a
+    # state read under another count would probe the wrong bucket's
+    # segments and re-admit urls it has seen.
     seen_summary = {"buckets": bloom_buckets}
     if resume and tables["seen_sketch"].latest_id():
         # manifest only: runs before any table read, so no Spark job
         _check_seen_buckets(tables["seen_sketch"].snapshots()[-1]["summary"], bloom_buckets)
+    # Each driver action below names itself, so an event log splits a
+    # round by phase.  The parse's text must keep ending in
+    # "fetch+extract checkpoint": event-log readers key on it.
+    describe = spark.sparkContext.setJobDescription
 
     clicked = None  # D2 state: ck hashes of texts followed in earlier rounds
     # Whether the D2 state can hold ANY row yet.  A fresh crawl's round 1
@@ -555,6 +577,7 @@ def run_crawl(
     prev_claimed: int | None = None  # fetch-join auto input, one round stale
     start_round = 1
     if resume and tables["frontier"].latest_id():
+        describe("resume: read checkpoint")
         frontier = tables["frontier"].read()
         results = tables["results"].read() if tables["results"].latest_id() else None
         fetch_log = tables["fetch_log"].read() if tables["fetch_log"].latest_id() else None
@@ -574,18 +597,28 @@ def run_crawl(
         if last.get("claimed") is not None:
             prev_claimed = int(last["claimed"])
     else:
-        frontier = build_frontier(seeds, patterns, vid=vid)
-        decision_log = seed_decision_log(seeds, patterns).select(
-            F.lit(0).alias("round"),
-            F.col("file_order").alias("parent_qid"),
-            F.col("url").alias("curl"),
-            F.lit(0.0).alias("weight"),
-            "decision",
+        describe("round 0: seeded frontier commit")
+        tables["frontier"].commit(
+            build_frontier(seeds, patterns, vid=vid), {"round": 0, "stage": "seeded"}
         )
+        describe("round 0: seeded decision_log commit")
+        tables["decision_log"].commit(
+            seed_decision_log(seeds, patterns).select(
+                F.lit(0).alias("round"),
+                F.col("file_order").alias("parent_qid"),
+                F.col("url").alias("curl"),
+                F.lit(0.0).alias("weight"),
+                "decision",
+            ),
+            {"round": 0},
+        )
+        # Read back what was committed: the seen init and round 1's
+        # claim and settle scan the table instead of each re-running the
+        # seed canonicalization and dedup.
+        frontier = tables["frontier"].read()
+        decision_log = tables["decision_log"].read()
         results = None
         fetch_log = None
-        tables["frontier"].commit(frontier, {"round": 0, "stage": "seeded"})
-        tables["decision_log"].commit(decision_log, {"round": 0})
 
     state = CrawlState(
         frontier=frontier, results=results, fetch_log=fetch_log,
@@ -616,6 +649,7 @@ def run_crawl(
         # base + file union, never a rewritten blob).  The state is
         # disk-backed from here on — the shape that holds when it no
         # longer fits memory.
+        describe("round 0: seen-state init commit")
         tables["seen_sketch"].commit(
             seen_svc.init(init_src, "url_hash"),
             {"round": 0, "stage": "seeded", **seen_summary},
@@ -676,15 +710,17 @@ def run_crawl(
         # pages scan + parse executing twice per round).  Eager
         # localCheckpoint runs the parse exactly once and hands every
         # consumer the same RDD blocks by identity — no plan-matching,
-        # no race.  (The job description names the action so event-log
-        # profiling can attribute its stages; zero cost otherwise.)
-        spark.sparkContext.setJobDescription(f"round {r}: fetch+extract checkpoint")
-        parsed = fetch_extract(claimed, pages, join=strategy).localCheckpoint(eager=True)
+        # no race.  The plan is built first and the description set just
+        # before the action, so the description names exactly its jobs.
+        parsed = fetch_extract(claimed, pages, join=strategy)
+        describe(f"round {r}: fetch+extract checkpoint")
+        parsed = parsed.localCheckpoint(eager=True)
         round_caches.append(parsed)
         # Drain probe AFTER the parse, on the claimed cache the parse
         # materialized (no extra politeness evaluation up front); its
         # number also feeds next round's fetch_join='auto' pick and the
         # round's record.  A drained round commits nothing.
+        describe(f"round {r}: drain count")
         n_claimed = claimed.count()
         if n_claimed == 0:
             for c in round_caches:
@@ -764,21 +800,29 @@ def run_crawl(
         # fast-append) and is re-read as the file union — per-round
         # commit cost is O(round delta), not O(table).
         summary = {"round": r, "claimed": n_claimed}
+        describe(f"round {r}: frontier commit (admit+settle)")
         tables["frontier"].commit(settled, summary)
+        describe(f"round {r}: results append")
         tables["results"].commit_append(round_results, summary)
+        describe(f"round {r}: fetch_log append")
         tables["fetch_log"].commit_append(log, summary)
+        describe(f"round {r}: decision_log append")
         tables["decision_log"].commit_append(link_decisions, summary)
         if round_clicked is not None:
+            describe(f"round {r}: clicked append")
             tables["clicked"].commit_append(round_clicked, summary)
             clicked = tables["clicked"].read()
         if assignments is not None:
+            describe(f"round {r}: assignments commit")
             tables["assignments"].commit(assignments, summary)
             assignments = tables["assignments"].read()
+        describe(f"round {r}: seen_sketch append")
         tables["seen_sketch"].commit_append(state_delta, {**summary, **seen_summary})
         if r % compact_every == 0:
             # Lazy maintenance: merge each bucket's segments into one
             # (full rewrite, amortized O(total/K) per round),
             # re-landing in the bucketed layout.
+            describe(f"round {r}: seen_sketch compaction")
             tables["seen_sketch"].commit(
                 seen_svc.compact(tables["seen_sketch"].read()),
                 {"round": r, "stage": "compacted", **seen_summary},
@@ -787,6 +831,7 @@ def run_crawl(
         # base + the small parquet deltas on top — lazy, disk-backed,
         # and SPLIT so admit can keep the base's bytes out of every
         # exchange.
+        describe(f"round {r}: read back")
         seen_base = tables["seen_sketch"].read_base()
         seen_deltas = tables["seen_sketch"].read_deltas()
         state.frontier = tables["frontier"].read()
@@ -799,6 +844,7 @@ def run_crawl(
         if backpressure:
             # T8: gate next round's claim budget on this round's health
             # (the count reads the round's parse — no recompute).
+            describe(f"round {r}: backpressure count")
             n_ok = parsed.count()
             miss = 1.0 - n_ok / n_claimed
             budget_cap = (
@@ -813,6 +859,6 @@ def run_crawl(
             c.unpersist()
         d2_nonempty = True  # later rounds may claim ck-bearing discoveries
 
-    spark.sparkContext.setJobDescription(None)
+    describe(None)
     state.assignments = assignments
     return state

@@ -5,10 +5,12 @@ Scale math (SURVEY.md §7 hard part 6): at 10^10 URLs the seen set is
 So it is sharded by ``bucket = url_hash % n_buckets`` into rows keyed
 (bucket, seg), each row one segment: a sorted int64 hash array stored
 as one binary blob.  A round's admit is ONE cogrouped ``applyInPandas``
-pass (``SeenState.admit``): each bucket task sees its candidates and
-its segments together and runs ``admit_bucket`` — in-batch dedup,
-exact ``searchsorted`` membership over the sorted segments, and the new
-delta segment — in numpy, with no per-row Python.
+pass (``SeenState.admit``): each cogroup group is one bucket, which
+sees its candidates and its segments together and runs ``admit_bucket``
+— in-batch dedup, exact ``searchsorted`` membership over the sorted
+segments, and the new delta segment — in numpy, with no per-row Python.
+A task runs every group of its partition, so the cogroup's task count is
+its partition count (a bucketed base's bucket count), not ``n_buckets``.
 
 Membership is hash-exact (JVM-side xxhash64): P[any collision] ≈
 n²/2^65 ≈ 0.003 even at 10^10 urls.  The stored rows keep three columns
@@ -122,9 +124,17 @@ class SeenState:
       and the segments appended since the last compaction ride the
       candidate-side exchange (``admit(delta_side=...)``).
 
-    Scale math: n_buckets is the sharding knob.  At 10^10 urls with
-    n_buckets=4096 each bucket's compacted state is ~20 MB of hashes —
-    one comfortable Arrow blob per task; a round's delta segments are KBs.
+    Scale math: ``n_buckets`` is the LOGICAL sharding knob: it sets the
+    segment rows (one per bucket and segment) and so the size of one
+    Arrow blob.  At 10^10 urls with n_buckets=4096 each bucket's
+    compacted state is ~20 MB of hashes; a round's delta segments are
+    KBs.  The PHYSICAL bucket count P of a bucketed base is the
+    storage's ``bucketBy(P, "bucket")``, and the cogroup runs one task
+    per physical bucket, each over ``n_buckets / P`` groups.
+    ``run_crawl`` stores its base with P = min(n_buckets,
+    defaultParallelism), so a round's admit is one wave of tasks
+    whatever ``n_buckets`` is, and no task pays the per-task Python
+    set-up for a handful of hashes.
 
     Reference parity: the seen set is the already-queued check of
     queue_sites (runners/queue_sites:117-127) keyed on the canonical
