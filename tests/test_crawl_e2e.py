@@ -304,18 +304,46 @@ def test_moved_checkpoint_resumes(spark, fixture_tables, tmp_path):
     assert resumed.results.count() == full.results.count()
 
 
-def test_checkpoint_with_track_clicked_off(spark, fixture_tables, tmp_path):
-    """Regression: checkpoint_dir + track_clicked=False must not crash on
-    the clicked-table commit (the state is None by design)."""
+def test_clicked_text_skips_survive_resume(spark, tmp_path):
+    """D2 in the crawl loop (pagefinder.js:101-104,277-279): a crawl
+    skips links whose anchor text was already clicked on the same site,
+    and a crawl stopped after round 1 and resumed yields the
+    uninterrupted crawl's frontier, results and decision log — with a
+    stale ``clicked`` table holding an unrelated ck in the checkpoint,
+    which the resume ignores."""
     from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.operators.frontier import FRONTIER_COLS
+    from tripwire_spark.sources.snapshots import open_snapshot_table
 
-    pages, seeds, robots = fixture_tables
-    state = run_crawl(
-        spark, seeds, pages, robots, BLACKLIST_PATTERNS,
-        max_rounds=2, default_budget=2,
-        checkpoint_dir=str(tmp_path / "ck_nc"), track_clicked=False,
+    pages = synth_pages(spark, 40, 16, 8).persist()
+    seeds = synth_seeds(spark, n_seeds=40).persist()
+    robots = synth_robots(spark, 40).persist()
+    full = run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=3)
+    ck = str(tmp_path / "ck_d2")
+    run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, checkpoint_dir=ck)
+    stale = spark.createDataFrame(
+        [("no-such-site.test", "no such anchor")], "phost string, anchor_text string"
+    ).select(F.xxhash64("phost", "anchor_text").alias("ck"))
+    open_snapshot_table(spark, ck, "clicked").commit(stale, {"round": 1})
+    resumed = run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=3,
+        checkpoint_dir=ck, resume=True,
     )
-    assert state.frontier.count() > 0 and state.rounds_run == 2
+    assert resumed.rounds_run == full.rounds_run
+
+    def rows(df, *cols):
+        return set(map(tuple, df.select(*cols).collect()))
+
+    decisions = ("round", "parent_qid", "curl", "weight", "decision")
+    full_decisions = rows(full.decision_log, *decisions)
+    assert [d for d in full_decisions if d[-1] == "skipped-clicked-text"]
+    assert rows(resumed.decision_log, *decisions) == full_decisions
+    assert rows(resumed.frontier, *FRONTIER_COLS) == rows(full.frontier, *FRONTIER_COLS)
+    result_cols = ("qid", "url", "text", "lang", "warc_ts")
+    assert rows(resumed.results, *result_cols) == rows(full.results, *result_cols)
+    full.release()
+    for df in (pages, seeds, robots):
+        df.unpersist()
 
 
 def test_long_crawl_bounded_lineage(spark):
@@ -845,7 +873,12 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
     """Each of a round's driver actions runs under its own job
     description, and the parse's is set only after its plan is built
     (so a caller wrapping ``fetch_extract`` sees its action's jobs under
-    that description, not its own)."""
+    that description, not its own).  The caller's description is back
+    when the crawl returns or raises.  The crawl commits exactly the
+    frontier, results, fetch_log, decision_log and seen_sketch tables:
+    the clicked-text state is derived from the frontier."""
+    import os
+
     from tripwire_spark.operators import crawl
 
     pages, seeds, robots = fixture_tables
@@ -864,9 +897,24 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
         st = crawl.run_crawl(
             spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, default_budget=2
         )
-        assert sc.getLocalProperty("spark.job.description") is None
+        assert sc.getLocalProperty("spark.job.description") == tag
+
+        def failing_discover(*args, **kwargs):
+            raise RuntimeError("round fails")
+
+        with monkeypatch.context() as m:
+            m.setattr(crawl, "discover", failing_discover)
+            with pytest.raises(RuntimeError, match="round fails"):
+                crawl.run_crawl(
+                    spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1,
+                    default_budget=2,
+                )
+        assert sc.getLocalProperty("spark.job.description") == tag
     finally:
         sc.setJobGroup("phase-descriptions-other", "other")
+    assert sorted(os.listdir(st.scratch_dir)) == [
+        "decision_log", "fetch_log", "frontier", "results", "seen_sketch",
+    ]
     st.release()
     assert at_build and not [d for d in at_build if d and d.endswith("fetch+extract checkpoint")]
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
@@ -883,6 +931,7 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
         "round 1: seen_sketch append",
     }
     assert expected <= descs, expected - descs
+    assert not [d for d in descs if d and "clicked" in d], descs
 
 
 def test_seen_sketch_segment_bound(spark, tmp_path):

@@ -15,7 +15,8 @@ Per round:
    is never shuffled)
 3. extraction: byte-identical text (pageUtils.js:58-61), link + form
    candidates (vectorized pandas UDFs)
-4. link scoring (C18 + D3 combine), blacklist (F1), canonicalize, then
+4. link scoring (C18 + D3 combine), blacklist (F1), clicked-text skip
+   (D2: the ck of every frontier row ever claimed), canonicalize, then
    ONE cogrouped seen-state pass (seen.py SeenState.admit): in-round
    dedup + exact membership + the new delta segment in a single
    shuffle — D7 / F2 analog
@@ -50,6 +51,7 @@ claim set is bounded.
 from __future__ import annotations
 
 import atexit
+import functools
 import shutil
 import tempfile
 from dataclasses import dataclass, field
@@ -62,6 +64,7 @@ from tripwire_spark.functions.scoring import link_weight
 from tripwire_spark.functions.urls import reg_domain, resolve_canonicalize, url_hash, url_host
 from tripwire_spark.operators.frontier import (
     FRONTIER_COLS,
+    ST_COMPLETED,
     ST_QUEUED,
     blacklist_regex,
     build_frontier,
@@ -179,12 +182,12 @@ def discover(
     trap_limit: int | None = None,
     trap_keep: int = 5,
     state_deltas: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Score, filter, canonicalize, dedup, and seen-filter new links.
 
-    Returns (new_frontier_rows, decision_log_rows, state_delta,
-    admitted_ck_rows).  ``state_delta`` is the seen-state's NEW delta
-    segments only (O(new urls)); the caller composes the next state via
+    Returns (new_frontier_rows, decision_log_rows, state_delta).
+    ``state_delta`` is the seen-state's NEW delta segments only (O(new
+    urls)); the caller composes the next state via
     ``SeenState.advance(state, delta)`` or an append commit.
     qids are hash-derived (qid = url_hash; see module header) and carry
     no discovery order; claim priority rides the explicit
@@ -200,13 +203,13 @@ def discover(
     seen.py.
 
     ``clicked`` (D2, pagefinder.js:101-104,277-279): per-site anchor
-    texts already followed in EARLIER rounds; candidates repeating a
-    clicked text on the same site are skipped.  The state is a single
-    64-bit key column ``ck = xxhash64(parent host, anchor text)`` — the
-    probe join shuffles one long, not two strings, and a hash collision
-    wrongly suppressing a link has the same (accepted, documented)
-    tolerance as the url seen set.  The fourth return value is this
-    round's newly-clicked ck rows for the caller to fold into the state.
+    texts already followed; candidates repeating a clicked text on the
+    same site are skipped.  The state is a single 64-bit key column
+    ``ck = xxhash64(parent host, anchor text)`` — the probe join
+    shuffles one long, not two strings, and a hash collision wrongly
+    suppressing a link has the same (accepted, documented) tolerance as
+    the url seen set.  Every new frontier row carries its link's ``ck``,
+    so the crawl loop derives this state from the frontier itself.
 
     ``links`` may carry a precomputed ``phost`` column (the crawl loop
     passes the frontier's host — zero extra work); without one the
@@ -314,14 +317,7 @@ def discover(
         (-F.col("__negw")).cast("double").alias("weight"),
         F.col("__ck").alias("ck"),
     )
-    # ck rows of this round's ADMITTED links.  NOT yet "clicked": the
-    # reference marks links_clicked on the actual click
-    # (pagefinder.js:277-279), so the crawl loop folds a frontier row's
-    # ck into the D2 state only when the row is CLAIMED (fetched).
-    # Standalone callers that want admit-time semantics can fold these
-    # directly.
-    new_clicked = fresh.select(F.col("__ck").alias("ck"))
-    return new_rows, decisions, state_delta, new_clicked
+    return new_rows, decisions, state_delta
 
 
 def crawl_metrics(state: "CrawlState") -> DataFrame | None:
@@ -414,6 +410,23 @@ def _check_seen_buckets(summary: dict, bloom_buckets: int) -> None:
         )
 
 
+def _keeps_job_description(crawl):
+    """Restore the caller's job description (``setJobGroup`` sets one)
+    when ``crawl`` returns or raises: the loop names its own actions."""
+
+    @functools.wraps(crawl)
+    def wrapper(spark: SparkSession, *args, **kwargs):
+        sc = spark.sparkContext
+        caller_description = sc.getLocalProperty("spark.job.description")
+        try:
+            return crawl(spark, *args, **kwargs)
+        finally:
+            sc.setJobDescription(caller_description)
+
+    return wrapper
+
+
+@_keeps_job_description
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -427,7 +440,6 @@ def run_crawl(
     vid: int = 1,
     bloom_buckets: int = 64,
     backpressure: bool = False,
-    track_clicked: bool = True,
     identities: DataFrame | None = None,
     compact_every: int = 8,
     trap_limit: int | None = None,
@@ -464,10 +476,14 @@ def run_crawl(
     sticky identity<->domain assignment — every claimed host gets the
     lowest free identity once, reuses it in every later round, and the
     mapping persists in the ``assignments`` state table
-    (checkpointed/restored like the frontier).
+    (checkpointed/restored like the frontier; only such a crawl has it).
+
+    The clicked-text state (D2, ``discover``) is derived from the
+    frontier each round: the ``ck`` of its claimed rows (``completed``
+    or ``try > 0``) and of the rows the round claims.
 
     Commit cost per round is O(round delta) for the append-only tables
-    (results, fetch_log, decision_log, clicked, seen_sketch — Iceberg
+    (results, fetch_log, decision_log, seen_sketch — Iceberg
     fast-appends via ``commit_append``); only the two mutating tables
     (frontier, assignments) rewrite.  ``compact_every``: every K rounds
     the segmented seen state is compacted (one merged segment per
@@ -542,16 +558,16 @@ def run_crawl(
     # then runs one wave of that many tasks, each over bloom_buckets/P
     # logical buckets (docstring).
     physical_buckets = min(bloom_buckets, spark.sparkContext.defaultParallelism)
+    names = ["frontier", "results", "fetch_log", "decision_log", "seen_sketch"]
+    if identities is not None:
+        names.append("assignments")
     tables = {
         name: open_snapshot_table(
             spark, checkpoint_dir, name,
             bucket_key="bucket" if name == "seen_sketch" else None,
             bucket_count=physical_buckets if name == "seen_sketch" else None,
         )
-        for name in (
-            "frontier", "results", "fetch_log", "decision_log", "seen_sketch",
-            "clicked", "assignments",
-        )
+        for name in names
     }
     # Every seen-sketch commit records its (logical) bucket count: a
     # state read under another count would probe the wrong bucket's
@@ -563,16 +579,8 @@ def run_crawl(
     # Each driver action below names itself, so an event log splits a
     # round by phase.  The parse's text must keep ending in
     # "fetch+extract checkpoint": event-log readers key on it.
+    # (_keeps_job_description restores the caller's own.)
     describe = spark.sparkContext.setJobDescription
-
-    clicked = None  # D2 state: ck hashes of texts followed in earlier rounds
-    # Whether the D2 state can hold ANY row yet.  A fresh crawl's round 1
-    # claims only seeds (ck is NULL by build_frontier construction), so
-    # its clicked-text probe is provably empty — skipping it saves the
-    # probe's distinct+join exchanges in the round where the frontier is
-    # purest.  Resume flips this on immediately (restored state may be
-    # non-empty); otherwise the first executed round does.
-    d2_nonempty = False
     assignments = None  # sticky identity<->domain state (host, iid, group, type)
     prev_claimed: int | None = None  # fetch-join auto input, one round stale
     start_round = 1
@@ -582,12 +590,7 @@ def run_crawl(
         results = tables["results"].read() if tables["results"].latest_id() else None
         fetch_log = tables["fetch_log"].read() if tables["fetch_log"].latest_id() else None
         decision_log = tables["decision_log"].read()
-        clicked = tables["clicked"].read() if tables["clicked"].latest_id() else None
-        # conservative: a resumed frontier carries ck rows, so even with
-        # no restored clicked table the first resumed round's claim-time
-        # fold can be non-empty
-        d2_nonempty = True
-        if tables["assignments"].latest_id():
+        if identities is not None and tables["assignments"].latest_id():
             assignments = tables["assignments"].read()
         last = tables["frontier"].snapshots()[-1]["summary"]
         start_round = int(last.get("round", 0)) + 1
@@ -674,17 +677,21 @@ def run_crawl(
                 claimed.select("host"), assignments, identities
             ).persist()
             round_caches.append(assignments)
-        round_clicked = None
-        if track_clicked:
-            # D2 fold at CLAIM time (pagefinder.js:277-279: links_clicked
-            # records actual clicks): the ck of every frontier row being
-            # fetched this round joins the clicked-text state NOW, so
-            # this round's candidates are already suppressed by it.
-            # Admitted-but-never-claimed links do not suppress anything
-            # — the reference would still follow them.
-            round_clicked = claimed.filter(F.col("ck").isNotNull()).select("ck").persist()
-            round_caches.append(round_clicked)
-            clicked = round_clicked if clicked is None else clicked.unionByName(round_clicked)
+        # D2 state at CLAIM time (pagefinder.js:277-279: links_clicked
+        # records actual clicks): the ck of every row claimed in an
+        # earlier round (settle leaves it completed or with try > 0) or
+        # in this one, so this round's candidates are already suppressed
+        # by it; admitted-but-never-claimed links suppress nothing.
+        # Round 1 claims from the seeded frontier, whose ck is NULL
+        # (build_frontier), so its probe is provably empty and skipped.
+        clicked = None
+        if r > 1:
+            clicked = (
+                state.frontier.filter((F.col("status") == ST_COMPLETED) | (F.col("try") > 0))
+                .select("ck")
+                .unionByName(claimed.select("ck"))
+                .filter(F.col("ck").isNotNull())
+            )
         # Fetch-join switchover (round-3 3x experiment, BASELINE.md):
         # the driver-built claimed-set broadcast is per-round SERIAL
         # time growing with budget x hosts; past fetch_join_threshold
@@ -761,14 +768,11 @@ def run_crawl(
             F.col("l.text").alias("anchor_text"),
             F.col("l.pos").alias("pos"),
         )
-        new_rows, link_decisions, state_delta, _admit_ck = discover(
+        new_rows, link_decisions, state_delta = discover(
             links, patterns, round_no=r, seen_state=seen_svc, state=seen_base,
-            vid=vid, caches=round_caches,
-            clicked=clicked if d2_nonempty else None, trap_limit=trap_limit,
+            vid=vid, caches=round_caches, clicked=clicked, trap_limit=trap_limit,
             state_deltas=seen_deltas,
         )
-        # (D2 fold happens at CLAIM time above — _admit_ck, the admitted
-        # links' ck rows, is for standalone discover() callers only.)
         # new_rows feeds the settled frontier (and the snapshot commit);
         # pin it so its seen-state lineage isn't re-evaluated per consumer.
         new_rows = new_rows.persist()
@@ -808,10 +812,6 @@ def run_crawl(
         tables["fetch_log"].commit_append(log, summary)
         describe(f"round {r}: decision_log append")
         tables["decision_log"].commit_append(link_decisions, summary)
-        if round_clicked is not None:
-            describe(f"round {r}: clicked append")
-            tables["clicked"].commit_append(round_clicked, summary)
-            clicked = tables["clicked"].read()
         if assignments is not None:
             describe(f"round {r}: assignments commit")
             tables["assignments"].commit(assignments, summary)
@@ -857,8 +857,6 @@ def run_crawl(
 
         for c in round_caches:
             c.unpersist()
-        d2_nonempty = True  # later rounds may claim ck-bearing discoveries
 
-    describe(None)
     state.assignments = assignments
     return state

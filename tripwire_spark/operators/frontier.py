@@ -42,8 +42,9 @@ FRONTIER_COLS = [
     "round_added", "weight", "ck",
 ]
 # ``ck`` = xxhash64(parent reg-domain, anchor text) of the link that
-# discovered the row (NULL for seeds).  It rides the frontier so the D2
-# clicked-text state can be folded at CLAIM time — the reference marks
+# discovered the row (NULL for seeds).  The D2 clicked-text state is
+# derived from it: the ck of every row ever claimed (``settle`` leaves a
+# claimed row completed or with try > 0).  The reference marks
 # links_clicked only on an actual click (pagefinder.js:277-279), so an
 # admitted-but-never-claimed link must NOT suppress same-text candidates.
 
