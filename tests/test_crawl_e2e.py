@@ -55,6 +55,39 @@ def test_build_frontier_dedup_blacklist(spark, fixture_tables):
     assert rows["http://site0000.test/p0"].qid == 0
 
 
+def test_seed_decision_log_queues_exactly_the_frontier(spark, fixture_tables):
+    """queue_sites checks the blacklist before the dedup (:112-113, then
+    :117-127): a blacklisted line does not make a later line with the
+    same canonical url a duplicate.  The seed decision log's "queued"
+    lines are exactly the seeded frontier's rows, standalone and as
+    round 0 of a crawl commits them."""
+    from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.operators.frontier import build_frontier, seed_decision_log
+
+    pages, _, robots = fixture_tables
+    seeds = spark.createDataFrame(
+        [
+            (1, "http://a.test/google/../x", 0),  # blacklisted; canonical http://a.test/x
+            (2, "a.test/x", 1),
+            (3, "HTTP://A.test/x", 2),
+            (4, "http://bad host/", 3),
+        ],
+        "alexa int, url string, file_order long",
+    )
+    decisions = {r.file_order: r.decision for r in seed_decision_log(seeds, BLACKLIST_PATTERNS).collect()}
+    assert decisions == {
+        0: "skipped-blacklist", 1: "queued", 2: "skipped-duplicate", 3: "skipped-invalid",
+    }
+    frontier = [(r.qid, r.url) for r in build_frontier(seeds, BLACKLIST_PATTERNS).collect()]
+    assert frontier == [(1, "http://a.test/x")]
+
+    st = run_crawl(spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=0)
+    logged = {r.parent_qid: r.decision for r in st.decision_log.collect()}
+    assert logged == decisions
+    assert [(r.qid, r.url) for r in st.frontier.collect()] == frontier
+    st.release()
+
+
 def test_crawl_end_to_end(spark, fixture_tables, tmp_path):
     from tripwire_spark.operators.crawl import run_crawl
 
@@ -730,6 +763,124 @@ def test_round_tasks_follow_rows(spark, tmp_path, monkeypatch):
     assert "InMemoryTableScan" in plans["decision_log"]
     assert "ArrowEvalPython" not in plans["decision_log"], plans["decision_log"]
     pages.unpersist()
+
+
+def _python_udf_evaluations(spark, plans) -> dict[str, int]:
+    """UDF name -> number of ArrowEvalPython evaluations of it that
+    running ``plans`` (physical plans) takes.  Unlike ``_plan_node_names``
+    this descends into cached relations, because the first reader of a
+    cache runs its plan, but into each distinct cache once, because only
+    one reader does; adaptive plans and query stages are descended into,
+    a reused exchange is not (it is computed once)."""
+    seen, counts = set(), {}
+
+    def walk(plan):
+        name = plan.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(plan.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(plan.plan())
+        if name == "InMemoryTableScan":
+            key = spark._jvm.java.lang.System.identityHashCode(plan.relation().cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                walk(plan.relation().cachedPlan())
+            return
+        if name == "ArrowEvalPython":
+            udfs = plan.udfs()
+            for i in range(udfs.size()):
+                udf = udfs.apply(i).name()
+                counts[udf] = counts.get(udf, 0) + 1
+        children = plan.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    for plan in plans:
+        walk(plan)
+    return counts
+
+
+def test_python_udfs_run_once_per_row(spark, fixture_tables, monkeypatch):
+    """Every Python URL UDF of a crawl runs once per row: round 0's two
+    commits (frontier, decision log) canonicalize each seed line once
+    between them, from one cached seed frame, and round 1's frontier
+    commit (which runs the admit) resolves each discovered link once.
+    A ``curl IS NOT NULL`` filter under a cache would be pushed below
+    the projection with the UDF inlined, and evaluate it twice."""
+    from tripwire_spark.operators import crawl
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    pages, seeds, robots = fixture_tables
+    plans = {}
+    real_commit = SnapshotTable.commit
+
+    def spy(self, df, summary=None):
+        key = (self.name, (summary or {}).get("round"))
+        plans[key] = df._jdf.queryExecution().executedPlan()
+        return real_commit(self, df, summary)
+
+    monkeypatch.setattr(SnapshotTable, "commit", spy)
+    st = crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, default_budget=2
+    )
+    st.release()
+    seeded = _python_udf_evaluations(spark, [plans["frontier", 0], plans["decision_log", 0]])
+    assert seeded.get("canonicalize_url") == 1, seeded
+    round1 = _python_udf_evaluations(spark, [plans["frontier", 1]])
+    assert round1.get("resolve_canonicalize") == 1, round1
+    for counts in (seeded, round1):
+        assert set(counts.values()) == {1}, counts
+
+
+def test_round_caches_released_when_round_ends_or_raises(spark, fixture_tables, monkeypatch):
+    """A round releases what it pinned when it ends and when it raises:
+    no frame the crawl persisted stays cached and no RDD it persisted
+    stays pinned — the parse's local checkpoint included, which
+    ``DataFrame.unpersist()`` alone leaves pinned.  ``discover`` raises
+    after the claim and parse are pinned; ``settle`` after the link,
+    admit and new-row caches are too."""
+    from pyspark import StorageLevel
+
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    frame_class = type(seeds)  # the session's DataFrame implementation
+    jsc = spark.sparkContext._jsc
+
+    def pinned_rdds():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    persisted = []
+    real_persist = frame_class.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("round fails")
+
+    for phase, n_frames in ((None, 5), ("discover", 2), ("settle", 5)):
+        before = pinned_rdds()
+        persisted.clear()
+        with monkeypatch.context() as m:
+            m.setattr(frame_class, "persist", spy)
+            if phase is None:
+                crawl.run_crawl(
+                    spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=2,
+                    default_budget=2,
+                ).release()
+            else:
+                m.setattr(crawl, phase, fail)
+                with pytest.raises(RuntimeError, match="round fails"):
+                    crawl.run_crawl(
+                        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1,
+                        default_budget=2,
+                    )
+        # round 0's seed frame, the claim, then the link/admit/new-row caches
+        assert len(persisted) >= n_frames, (phase, len(persisted))
+        assert [df.storageLevel for df in persisted] == [StorageLevel.NONE] * len(persisted), phase
+        assert pinned_rdds() == before, phase
 
 
 def _find_node(plan, name: str):

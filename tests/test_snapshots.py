@@ -213,3 +213,42 @@ def test_manifest_paths_relative_and_absolute_still_read(spark, tmp_path):
     t._write_manifest(man)
     assert t.read().count() == 150
     assert t.read_deltas().count() == 50
+
+
+def test_snapshot_reads_run_no_spark_job(spark, tmp_path):
+    """Every commit records the schema it wrote, so reading a snapshot
+    back (latest, time travel, bucketed base, deltas) launches no
+    schema-inference job; a manifest that recorded no schema (the older
+    format) still reads, through inference, to the same schema."""
+    import json
+
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    sc = spark.sparkContext
+    log = SnapshotTable(spark, str(tmp_path), "log")
+    log.commit(_df(spark, 0, 100), {"round": 1})
+    log.commit_append(_df(spark, 100, 150).withColumn("w", F.lit(0.5)), {"round": 2})
+    seen = SnapshotTable(spark, str(tmp_path), "seen", bucket_key="bucket", bucket_count=2)
+    seen.commit(spark.range(10).selectExpr("cast(id % 2 as int) as bucket", "id as v"))
+    seen.commit_append(spark.range(10, 14).selectExpr("cast(id % 2 as int) as bucket", "id as v"))
+    assert all("schema" in s for t in (log, seen) for s in t.snapshots())
+
+    tag = "snapshot-reads"
+    sc.setJobGroup(tag, tag)
+    try:
+        frames = [log.read(), log.read(1), log.read_deltas(), seen.read_base(), seen.read_deltas()]
+    finally:
+        sc.setJobGroup("snapshot-reads-other", "other")
+    assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
+    # the recorded schema is the one Spark would infer
+    inferred = spark.read.parquet(*log._data_dirs(log._select(None)))
+    assert frames[0].schema == inferred.schema
+    assert frames[0].count() == 150 and frames[1].count() == 100
+    assert frames[2].count() == 50 and frames[4].count() == 4
+
+    man = json.loads(open(log._manifest_path).read())
+    for s in man["snapshots"]:
+        del s["schema"]
+    log._write_manifest(man)
+    assert log.read().schema == inferred.schema
+    assert log.read().count() == 150

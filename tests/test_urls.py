@@ -178,7 +178,7 @@ _LABEL = st.from_regex(r"[a-z0-9]([a-z0-9-]{0,8}[a-z0-9])?", fullmatch=True)
     st.lists(_LABEL, min_size=2, max_size=4),
     st.lists(_SEG, min_size=0, max_size=4),
     st.sampled_from(["", "/"]),
-    st.sampled_from(["", "?a=1&b=2", "?x", "?a:b/c@d", "?.~-"]),
+    st.sampled_from(["", "?", "?a=1&b=2", "?x", "?a:b/c@d", "?.~-"]),
 )
 @settings(max_examples=500, deadline=None)
 def test_canon_fast_path_is_identity_on_full_pipeline(scheme, labels, segs, slash, q):
@@ -216,6 +216,8 @@ def test_canon_fast_path_rejects_non_canonical():
         "http://host.test./",         # trailing host dot strips
         "http://u:p@host.test/",      # userinfo -> slow path
         "http://host..test/",         # empty label
+        "http://host.test/a?",        # empty query drops
+        "http://host.test/a\n",       # trailing newline strips
     ]:
         assert not _CANON_FAST.match(u), u
 
@@ -245,6 +247,60 @@ def test_resolve_absolute_shortcut_edge_cases(spark):
     for h in hrefs:
         want = canonicalize_url_py(urljoin(base, h))
         assert got[h] == want, (h, got[h], want)
+
+
+# Bases and hrefs for the resolution fast path: each ingredient below
+# either keeps a root-relative href on the fast path or must knock it
+# off (dot segments, params, escapes, fragments, "//", empty queries;
+# bases with upper case, a port, userinfo, a trailing host dot, "_" in
+# the host, or no path).
+_HREF_PART = st.sampled_from(
+    ["p", "P12", "a-b_c~d.e", ".", "..", ";x", "%41", "%2f", "#f", "", "/", "//", "?", "?q=1",
+     "?a:b/c@d", "&", "=", " ", "\n", "ü", ":"]
+)
+_BASE = st.sampled_from(
+    [
+        "http://a.test/", "https://a.test/x/y?z#f", "http://a.test/x", "HTTP://a.test/x",
+        "http://A.test/x", "http://a.test:8080/x", "http://a.test:80/x", "http://u:p@a.test/x",
+        "http://a.test./x", "http://a_b.test/x", "http://a.test", "http://a.test?q",
+        "http://a.test#f", "http://sub.a-b.test/x/../y", "ftp://a.test/x", "", None,
+    ]
+)
+
+
+@given(_BASE, st.lists(_HREF_PART, max_size=6).map("".join), st.booleans())
+@settings(max_examples=2000, deadline=None)
+def test_resolve_fast_path_equals_urljoin_full_pipeline(base, tail, rooted):
+    """resolve_canonicalize_py == canonicalize(urljoin(base, href)) with
+    both fast paths (the root-relative resolution and _CANON_FAST) off."""
+    import re as _re
+    from urllib.parse import urljoin
+
+    from tripwire_spark.functions import urls as U
+
+    href = "/" + tail if rooted else tail
+    got = U.resolve_canonicalize_py(base, href)
+    saved = U._CANON_FAST
+    U._CANON_FAST = _re.compile(r"(?!)")  # disable fast path
+    try:
+        try:
+            want = canonicalize_url_py(urljoin(base, href) if base else href)
+        except ValueError:
+            want = None
+    finally:
+        U._CANON_FAST = saved
+    assert got == want, (base, href, got, want)
+
+
+def test_resolve_fast_path_takes_root_relative_hrefs():
+    """The common link shape resolves without urljoin: a root-relative
+    href under a canonical origin is ``origin + href``."""
+    from tripwire_spark.functions import urls as U
+
+    assert U._FAST_ROOT_HREF.match("/p12?x=1") and U._FAST_BASE_ORIGIN.match("http://a.test/q")
+    assert U.resolve_canonicalize_py("http://a.test/q/r?s", "/p12?x=1") == "http://a.test/p12?x=1"
+    for href in ["/p?", "/a/../b", "//b.test/p", "/p#f", "/%41", "/p;x"]:
+        assert not U._FAST_ROOT_HREF.match(href), href
 
 
 def test_surt_key_shapes(spark):

@@ -41,11 +41,13 @@ seen-state base, P = ``min(bloom_buckets, defaultParallelism)`` tasks,
 each over ``bloom_buckets / P`` logical buckets (run_crawl docstring).
 AQE coalesces every persist()ed intermediate (session.py lets
 it change a cached plan's partitioning), the admit output is rebalanced
-before its O(new) consumers, and each link is canonicalized once per
-round.  Keeping both counts low matters as much on a 1000-executor
-cluster as locally: the frontier loop is latency-bound on scheduler
-round-trips and per-task set-up, not data volume, once the per-round
-claim set is bounded.
+before its O(new) consumers, and every Python URL UDF runs once per
+row: the link canonicalizer once per discovered link in the round's
+frontier commit (one ``resolve_canonicalize`` evaluation in its plan),
+the seed canonicalizer once per seed line in round 0.  Keeping both
+counts low matters as much on a 1000-executor cluster as locally: the
+frontier loop is latency-bound on scheduler round-trips and per-task
+set-up, not data volume, once the per-round claim set is bounded.
 """
 
 from __future__ import annotations
@@ -67,9 +69,9 @@ from tripwire_spark.operators.frontier import (
     ST_COMPLETED,
     ST_QUEUED,
     blacklist_regex,
-    build_frontier,
     politeness_schedule,
     seed_decision_log,
+    seeded_frontier,
     settle,
 )
 from tripwire_spark.operators.seen import SeenState
@@ -216,9 +218,7 @@ def discover(
     parent host is derived here (standalone/test use).
     """
     bl = blacklist_regex(patterns)
-    scored = links.withColumn("curl", resolve_canonicalize("parent_url", "href")).filter(
-        F.col("curl").isNotNull()
-    )
+    scored = links.withColumn("curl", resolve_canonicalize("parent_url", "href"))
     if "phost" not in links.columns:
         scored = scored.withColumn("phost", reg_domain(url_host("parent_url")))
     scored = scored.withColumn(
@@ -231,11 +231,17 @@ def discover(
         scored = scored.withColumn("__clicked", F.lit(None).cast("boolean"))
     scored = scored.select("parent_qid", "pos", "curl", "weight", "__ck", "__clicked")
     if caches is not None:
-        # The canonicalization UDF chain runs once per link: the decision
-        # log below and the admit candidates (whose two readers are the
+        # The canonicalization UDF runs once per link: the decision log
+        # below and the admit candidates (whose two readers are the
         # touched-bucket broadcast and the cogroup) all read this cache.
         scored = scored.persist()
         caches.append(scored)
+    # Unresolvable links drop ABOVE the cache: a filter on `curl` under
+    # it would be pushed below the projection with the UDF inlined into
+    # its condition, and the cached plan would run the canonicalizer
+    # twice per link (one ArrowEvalPython for the filter, one for the
+    # column).
+    scored = scored.filter(F.col("curl").isNotNull())
     # Decision log for every candidate (S9).
     decisions = scored.withColumn(
         "decision",
@@ -408,6 +414,16 @@ def _check_seen_buckets(summary: dict, bloom_buckets: int) -> None:
             f"this crawl {bloom_buckets}; resume with the bloom_buckets it was "
             "written under"
         )
+
+
+def _release(frame: DataFrame) -> None:
+    """Drop what ``frame`` pins.  A local checkpoint's RDD is not in the
+    cache manager, so ``unpersist()`` alone leaves it pinned; its
+    analyzed plan is the ``LogicalRDD`` over that RDD."""
+    frame.unpersist()
+    plan = frame._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _keeps_job_description(crawl):
@@ -600,21 +616,27 @@ def run_crawl(
         if last.get("claimed") is not None:
             prev_claimed = int(last["claimed"])
     else:
-        describe("round 0: seeded frontier commit")
-        tables["frontier"].commit(
-            build_frontier(seeds, patterns, vid=vid), {"round": 0, "stage": "seeded"}
-        )
-        describe("round 0: seeded decision_log commit")
-        tables["decision_log"].commit(
-            seed_decision_log(seeds, patterns).select(
-                F.lit(0).alias("round"),
-                F.col("file_order").alias("parent_qid"),
-                F.col("url").alias("curl"),
-                F.lit(0.0).alias("weight"),
-                "decision",
-            ),
-            {"round": 0},
-        )
+        # One canonicalized seed frame feeds both round-0 tables: the
+        # frontier is its queued lines, the decision log all of them.
+        seed_log = seed_decision_log(seeds, patterns).persist()
+        try:
+            describe("round 0: seeded frontier commit")
+            tables["frontier"].commit(
+                seeded_frontier(seed_log, vid=vid), {"round": 0, "stage": "seeded"}
+            )
+            describe("round 0: seeded decision_log commit")
+            tables["decision_log"].commit(
+                seed_log.select(
+                    F.lit(0).alias("round"),
+                    F.col("file_order").alias("parent_qid"),
+                    F.col("url").alias("curl"),
+                    F.lit(0.0).alias("weight"),
+                    "decision",
+                ),
+                {"round": 0},
+            )
+        finally:
+            seed_log.unpersist()
         # Read back what was committed: the seen init and round 1's
         # claim and settle scan the table instead of each re-running the
         # seed canonicalization and dedup.
@@ -666,197 +688,199 @@ def run_crawl(
             budget_cap=budget_cap,
         )
         claimed = claimed.persist()
-        # every frame the round pins; all are dropped when it ends
+        # every frame the round pins; all are dropped when it ends,
+        # also when it raises
         round_caches = [claimed]
-        if identities is not None:
-            # Sticky identity claim: mapped hosts reuse, new hosts take
-            # the lowest free iid (first-claim-wins; get_iid analog).
-            from tripwire_spark.operators.identity import sticky_assignments
+        try:
+            if identities is not None:
+                # Sticky identity claim: mapped hosts reuse, new hosts take
+                # the lowest free iid (first-claim-wins; get_iid analog).
+                from tripwire_spark.operators.identity import sticky_assignments
 
-            assignments = sticky_assignments(
-                claimed.select("host"), assignments, identities
-            ).persist()
-            round_caches.append(assignments)
-        # D2 state at CLAIM time (pagefinder.js:277-279: links_clicked
-        # records actual clicks): the ck of every row claimed in an
-        # earlier round (settle leaves it completed or with try > 0) or
-        # in this one, so this round's candidates are already suppressed
-        # by it; admitted-but-never-claimed links suppress nothing.
-        # Round 1 claims from the seeded frontier, whose ck is NULL
-        # (build_frontier), so its probe is provably empty and skipped.
-        clicked = None
-        if r > 1:
-            clicked = (
-                state.frontier.filter((F.col("status") == ST_COMPLETED) | (F.col("try") > 0))
-                .select("ck")
-                .unionByName(claimed.select("ck"))
-                .filter(F.col("ck").isNotNull())
+                assignments = sticky_assignments(
+                    claimed.select("host"), assignments, identities
+                ).persist()
+                round_caches.append(assignments)
+            # D2 state at CLAIM time (pagefinder.js:277-279: links_clicked
+            # records actual clicks): the ck of every row claimed in an
+            # earlier round (settle leaves it completed or with try > 0) or
+            # in this one, so this round's candidates are already suppressed
+            # by it; admitted-but-never-claimed links suppress nothing.
+            # Round 1 claims from the seeded frontier, whose ck is NULL
+            # (seeded_frontier), so its probe is provably empty and skipped.
+            clicked = None
+            if r > 1:
+                clicked = (
+                    state.frontier.filter((F.col("status") == ST_COMPLETED) | (F.col("try") > 0))
+                    .select("ck")
+                    .unionByName(claimed.select("ck"))
+                    .filter(F.col("ck").isNotNull())
+                )
+            # Fetch-join switchover (round-3 3x experiment, BASELINE.md):
+            # the driver-built claimed-set broadcast is per-round SERIAL
+            # time growing with budget x hosts; past fetch_join_threshold
+            # claimed rows the distributed shuffle_hash build wins.  "auto"
+            # decides from the PREVIOUS round's claimed count — a number the
+            # loop already has — so the auto path runs the exact same driver
+            # actions as a fixed strategy (round-4 ADVICE: the dedicated
+            # claimed.count() here was itself a serial-constant term).
+            # Round 1 (prev_claimed None) broadcasts: the seed round's claim
+            # set is the seed list (docstring).  A resumed crawl starts from
+            # the last committed round's count.
+            strategy = fetch_join
+            if fetch_join == "auto":
+                strategy = (
+                    "shuffle_hash"
+                    if prev_claimed is not None and prev_claimed > fetch_join_threshold
+                    else "broadcast"
+                )
+            # parsed is the round's single most expensive computation (the
+            # html parse).  An ordinary persist() is NOT enough: the
+            # commits' concurrent AQE jobs race on lazy-cache blocks and can
+            # each re-run the parse (event-log profiling showed the full
+            # pages scan + parse executing twice per round).  Eager
+            # localCheckpoint runs the parse exactly once and hands every
+            # consumer the same RDD blocks by identity — no plan-matching,
+            # no race.  The plan is built first and the description set just
+            # before the action, so the description names exactly its jobs.
+            parsed = fetch_extract(claimed, pages, join=strategy)
+            describe(f"round {r}: fetch+extract checkpoint")
+            parsed = parsed.localCheckpoint(eager=True)
+            round_caches.append(parsed)
+            # Drain probe AFTER the parse, on the claimed cache the parse
+            # materialized (no extra politeness evaluation up front); its
+            # number also feeds next round's fetch_join='auto' pick and the
+            # round's record.  A drained round commits nothing.
+            describe(f"round {r}: drain count")
+            n_claimed = claimed.count()
+            if n_claimed == 0:
+                break
+            prev_claimed = n_claimed
+            # Miss detection follows the same size logic: the parsed-keys
+            # side is O(claimed), so its broadcast outgrows a shuffle at the
+            # same threshold the fetch join does.  (qid, round_added) is the
+            # frontier's unique key — qid alone can collide between a seed
+            # (file_order) and a discovery (url_hash).
+            anti_keys = parsed.select("qid", "round_added")
+            if strategy == "broadcast":
+                anti_keys = F.broadcast(anti_keys)
+            misses = claimed.join(anti_keys, ["qid", "round_added"], "left_anti")
+            fetched_meta = parsed.select(
+                "qid", "round_added", "url", "host", "try", F.lit(True).alias("found")
+            ).unionByName(
+                misses.select(
+                    "qid", "round_added", "url", "host", "try", F.lit(False).alias("found")
+                )
             )
-        # Fetch-join switchover (round-3 3x experiment, BASELINE.md):
-        # the driver-built claimed-set broadcast is per-round SERIAL
-        # time growing with budget x hosts; past fetch_join_threshold
-        # claimed rows the distributed shuffle_hash build wins.  "auto"
-        # decides from the PREVIOUS round's claimed count — a number the
-        # loop already has — so the auto path runs the exact same driver
-        # actions as a fixed strategy (round-4 ADVICE: the dedicated
-        # claimed.count() here was itself a serial-constant term).
-        # Round 1 (prev_claimed None) broadcasts: the seed round's claim
-        # set is the seed list (docstring).  A resumed crawl starts from
-        # the last committed round's count.
-        strategy = fetch_join
-        if fetch_join == "auto":
-            strategy = (
-                "shuffle_hash"
-                if prev_claimed is not None and prev_claimed > fetch_join_threshold
-                else "broadcast"
+            round_results = parsed.select(
+                "qid", "url", F.col("p.text").alias("text"), "lang", "warc_ts"
             )
-        # parsed is the round's single most expensive computation (the
-        # html parse).  An ordinary persist() is NOT enough: the
-        # commits' concurrent AQE jobs race on lazy-cache blocks and can
-        # each re-run the parse (event-log profiling showed the full
-        # pages scan + parse executing twice per round).  Eager
-        # localCheckpoint runs the parse exactly once and hands every
-        # consumer the same RDD blocks by identity — no plan-matching,
-        # no race.  The plan is built first and the description set just
-        # before the action, so the description names exactly its jobs.
-        parsed = fetch_extract(claimed, pages, join=strategy)
-        describe(f"round {r}: fetch+extract checkpoint")
-        parsed = parsed.localCheckpoint(eager=True)
-        round_caches.append(parsed)
-        # Drain probe AFTER the parse, on the claimed cache the parse
-        # materialized (no extra politeness evaluation up front); its
-        # number also feeds next round's fetch_join='auto' pick and the
-        # round's record.  A drained round commits nothing.
-        describe(f"round {r}: drain count")
-        n_claimed = claimed.count()
-        if n_claimed == 0:
+            # F10: abort the link walk on google/facebook pages — their
+            # links never become candidates (pagefinder.js:159-176,200-203).
+            # phost rides along from the frontier row (already the reg
+            # domain) so D2 never recomputes it per link.
+            links = parsed.filter(~F.col("url").rlike(PAGE_GUARD)).select(
+                F.col("qid").alias("parent_qid"),
+                F.col("url").alias("parent_url"),
+                F.col("host").alias("phost"),
+                F.explode("p.links").alias("l"),
+            ).select(
+                "parent_qid",
+                "parent_url",
+                "phost",
+                F.col("l.href").alias("href"),
+                F.col("l.text").alias("anchor_text"),
+                F.col("l.pos").alias("pos"),
+            )
+            new_rows, link_decisions, state_delta = discover(
+                links, patterns, round_no=r, seen_state=seen_svc, state=seen_base,
+                vid=vid, caches=round_caches, clicked=clicked, trap_limit=trap_limit,
+                state_deltas=seen_deltas,
+            )
+            # new_rows feeds the settled frontier (and the snapshot commit);
+            # pin it so its seen-state lineage isn't re-evaluated per consumer.
+            new_rows = new_rows.persist()
+            round_caches.append(new_rows)
+
+            # round_added rides along so log rows share the frontier's
+            # compound (qid, round_added) key — qid alone can collide
+            # between a seed (file_order) and a discovery (url_hash).
+            log = fetched_meta.select(
+                "qid",
+                "round_added",
+                "url",
+                "host",
+                F.lit(r).alias("round"),
+                F.col("found"),
+                F.when(F.col("found"), F.lit(0)).otherwise(F.lit(404)).alias("errno"),
+                F.spark_partition_id().alias("partition_id"),
+            )
+
+            settled = settle(
+                state.frontier,
+                fetched_meta.select("qid", "round_added", "try", "found"),
+                new_urls=new_rows,
+                disabled=disabled,
+            )
+
+            # Mutating tables (frontier, assignments) rewrite; every
+            # append-only table commits ONLY this round's delta (the Iceberg
+            # fast-append) and is re-read as the file union — per-round
+            # commit cost is O(round delta), not O(table).
+            summary = {"round": r, "claimed": n_claimed}
+            describe(f"round {r}: frontier commit (admit+settle)")
+            tables["frontier"].commit(settled, summary)
+            describe(f"round {r}: results append")
+            tables["results"].commit_append(round_results, summary)
+            describe(f"round {r}: fetch_log append")
+            tables["fetch_log"].commit_append(log, summary)
+            describe(f"round {r}: decision_log append")
+            tables["decision_log"].commit_append(link_decisions, summary)
+            if assignments is not None:
+                describe(f"round {r}: assignments commit")
+                tables["assignments"].commit(assignments, summary)
+                assignments = tables["assignments"].read()
+            describe(f"round {r}: seen_sketch append")
+            tables["seen_sketch"].commit_append(state_delta, {**summary, **seen_summary})
+            if r % compact_every == 0:
+                # Lazy maintenance: merge each bucket's segments into one
+                # (full rewrite, amortized O(total/K) per round),
+                # re-landing in the bucketed layout.
+                describe(f"round {r}: seen_sketch compaction")
+                tables["seen_sketch"].commit(
+                    seen_svc.compact(tables["seen_sketch"].read()),
+                    {"round": r, "stage": "compacted", **seen_summary},
+                )
+            # Next round reads the (possibly just-recompacted) bucketed
+            # base + the small parquet deltas on top — lazy, disk-backed,
+            # and SPLIT so admit can keep the base's bytes out of every
+            # exchange.
+            describe(f"round {r}: read back")
+            seen_base = tables["seen_sketch"].read_base()
+            seen_deltas = tables["seen_sketch"].read_deltas()
+            state.frontier = tables["frontier"].read()
+            state.results = tables["results"].read()
+            state.fetch_log = tables["fetch_log"].read()
+            state.decision_log = tables["decision_log"].read()
+            state.rounds_run = r
+
+            record = dict(summary)
+            if backpressure:
+                # T8: gate next round's claim budget on this round's health
+                # (the count reads the round's parse — no recompute).
+                describe(f"round {r}: backpressure count")
+                n_ok = parsed.count()
+                miss = 1.0 - n_ok / n_claimed
+                budget_cap = (
+                    max(1, default_budget // 2) if miss > BACKPRESSURE_MISS_RATE else None
+                )
+                record.update(
+                    fetched=n_ok, miss_rate=round(miss, 4), budget_cap_next=budget_cap
+                )
+            state.metrics.append(record)
+        finally:
             for c in round_caches:
-                c.unpersist()
-            break
-        prev_claimed = n_claimed
-        # Miss detection follows the same size logic: the parsed-keys
-        # side is O(claimed), so its broadcast outgrows a shuffle at the
-        # same threshold the fetch join does.  (qid, round_added) is the
-        # frontier's unique key — qid alone can collide between a seed
-        # (file_order) and a discovery (url_hash).
-        anti_keys = parsed.select("qid", "round_added")
-        if strategy == "broadcast":
-            anti_keys = F.broadcast(anti_keys)
-        misses = claimed.join(anti_keys, ["qid", "round_added"], "left_anti")
-        fetched_meta = parsed.select(
-            "qid", "round_added", "url", "host", "try", F.lit(True).alias("found")
-        ).unionByName(
-            misses.select("qid", "round_added", "url", "host", "try", F.lit(False).alias("found"))
-        )
-        round_results = parsed.select(
-            "qid", "url", F.col("p.text").alias("text"), "lang", "warc_ts"
-        )
-        # F10: abort the link walk on google/facebook pages — their
-        # links never become candidates (pagefinder.js:159-176,200-203).
-        # phost rides along from the frontier row (already the reg
-        # domain) so D2 never recomputes it per link.
-        links = parsed.filter(~F.col("url").rlike(PAGE_GUARD)).select(
-            F.col("qid").alias("parent_qid"),
-            F.col("url").alias("parent_url"),
-            F.col("host").alias("phost"),
-            F.explode("p.links").alias("l"),
-        ).select(
-            "parent_qid",
-            "parent_url",
-            "phost",
-            F.col("l.href").alias("href"),
-            F.col("l.text").alias("anchor_text"),
-            F.col("l.pos").alias("pos"),
-        )
-        new_rows, link_decisions, state_delta = discover(
-            links, patterns, round_no=r, seen_state=seen_svc, state=seen_base,
-            vid=vid, caches=round_caches, clicked=clicked, trap_limit=trap_limit,
-            state_deltas=seen_deltas,
-        )
-        # new_rows feeds the settled frontier (and the snapshot commit);
-        # pin it so its seen-state lineage isn't re-evaluated per consumer.
-        new_rows = new_rows.persist()
-        round_caches.append(new_rows)
-
-        # round_added rides along so log rows share the frontier's
-        # compound (qid, round_added) key — qid alone can collide
-        # between a seed (file_order) and a discovery (url_hash).
-        log = fetched_meta.select(
-            "qid",
-            "round_added",
-            "url",
-            "host",
-            F.lit(r).alias("round"),
-            F.col("found"),
-            F.when(F.col("found"), F.lit(0)).otherwise(F.lit(404)).alias("errno"),
-            F.spark_partition_id().alias("partition_id"),
-        )
-
-        settled = settle(
-            state.frontier,
-            fetched_meta.select("qid", "round_added", "try", "found"),
-            new_urls=new_rows,
-            disabled=disabled,
-        )
-
-        # Mutating tables (frontier, assignments) rewrite; every
-        # append-only table commits ONLY this round's delta (the Iceberg
-        # fast-append) and is re-read as the file union — per-round
-        # commit cost is O(round delta), not O(table).
-        summary = {"round": r, "claimed": n_claimed}
-        describe(f"round {r}: frontier commit (admit+settle)")
-        tables["frontier"].commit(settled, summary)
-        describe(f"round {r}: results append")
-        tables["results"].commit_append(round_results, summary)
-        describe(f"round {r}: fetch_log append")
-        tables["fetch_log"].commit_append(log, summary)
-        describe(f"round {r}: decision_log append")
-        tables["decision_log"].commit_append(link_decisions, summary)
-        if assignments is not None:
-            describe(f"round {r}: assignments commit")
-            tables["assignments"].commit(assignments, summary)
-            assignments = tables["assignments"].read()
-        describe(f"round {r}: seen_sketch append")
-        tables["seen_sketch"].commit_append(state_delta, {**summary, **seen_summary})
-        if r % compact_every == 0:
-            # Lazy maintenance: merge each bucket's segments into one
-            # (full rewrite, amortized O(total/K) per round),
-            # re-landing in the bucketed layout.
-            describe(f"round {r}: seen_sketch compaction")
-            tables["seen_sketch"].commit(
-                seen_svc.compact(tables["seen_sketch"].read()),
-                {"round": r, "stage": "compacted", **seen_summary},
-            )
-        # Next round reads the (possibly just-recompacted) bucketed
-        # base + the small parquet deltas on top — lazy, disk-backed,
-        # and SPLIT so admit can keep the base's bytes out of every
-        # exchange.
-        describe(f"round {r}: read back")
-        seen_base = tables["seen_sketch"].read_base()
-        seen_deltas = tables["seen_sketch"].read_deltas()
-        state.frontier = tables["frontier"].read()
-        state.results = tables["results"].read()
-        state.fetch_log = tables["fetch_log"].read()
-        state.decision_log = tables["decision_log"].read()
-        state.rounds_run = r
-
-        record = dict(summary)
-        if backpressure:
-            # T8: gate next round's claim budget on this round's health
-            # (the count reads the round's parse — no recompute).
-            describe(f"round {r}: backpressure count")
-            n_ok = parsed.count()
-            miss = 1.0 - n_ok / n_claimed
-            budget_cap = (
-                max(1, default_budget // 2) if miss > BACKPRESSURE_MISS_RATE else None
-            )
-            record.update(
-                fetched=n_ok, miss_rate=round(miss, 4), budget_cap_next=budget_cap
-            )
-        state.metrics.append(record)
-
-        for c in round_caches:
-            c.unpersist()
+                _release(c)
 
     state.assignments = assignments
     return state

@@ -69,24 +69,44 @@ def blacklist_regex(patterns: list[str]) -> str:
     return "(?i)(" + "|".join(patterns) + ")"
 
 
-def build_frontier(seeds: DataFrame, patterns: list[str], vid: int = 1, queue: str = "default") -> DataFrame:
-    """Seed CSV -> frontier rows (queue_sites:89-141 replayed as one job).
+def seed_decision_log(seeds: DataFrame, patterns: list[str]) -> DataFrame:
+    """S9: why each seed line was queued/skipped (queue_decision_log,
+    schema.sql:2042-2055; inserts at queue_sites:122-135).
+
+    The one canonicalized seed frame: every seed line with its canonical
+    url ``curl`` and its ``decision``; the seeded frontier is its
+    ``queued`` rows (``seeded_frontier``).  As in queue_sites the
+    blacklist is checked first (:112-113), then the dedup (:117-127): a
+    line is a duplicate only of an EARLIER valid, non-blacklisted line
+    with the same canonical url, so "queued" is exactly the set of
+    frontier rows.  Each seed url is canonicalized once (the Python UDF
+    sits under the window, never under a filter Catalyst could copy it
+    into)."""
+    blocked = F.col("url").rlike(blacklist_regex(patterns))
+    canon = seeds.withColumn("curl", canonicalize_url("url")).withColumn("__bl", blocked)
+    w = Window.partitionBy("__bl", "curl").orderBy("file_order")
+    return canon.withColumn("__rn", F.row_number().over(w)).select(
+        *seeds.columns,
+        "curl",
+        F.when(F.col("__bl"), F.lit("skipped-blacklist"))
+        .when(F.col("curl").isNull(), F.lit("skipped-invalid"))
+        .when(F.col("__rn") > 1, F.lit("skipped-duplicate"))
+        .otherwise(F.lit("queued"))
+        .alias("decision"),
+    )
+
+
+def seeded_frontier(seed_log: DataFrame, vid: int = 1, queue: str = "default") -> DataFrame:
+    """Frontier rows of a ``seed_decision_log`` frame: its queued lines.
 
     qid = seed ``file_order`` — sparse but monotone in file order, which
     preserves the reference's serial-insert FIFO *order relation*
     without a global row_number (scales to 10^10 seeds).
     Duplicate canonical URLs keep the first occurrence (min file_order),
-    matching insert-then-skip semantics.
+    matching insert-then-skip semantics.  A queued line's ``curl`` is
+    never NULL (xxhash64(NULL) = seed: never hash nulls).
     """
-    bl = blacklist_regex(patterns)
-    canon = (
-        seeds.filter(~F.col("url").rlike(bl))
-        .withColumn("curl", canonicalize_url("url"))
-        .filter(F.col("curl").isNotNull())  # xxhash64(NULL)=seed, never hash nulls
-    )
-    w = Window.partitionBy("curl").orderBy("file_order")
-    first = canon.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-    return first.select(
+    return seed_log.filter(F.col("decision") == "queued").select(
         F.col("file_order").alias("qid"),
         F.col("curl").alias("url"),
         url_hash("curl").alias("url_hash"),
@@ -102,24 +122,12 @@ def build_frontier(seeds: DataFrame, patterns: list[str], vid: int = 1, queue: s
     )
 
 
-def seed_decision_log(seeds: DataFrame, patterns: list[str]) -> DataFrame:
-    """S9: why each seed line was queued/skipped (queue_decision_log,
-    schema.sql:2042-2055; inserts at queue_sites:122-135)."""
-    bl = blacklist_regex(patterns)
-    canon = seeds.withColumn("curl", canonicalize_url("url"))
-    w = Window.partitionBy("curl").orderBy("file_order")
-    return (
-        canon.withColumn("__rn", F.row_number().over(w))
-        .select(
-            "file_order",
-            "url",
-            F.when(F.col("url").rlike(bl), F.lit("skipped-blacklist"))
-            .when(F.col("curl").isNull(), F.lit("skipped-invalid"))
-            .when(F.col("__rn") > 1, F.lit("skipped-duplicate"))
-            .otherwise(F.lit("queued"))
-            .alias("decision"),
-        )
-    )
+def build_frontier(seeds: DataFrame, patterns: list[str], vid: int = 1, queue: str = "default") -> DataFrame:
+    """Seed CSV -> frontier rows (queue_sites:89-141 replayed as one
+    job): ``seeded_frontier(seed_decision_log(seeds, patterns))``.
+    ``run_crawl`` persists the decision frame once and commits both the
+    frontier and the decision log from it."""
+    return seeded_frontier(seed_decision_log(seeds, patterns), vid=vid, queue=queue)
 
 
 def politeness_schedule(

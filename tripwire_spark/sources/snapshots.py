@@ -14,6 +14,10 @@ its contract the engine relies on over plain Parquet:
 - **time travel / resume**: ``read(snapshot_id)`` or latest.
 - **relocatable**: a manifest names its data dirs relative to the table
   directory, so a checkpoint directory can be copied or moved whole.
+- **schema in the manifest**: every commit records the schema of what it
+  wrote, and reads pass it to Spark, so a read runs no schema-inference
+  (footer-reading) job; a manifest written before schemas were recorded
+  still reads through inference.
 
 If real Iceberg is on the classpath (``iceberg_available()`` probes the
 JVM), the ``IcebergSnapshotTable`` subclass delegates data storage to
@@ -34,6 +38,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -177,6 +182,7 @@ class SnapshotTable:
             "op": "overwrite",
             "ts": time.time(),
             "summary": summary or {},
+            "schema": df.schema.jsonValue(),
             "files": files,
             "added_rows": sum(f["rows"] for f in files),
             "added_bytes": sum(f["bytes"] for f in files),
@@ -209,6 +215,7 @@ class SnapshotTable:
                 "op": "append",
                 "ts": time.time(),
                 "summary": summary or {},
+                "schema": delta.schema.jsonValue(),
                 # lineage stats cover only the ADDED files — O(delta)
                 # footer reads per fast-append, like an Iceberg manifest
                 "files": files,
@@ -241,11 +248,24 @@ class SnapshotTable:
             )
         return self.spark.table(tbl)
 
+    def _read_parquet(self, data_dirs: list[str]) -> DataFrame:
+        """Parquet read of snapshot data dirs under the schema recorded by
+        the commit that wrote the first of them — the footer Spark's
+        inference would read, in a job of its own.  Without a recorded
+        schema (an older manifest) Spark infers it."""
+        writer = next(
+            (s for s in self.snapshots() if self._data_dirs(s)[-1] == data_dirs[0]), {}
+        )
+        reader = self.spark.read
+        if "schema" in writer:
+            reader = reader.schema(StructType.fromJson(writer["schema"]))
+        return reader.parquet(*data_dirs)
+
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         snap = self._select(snapshot_id)
         if snap.get("bucket") and snap["op"] == "overwrite":
             return self._read_bucketed(snap)
-        return self.spark.read.parquet(*self._data_dirs(snap))
+        return self._read_parquet(self._data_dirs(snap))
 
     def _base_of(self, snap: dict) -> dict:
         """Most recent FULL snapshot at-or-before ``snap`` (every chain
@@ -263,7 +283,7 @@ class SnapshotTable:
         snap = self._base_of(self._select(snapshot_id))
         if snap.get("bucket"):
             return self._read_bucketed(snap)
-        return self.spark.read.parquet(*self._data_dirs(snap))
+        return self._read_parquet(self._data_dirs(snap))
 
     def read_deltas(self, snapshot_id: int | None = None) -> DataFrame | None:
         """The append deltas on top of ``read_base()`` (None when the
@@ -274,7 +294,7 @@ class SnapshotTable:
         delta_paths = [p for p in self._data_dirs(snap) if p not in base_paths]
         if not delta_paths:
             return None
-        return self.spark.read.parquet(*delta_paths)
+        return self._read_parquet(delta_paths)
 
     def lineage(self) -> DataFrame:
         """Per-partition lineage as a queryable DataFrame: one row per
