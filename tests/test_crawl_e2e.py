@@ -218,16 +218,16 @@ def test_crawl_deterministic_across_runs(spark, fixture_tables):
     assert rows_a == rows_b
 
 
-def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
+def test_crawl_fetch_join_strategies_identical(spark, fixture_tables, monkeypatch):
     """fetch_join='shuffle_hash' (the past-10^8-claimed switchover) and
     fetch_join='auto' must produce the exact broadcast frontier — the
     flag trades plan shape, never results."""
-    from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.operators import crawl
 
     pages, seeds, robots = fixture_tables
 
     def rows(**kw):
-        st = run_crawl(
+        st = crawl.run_crawl(
             spark, seeds, pages, robots, BLACKLIST_PATTERNS,
             max_rounds=2, default_budget=2, **kw,
         )
@@ -240,7 +240,9 @@ def test_crawl_fetch_join_strategies_identical(spark, fixture_tables):
     # auto re-resolves per ROUND from the prior round's claimed count:
     # threshold=1 flips fetch to shuffle_hash from round 2 on (round 1
     # has no prior-round number and broadcasts)
-    assert rows(fetch_join="auto", fetch_join_threshold=1) == base
+    with monkeypatch.context() as m:
+        m.setattr(crawl, "FETCH_JOIN_THRESHOLD", 1)
+        assert rows(fetch_join="auto") == base
     assert rows(fetch_join="auto") == base  # stays broadcast at this scale
 
 
@@ -567,8 +569,10 @@ def test_resume_bucket_check_runs_no_spark_job(spark, fixture_tables, tmp_path):
     """The resume check of the seen-state bucket count reads the
     seen-sketch manifest only: a resume under another ``bloom_buckets``
     fails before any Spark job runs, and so does a resume of a
-    checkpoint whose commits recorded no count."""
+    checkpoint whose commits recorded no count, or of one that still
+    holds a ``results`` table (its fetch log rows carry no page text)."""
     from tripwire_spark.operators.crawl import run_crawl
+    from tripwire_spark.sources.snapshots import SnapshotTable
 
     pages, seeds, robots = fixture_tables
     sc = spark.sparkContext
@@ -598,6 +602,11 @@ def test_resume_bucket_check_runs_no_spark_job(spark, fixture_tables, tmp_path):
         del snap["summary"]["buckets"]
     manifest.write_text(json.dumps(man))
     assert resume_jobs("bucketcheck-unrecorded", 8, "records no bucket count") == []
+    SnapshotTable(spark, str(ck), "results").commit(
+        spark.createDataFrame([(1, "http://a.test/", "text")], "qid long, url string, text string"),
+        {"round": 1},
+    )
+    assert resume_jobs("bucketcheck-results", 8, "results table") == []
 
 
 def test_validate_url_hash_contract(spark, fixture_tables):
@@ -670,10 +679,11 @@ def test_resume_fetch_join_auto_starts_from_last_claimed(
         return real(claimed, pages, join=join)
 
     monkeypatch.setattr(crawl, "fetch_extract", spy)
+    monkeypatch.setattr(crawl, "FETCH_JOIN_THRESHOLD", 1)
     crawl.run_crawl(
         spark, seeds, pages, robots, BLACKLIST_PATTERNS,
         max_rounds=2, default_budget=2, checkpoint_dir=ck, resume=True,
-        fetch_join="auto", fetch_join_threshold=1,
+        fetch_join="auto",
     )
     assert joins == ["shuffle_hash"]
 
@@ -706,19 +716,17 @@ def test_fetch_auto_adds_no_driver_actions(spark, fixture_tables):
     assert abs(a - b) <= 1, (a, b)
 
 
-def _plan_node_names(plan, stop_at: tuple[str, ...] = ()) -> list[str]:
+def _plan_node_names(plan) -> list[str]:
     """Operator names of a physical plan: adaptive plans are descended
     into, a cached relation's own plan is not (reading a cache runs none
-    of the operators that built it), nor the subtree of a node named in
-    ``stop_at``."""
+    of the operators that built it)."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return _plan_node_names(plan.executedPlan(), stop_at)
+        return _plan_node_names(plan.executedPlan())
     names = [name]
-    if name not in stop_at:
-        children = plan.children()
-        for i in range(children.size()):
-            names += _plan_node_names(children.apply(i), stop_at)
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_node_names(children.apply(i))
     return names
 
 
@@ -932,8 +940,8 @@ def test_admit_runs_one_wave_over_physical_buckets(spark, fixture_tables, tmp_pa
         next_seg=2, delta_side=table.read_deltas(),
     )
     cogroup = _find_node(out._jdf.queryExecution().executedPlan(), "FlatMapCoGroupsInPandas")
-    # the touched-bucket broadcast below the state side is candidate work
-    state_side = _plan_node_names(cogroup.children().apply(1), stop_at=("BroadcastExchange",))
+    # the state side is the bucketed base scan as stored
+    state_side = _plan_node_names(cogroup.children().apply(1))
     assert "Exchange" not in state_side, state_side  # a shuffle's node name
     assert [n for n in state_side if n.startswith("Scan parquet spark_catalog")], state_side
     assert out.rdd.getNumPartitions() <= slots
@@ -1026,8 +1034,9 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
     (so a caller wrapping ``fetch_extract`` sees its action's jobs under
     that description, not its own).  The caller's description is back
     when the crawl returns or raises.  The crawl commits exactly the
-    frontier, results, fetch_log, decision_log and seen_sketch tables:
-    the clicked-text state is derived from the frontier."""
+    frontier, fetch_log, decision_log and seen_sketch tables: the
+    clicked-text state is derived from the frontier, and the found
+    pages are the fetch log's found rows."""
     import os
 
     from tripwire_spark.operators import crawl
@@ -1064,7 +1073,7 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
     finally:
         sc.setJobGroup("phase-descriptions-other", "other")
     assert sorted(os.listdir(st.scratch_dir)) == [
-        "decision_log", "fetch_log", "frontier", "results", "seen_sketch",
+        "decision_log", "fetch_log", "frontier", "seen_sketch",
     ]
     st.release()
     assert at_build and not [d for d in at_build if d and d.endswith("fetch+extract checkpoint")]
@@ -1077,12 +1086,12 @@ def test_round_jobs_carry_phase_descriptions(spark, fixture_tables, monkeypatch)
     expected = {
         "round 0: seeded frontier commit", "round 0: seen-state init commit",
         "round 1: fetch+extract checkpoint", "round 1: drain count",
-        "round 1: frontier commit (admit+settle)", "round 1: results append",
+        "round 1: frontier commit (admit+settle)",
         "round 1: fetch_log append", "round 1: decision_log append",
         "round 1: seen_sketch append",
     }
     assert expected <= descs, expected - descs
-    assert not [d for d in descs if d and "clicked" in d], descs
+    assert not [d for d in descs if d and ("clicked" in d or "results" in d)], descs
 
 
 def test_seen_sketch_segment_bound(spark, tmp_path):

@@ -127,7 +127,7 @@ def test_sticky_identity_assignment_in_crawl(spark, tmp_path):
     )
     # the only crawl that commits an assignments table
     assert sorted(p.name for p in ck.iterdir()) == [
-        "assignments", "decision_log", "fetch_log", "frontier", "results", "seen_sketch",
+        "assignments", "decision_log", "fetch_log", "frontier", "seen_sketch",
     ]
     rows = state.assignments.collect()
     by_host = {}

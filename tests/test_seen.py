@@ -1,6 +1,7 @@
 """Seen-state properties: the per-bucket admit kernel against a Python
-model, O(new) delta segments, touched-bucket pruning, the bucketed base
-with candidate-side deltas, and compaction (SURVEY.md §5.4)."""
+model, O(new) delta segments, byte-identical untouched buckets, the
+bucketed base with candidate-side deltas, and compaction (SURVEY.md
+§5.4)."""
 
 from __future__ import annotations
 
@@ -151,9 +152,8 @@ def test_seen_state_admit_emits_only_delta_segments(spark):
 
 
 def test_seen_state_untouched_buckets_byte_identical(spark):
-    """Buckets receiving no candidates contribute zero bytes to the admit
-    shuffle (LeftSemi-pruned) and their stored blobs flow to the next
-    state byte-identical."""
+    """Buckets receiving no candidates emit no delta segment, and their
+    stored blobs flow to the next state byte-identical."""
     from tripwire_spark.operators.seen import SeenState
 
     svc = SeenState(n_buckets=8)
@@ -167,8 +167,6 @@ def test_seen_state_untouched_buckets_byte_identical(spark):
         .persist()
     )
     out = svc.admit(cands, state, hash_col="url_hash", next_seg=1).persist()
-    # the state side of the cogroup is pruned to touched buckets only
-    assert "LeftSemi" in out._jdf.queryExecution().executedPlan().toString()
     _, delta = SeenState.split(out, ["url", "url_hash"])
     nxt = SeenState.advance(state, delta).persist()
     after = {(r.bucket, r.seg): (r.bloom, r.hashes, r.n_items) for r in nxt.collect()}

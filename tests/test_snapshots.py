@@ -240,9 +240,10 @@ def test_snapshot_reads_run_no_spark_job(spark, tmp_path):
     finally:
         sc.setJobGroup("snapshot-reads-other", "other")
     assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
-    # the recorded schema is the one Spark would infer
-    inferred = spark.read.parquet(*log._data_dirs(log._select(None)))
-    assert frames[0].schema == inferred.schema
+    # the recorded schema is the one Spark's schema merge would infer
+    dirs = log._data_dirs(log._select(None))
+    merged = spark.read.option("mergeSchema", True).parquet(*dirs)
+    assert frames[0].schema == merged.schema
     assert frames[0].count() == 150 and frames[1].count() == 100
     assert frames[2].count() == 50 and frames[4].count() == 4
 
@@ -250,5 +251,50 @@ def test_snapshot_reads_run_no_spark_job(spark, tmp_path):
     for s in man["snapshots"]:
         del s["schema"]
     log._write_manifest(man)
-    assert log.read().schema == inferred.schema
+    assert log.read().schema == spark.read.parquet(*dirs).schema
     assert log.read().count() == 150
+
+
+def test_read_uses_the_selected_snapshots_schema(spark, tmp_path):
+    """A snapshot reads under the schema it recorded: a column an append
+    added comes back, NULL on the rows written before it, while time
+    travel to the first snapshot reads its own narrower schema."""
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path), "log")
+    t.commit(_df(spark, 0, 100), {"round": 1})
+    t.commit_append(_df(spark, 100, 150).withColumn("w", F.lit(0.5)), {"round": 2})
+    got = t.read()
+    assert got.columns == ["id", "v", "w"]
+    w = {r["id"]: r["w"] for r in got.collect()}
+    assert len(w) == 150
+    assert all(w[i] is None for i in range(100)) and all(w[i] == 0.5 for i in range(100, 150))
+    assert t.read(1).columns == ["id", "v"]
+    assert t.read_deltas().columns == ["id", "v", "w"]
+    assert t.read_deltas().count() == 50
+
+
+def test_iceberg_table_reads_base_as_whole_table(tmp_path):
+    """An Iceberg table's ledger names no data files, so its base is the
+    whole table at the snapshot and it has no separate deltas: the crawl's
+    seen-state reads (``read_base``/``read_deltas``) go through ``read``.
+    Built over a hand-written ledger with ``read`` stubbed, so no Iceberg
+    runtime is needed."""
+    from tripwire_spark.sources.snapshots import IcebergSnapshotTable
+
+    t = IcebergSnapshotTable.__new__(IcebergSnapshotTable)
+    t.name, t.dir = "seen_sketch", str(tmp_path / "seen_sketch")
+    t.bucket_key = t.bucket_count = None
+    t._manifest_path = os.path.join(t.dir, "manifest.json")
+    os.makedirs(t.dir)
+    ledger = [
+        {"id": 1, "parent": None, "op": "overwrite", "iceberg_snapshot_id": 7001,
+         "ts": 0.0, "summary": {"round": 0, "buckets": 8}},
+        {"id": 2, "parent": 1, "op": "append", "iceberg_snapshot_id": 7002,
+         "ts": 1.0, "summary": {"round": 1, "buckets": 8}},
+    ]
+    t._write_manifest({"table": t.name, "snapshots": ledger})
+    t.read = lambda snapshot_id=None: ("whole table", snapshot_id)
+    assert t.read_base() == ("whole table", None)
+    assert t.read_base(1) == ("whole table", 1)
+    assert t.read_deltas() is None and t.read_deltas(2) is None

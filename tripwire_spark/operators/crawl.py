@@ -11,8 +11,8 @@ instead of one worker claiming one row.
 Per round:
 1. politeness schedule (W2 two-phase salted rank under budget, robots
    filter)
-2. fetch = broadcast(claimed) join pages on url (the pages fact table
-   is never shuffled)
+2. fetch = claimed keys joined to pages on the 64-bit url hash (broadcast
+   keys; both sides hash-exchanged past ``FETCH_JOIN_THRESHOLD`` claims)
 3. extraction: byte-identical text (pageUtils.js:58-61), link + form
    candidates (vectorized pandas UDFs)
 4. link scoring (C18 + D3 combine), blacklist (F1), clicked-text skip
@@ -20,19 +20,20 @@ Per round:
    ONE cogrouped seen-state pass (seen.py SeenState.admit): in-round
    dedup + exact membership + the new delta segment in a single
    shuffle — D7 / F2 analog
-5. settle: status transitions (T2), hash-derived qids for discoveries,
-   fetch_log (S10) + decision_log (S9) appends
-6. snapshot commit per state table (= Iceberg snapshot per round;
-   resume = read latest committed round), and the next round reads its
-   state back from those tables.
+5. settle: status transitions (T2), hash-derived qids for discoveries
+6. four commits (= Iceberg snapshots; resume = read the latest committed
+   round): the frontier rewrite, then the fetch_log (S10, one row per
+   claimed url; a found one carries its page, S7), decision_log (S9) and
+   seen_sketch appends (+ assignments with ``identities``); the next
+   round reads its state back from those tables.
 
 Every crawl commits its rounds to snapshot tables, under
 ``checkpoint_dir`` or, without one, under a private scratch directory
 that ``CrawlState.release()`` deletes.
 
 Driver actions per round: the fetch+extract checkpoint, the drain
-count on the cached claim set, and one write per committed table (the
-admit chain runs inside the frontier commit); each carries its own job
+count on the cached claim set, and the commits of step 6 (the admit
+chain runs inside the frontier commit); each carries its own job
 description ("round r: ..."), so an event log splits a round by phase.
 Task budget: a stage's task count follows its rows.  Only the html
 parse (one task per input split) and the cogroup admit run wide, and
@@ -54,6 +55,7 @@ from __future__ import annotations
 
 import atexit
 import functools
+import os
 import shutil
 import tempfile
 from dataclasses import dataclass, field
@@ -96,6 +98,10 @@ FETCH_COLS = ["qid", "round_added", "try", "url", "host"]
 # when a round misses more than this share of its claimed urls.
 BACKPRESSURE_MISS_RATE = 0.5
 
+# run_crawl(fetch_join="auto") hash-exchanges both fetch-join sides once
+# the previous round claimed more urls than this.
+FETCH_JOIN_THRESHOLD = 100_000_000
+
 
 def fetch_extract(claimed: DataFrame, pages: DataFrame, join: str = "broadcast") -> DataFrame:
     """J11 fetch + single-parse extraction, fused.
@@ -131,9 +137,9 @@ def fetch_extract(claimed: DataFrame, pages: DataFrame, join: str = "broadcast")
     link candidates.  The output is the round's working set: FETCH_COLS
     + (warc_ts, lang, text, links) — crucially WITHOUT the html column,
     so caching it costs ~1% of caching the joined pages.  Every
-    downstream consumer (results, links, fetch log, settle outcomes,
-    miss detection) reads this one skinny cache; the html bytes are
-    touched exactly once per round.
+    downstream consumer (links, the fetch log with its page text,
+    settle outcomes, miss detection) reads this one skinny cache; the
+    html bytes are touched exactly once per round.
     """
     keys = claimed.select("url_hash", "qid", "round_added", "try")
     # A pages table carrying a materialized url_hash column (the
@@ -232,8 +238,7 @@ def discover(
     scored = scored.select("parent_qid", "pos", "curl", "weight", "__ck", "__clicked")
     if caches is not None:
         # The canonicalization UDF runs once per link: the decision log
-        # below and the admit candidates (whose two readers are the
-        # touched-bucket broadcast and the cogroup) all read this cache.
+        # below and the admit candidates both read this cache.
         scored = scored.persist()
         caches.append(scored)
     # Unresolvable links drop ABOVE the cache: a filter on `curl` under
@@ -267,9 +272,8 @@ def discover(
         from tripwire_spark.operators.frontier import filter_url_traps
 
         kept = filter_url_traps(kept, "curl", limit=trap_limit, keep=trap_keep)
-    # Not persisted: both readers of the admit pass (the touched-bucket
-    # broadcast and the cogroup) re-derive these JVM-only filters and
-    # the hash from the cached `scored`.
+    # Not persisted: the admit's cogroup, their one reader, derives
+    # these JVM-only filters and the hash from the cached `scored`.
     cands = kept.select(
         "curl",
         url_hash("curl").alias("url_hash"),
@@ -377,20 +381,27 @@ def _check_url_hash(pages: DataFrame) -> None:
 
 @dataclass
 class CrawlState:
-    """A crawl's state after ``run_crawl``: the frontier, results and
-    logs are lazy reads of its committed snapshot tables.  For a crawl
-    run without ``checkpoint_dir`` they live in ``scratch_dir``, which
-    ``release()`` deletes (or process exit, if nobody calls it); the
-    frames cannot be read after that."""
+    """A crawl's state after ``run_crawl``: the frontier and logs are
+    lazy reads of its committed snapshot tables, and ``results`` is the
+    found rows of the fetch log.  For a crawl run without
+    ``checkpoint_dir`` they live in ``scratch_dir``, which ``release()``
+    deletes (or process exit, if nobody calls it); the frames cannot be
+    read after that."""
 
     frontier: DataFrame
-    results: DataFrame | None = None
     fetch_log: DataFrame | None = None
     decision_log: DataFrame | None = None
     assignments: DataFrame | None = None  # sticky identity<->domain map
     rounds_run: int = 0
     metrics: list[dict] = field(default_factory=list)
     scratch_dir: str | None = None
+
+    @property
+    def results(self) -> DataFrame | None:
+        """The fetched pages (S7), one row per found fetch."""
+        if self.fetch_log is None:
+            return None
+        return self.fetch_log.filter("found").select("qid", "url", "text", "lang", "warc_ts")
 
     def release(self) -> None:
         if self.scratch_dir:
@@ -461,7 +472,6 @@ def run_crawl(
     trap_limit: int | None = None,
     seen_mode: str = "auto",
     fetch_join: str = "broadcast",
-    fetch_join_threshold: int = 100_000_000,
     seen_preload: DataFrame | None = None,
     seen_bucketed: bool = True,
     validate_url_hash: bool = False,
@@ -499,9 +509,12 @@ def run_crawl(
     or ``try > 0``) and of the rows the round claims.
 
     Commit cost per round is O(round delta) for the append-only tables
-    (results, fetch_log, decision_log, seen_sketch — Iceberg
-    fast-appends via ``commit_append``); only the two mutating tables
-    (frontier, assignments) rewrite.  ``compact_every``: every K rounds
+    (fetch_log, decision_log, seen_sketch — Iceberg fast-appends via
+    ``commit_append``); only the two mutating tables (frontier,
+    assignments) rewrite.  A found fetch's ``fetch_log`` row carries its
+    page (``text``, ``lang``, ``warc_ts``; NULL on a miss): a resume
+    refuses a checkpoint that still holds a ``results`` table, before
+    any Spark job.  ``compact_every``: every K rounds
     the segmented seen state is compacted (one merged segment per
     bucket, committed as a full snapshot) — amortized O(total/K)
     maintenance, keeping the per-round admit cost O(new).  So the seen
@@ -538,10 +551,11 @@ def run_crawl(
     value raises ``ValueError``.
 
     ``fetch_join='auto'`` decides each round from the PREVIOUS
-    round's claimed count (round 1 defaults to broadcast — the seed
-    round's claim set is the seed list; pass ``fetch_join=
-    'shuffle_hash'`` explicitly for a 10^9-seed bootstrap).  A resumed
-    crawl reads that count from the last frontier commit's summary.
+    round's claimed count against ``FETCH_JOIN_THRESHOLD`` (round 1
+    defaults to broadcast — the seed round's claim set is the seed
+    list; pass ``fetch_join='shuffle_hash'`` explicitly for a 10^9-seed
+    bootstrap).  A resumed crawl reads that count from the last
+    frontier commit's summary.
 
     ``validate_url_hash``: when the pages table carries a stored
     ``url_hash`` column the fetch join TRUSTS it as the join identity
@@ -560,6 +574,11 @@ def run_crawl(
         raise ValueError(f"seen_bucketed must be True, got {seen_bucketed!r}")
     if resume and not checkpoint_dir:
         raise ValueError("resume=True needs the checkpoint_dir of the crawl it continues")
+    if resume and os.path.exists(os.path.join(checkpoint_dir, "results", "manifest.json")):
+        raise ValueError(
+            "the checkpoint holds a results table, so its fetch_log rows carry no page "
+            "text and a resumed crawl's results would lose those rounds"
+        )
     if validate_url_hash and "url_hash" in pages.columns:
         _check_url_hash(pages)
     scratch_dir = None
@@ -574,7 +593,7 @@ def run_crawl(
     # then runs one wave of that many tasks, each over bloom_buckets/P
     # logical buckets (docstring).
     physical_buckets = min(bloom_buckets, spark.sparkContext.defaultParallelism)
-    names = ["frontier", "results", "fetch_log", "decision_log", "seen_sketch"]
+    names = ["frontier", "fetch_log", "decision_log", "seen_sketch"]
     if identities is not None:
         names.append("assignments")
     tables = {
@@ -603,7 +622,6 @@ def run_crawl(
     if resume and tables["frontier"].latest_id():
         describe("resume: read checkpoint")
         frontier = tables["frontier"].read()
-        results = tables["results"].read() if tables["results"].latest_id() else None
         fetch_log = tables["fetch_log"].read() if tables["fetch_log"].latest_id() else None
         decision_log = tables["decision_log"].read()
         if identities is not None and tables["assignments"].latest_id():
@@ -642,13 +660,9 @@ def run_crawl(
         # seed canonicalization and dedup.
         frontier = tables["frontier"].read()
         decision_log = tables["decision_log"].read()
-        results = None
         fetch_log = None
 
-    state = CrawlState(
-        frontier=frontier, results=results, fetch_log=fetch_log,
-        decision_log=decision_log, scratch_dir=scratch_dir,
-    )
+    state = CrawlState(frontier, fetch_log, decision_log, scratch_dir=scratch_dir)
 
     # Bucket-sharded seen-state (sorted hash segments per bucket):
     # initialized ONCE over the seed frontier (restored from its
@@ -718,7 +732,7 @@ def run_crawl(
                 )
             # Fetch-join switchover (round-3 3x experiment, BASELINE.md):
             # the driver-built claimed-set broadcast is per-round SERIAL
-            # time growing with budget x hosts; past fetch_join_threshold
+            # time growing with budget x hosts; past FETCH_JOIN_THRESHOLD
             # claimed rows the distributed shuffle_hash build wins.  "auto"
             # decides from the PREVIOUS round's claimed count — a number the
             # loop already has — so the auto path runs the exact same driver
@@ -731,7 +745,7 @@ def run_crawl(
             if fetch_join == "auto":
                 strategy = (
                     "shuffle_hash"
-                    if prev_claimed is not None and prev_claimed > fetch_join_threshold
+                    if prev_claimed is not None and prev_claimed > FETCH_JOIN_THRESHOLD
                     else "broadcast"
                 )
             # parsed is the round's single most expensive computation (the
@@ -765,15 +779,15 @@ def run_crawl(
             if strategy == "broadcast":
                 anti_keys = F.broadcast(anti_keys)
             misses = claimed.join(anti_keys, ["qid", "round_added"], "left_anti")
-            fetched_meta = parsed.select(
-                "qid", "round_added", "url", "host", "try", F.lit(True).alias("found")
+            # one row per claimed url: a found one carries its page (S7)
+            fetched = parsed.select(
+                "qid", "round_added", "url", "host", "try", F.lit(True).alias("found"),
+                F.col("p.text").alias("text"), "lang", "warc_ts",
             ).unionByName(
                 misses.select(
                     "qid", "round_added", "url", "host", "try", F.lit(False).alias("found")
-                )
-            )
-            round_results = parsed.select(
-                "qid", "url", F.col("p.text").alias("text"), "lang", "warc_ts"
+                ),
+                allowMissingColumns=True,
             )
             # F10: abort the link walk on google/facebook pages — their
             # links never become candidates (pagefinder.js:159-176,200-203).
@@ -805,20 +819,15 @@ def run_crawl(
             # round_added rides along so log rows share the frontier's
             # compound (qid, round_added) key — qid alone can collide
             # between a seed (file_order) and a discovery (url_hash).
-            log = fetched_meta.select(
-                "qid",
-                "round_added",
-                "url",
-                "host",
-                F.lit(r).alias("round"),
-                F.col("found"),
+            log = fetched.select(
+                "qid", "round_added", "url", "host", F.lit(r).alias("round"), "found",
                 F.when(F.col("found"), F.lit(0)).otherwise(F.lit(404)).alias("errno"),
-                F.spark_partition_id().alias("partition_id"),
+                F.spark_partition_id().alias("partition_id"), "text", "lang", "warc_ts",
             )
 
             settled = settle(
                 state.frontier,
-                fetched_meta.select("qid", "round_added", "try", "found"),
+                fetched.select("qid", "round_added", "try", "found"),
                 new_urls=new_rows,
                 disabled=disabled,
             )
@@ -830,8 +839,6 @@ def run_crawl(
             summary = {"round": r, "claimed": n_claimed}
             describe(f"round {r}: frontier commit (admit+settle)")
             tables["frontier"].commit(settled, summary)
-            describe(f"round {r}: results append")
-            tables["results"].commit_append(round_results, summary)
             describe(f"round {r}: fetch_log append")
             tables["fetch_log"].commit_append(log, summary)
             describe(f"round {r}: decision_log append")
@@ -859,7 +866,6 @@ def run_crawl(
             seen_base = tables["seen_sketch"].read_base()
             seen_deltas = tables["seen_sketch"].read_deltas()
             state.frontier = tables["frontier"].read()
-            state.results = tables["results"].read()
             state.fetch_log = tables["fetch_log"].read()
             state.decision_log = tables["decision_log"].read()
             state.rounds_run = r

@@ -113,11 +113,12 @@ class SeenState:
       never re-emitted through the shuffle or the snapshot commit
       (Iceberg append, not rewrite).  Segment sprawl is bounded by lazy
       ``compact()`` every K rounds — amortized O(total/K) per round.
-    - **state read per round = touched buckets only**: the state side is
-      semi-joined against the candidates' distinct bucket set (at most
-      n_buckets ints, broadcast), so untouched buckets never enter the
-      cogroup and their stored blobs pass to the next snapshot
-      byte-identical (asserted in tests/test_seen.py).
+    - **state read per round = every bucket, written = O(new)**: the
+      cogroup reads the state as it is stored (a bucketed scan reads
+      every file whichever buckets the candidates touch), but a bucket
+      with no candidates emits no delta row, so its stored blobs pass
+      to the next snapshot byte-identical (asserted in
+      tests/test_seen.py).
     - **state bytes in exchanges = zero** when the base is stored
       bucketed on ``bucket`` (snapshot tables with ``bucket_key=
       "bucket"``): the bucketed scan satisfies the cogroup's clustering,
@@ -179,7 +180,7 @@ class SeenState:
         delta (snapshot table).  A crawl loop passes its round number as
         ``next_seg``: monotonic ids are all advance/compact need.
 
-        ``state`` is the cogroup's right side, pruned to touched buckets.
+        ``state`` is the cogroup's right side, read whole.
         ``delta_side``: segments appended since the state's last full
         snapshot.  They are padded to the candidate shape and ride the
         candidate-side exchange, so over a bucketed ``state`` no state
@@ -194,31 +195,17 @@ class SeenState:
         cand_fields = [
             T.StructField(f.name, f.dataType, True) for f in candidates.schema.fields
         ]
+        seg_fields = T.StructType.fromDDL(self.STATE_SCHEMA).fields[1:]  # all nullable
         out_schema = T.StructType(
             [T.StructField("kind", T.IntegerType(), False),
-             T.StructField("bucket", T.IntegerType(), False),
-             T.StructField("seg", T.IntegerType(), True)]
-            + cand_fields
-            + [
-                T.StructField("bloom", T.BinaryType(), True),
-                T.StructField("hashes", T.BinaryType(), True),
-                T.StructField("n_items", T.LongType(), True),
-                T.StructField("m_bits", T.LongType(), True),
-                T.StructField("k", T.IntegerType(), True),
-            ]
+             T.StructField("bucket", T.IntegerType(), False), seg_fields[0]]
+            + cand_fields + seg_fields[1:]
         )
         cand = candidates.withColumn("__bucket", self.bucket_col(F.col(hash_col)))
-        # Touched-bucket pruning: at most n_buckets distinct ints,
-        # broadcast; untouched state rows never enter the cogroup.
-        touched = cand.select(F.col("__bucket").alias("bucket")).distinct()
-        state_in = state.join(F.broadcast(touched), "bucket", "left_semi")
         left = cand
         seg_cols = STATE_COLS[1:]
         if delta_side is not None:
-            null_seg = [
-                F.lit(None).cast(t).alias(c)
-                for c, t in zip(seg_cols, ("int", "binary", "binary", "long", "long", "int"))
-            ]
+            null_seg = [F.lit(None).cast(f.dataType).alias(f.name) for f in seg_fields]
             # EVERY integral candidate column is zero-filled (not NULL) on
             # segment rows: one null in an int64 Arrow column makes pandas
             # deliver the whole column as float64, corrupting the CANDIDATE
@@ -254,7 +241,7 @@ class SeenState:
 
         return (
             left.groupBy("__bucket")
-            .cogroup(state_in.groupBy(F.col("bucket").alias("__bucket")))
+            .cogroup(state.groupBy(F.col("bucket").alias("__bucket")))
             .applyInPandas(step, schema=out_schema)
         )
 

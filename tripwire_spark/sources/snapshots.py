@@ -15,9 +15,10 @@ its contract the engine relies on over plain Parquet:
 - **relocatable**: a manifest names its data dirs relative to the table
   directory, so a checkpoint directory can be copied or moved whole.
 - **schema in the manifest**: every commit records the schema of what it
-  wrote, and reads pass it to Spark, so a read runs no schema-inference
-  (footer-reading) job; a manifest written before schemas were recorded
-  still reads through inference.
+  wrote, and a read of a snapshot passes that snapshot's schema to
+  Spark, so a column a later append added reads NULL on older rows and
+  a read runs no schema-inference (footer-reading) job; a manifest
+  written before schemas were recorded still reads through inference.
 
 If real Iceberg is on the classpath (``iceberg_available()`` probes the
 JVM), the ``IcebergSnapshotTable`` subclass delegates data storage to
@@ -248,24 +249,21 @@ class SnapshotTable:
             )
         return self.spark.table(tbl)
 
-    def _read_parquet(self, data_dirs: list[str]) -> DataFrame:
-        """Parquet read of snapshot data dirs under the schema recorded by
-        the commit that wrote the first of them — the footer Spark's
-        inference would read, in a job of its own.  Without a recorded
-        schema (an older manifest) Spark infers it."""
-        writer = next(
-            (s for s in self.snapshots() if self._data_dirs(s)[-1] == data_dirs[0]), {}
-        )
+    def _read_parquet(self, snap: dict, data_dirs: list[str]) -> DataFrame:
+        """Parquet read of ``data_dirs`` (``snap``'s, or some of them)
+        under the schema ``snap`` recorded: a column an append added reads
+        NULL on the rows written before it.  Without a recorded schema (an
+        older manifest) Spark infers it, in a job of its own."""
         reader = self.spark.read
-        if "schema" in writer:
-            reader = reader.schema(StructType.fromJson(writer["schema"]))
+        if "schema" in snap:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
         return reader.parquet(*data_dirs)
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         snap = self._select(snapshot_id)
         if snap.get("bucket") and snap["op"] == "overwrite":
             return self._read_bucketed(snap)
-        return self._read_parquet(self._data_dirs(snap))
+        return self._read_parquet(snap, self._data_dirs(snap))
 
     def _base_of(self, snap: dict) -> dict:
         """Most recent FULL snapshot at-or-before ``snap`` (every chain
@@ -283,7 +281,7 @@ class SnapshotTable:
         snap = self._base_of(self._select(snapshot_id))
         if snap.get("bucket"):
             return self._read_bucketed(snap)
-        return self._read_parquet(self._data_dirs(snap))
+        return self._read_parquet(snap, self._data_dirs(snap))
 
     def read_deltas(self, snapshot_id: int | None = None) -> DataFrame | None:
         """The append deltas on top of ``read_base()`` (None when the
@@ -294,7 +292,7 @@ class SnapshotTable:
         delta_paths = [p for p in self._data_dirs(snap) if p not in base_paths]
         if not delta_paths:
             return None
-        return self._read_parquet(delta_paths)
+        return self._read_parquet(snap, delta_paths)
 
     def lineage(self) -> DataFrame:
         """Per-partition lineage as a queryable DataFrame: one row per
@@ -447,6 +445,16 @@ class IcebergSnapshotTable(SnapshotTable):
             self.spark.read.option("snapshot-id", snap["iceberg_snapshot_id"])
             .table(self.identifier)
         )
+
+    def read_base(self, snapshot_id: int | None = None) -> DataFrame:
+        """The whole table at the snapshot, appended segments included:
+        the ledger keeps no base/delta file split, and a reader that
+        unions ``read_base()`` with ``read_deltas()`` gets the same rows."""
+        return self.read(snapshot_id)
+
+    def read_deltas(self, snapshot_id: int | None = None) -> DataFrame | None:
+        """None: ``read_base`` already holds every appended row."""
+        return None
 
     def lineage(self) -> DataFrame:
         """Per-file lineage straight from Iceberg's own metadata: the
