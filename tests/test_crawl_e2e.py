@@ -840,6 +840,100 @@ def test_python_udfs_run_once_per_row(spark, fixture_tables, monkeypatch):
         assert set(counts.values()) == {1}, counts
 
 
+def _scanned_paths(plan) -> list[str]:
+    """Root paths of every file scan a physical plan runs: adaptive plans
+    and query stages are descended into, a cached relation's own plan is
+    not (reading a cache scans none of its sources)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _scanned_paths(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _scanned_paths(plan.plan())
+    if name.startswith("Scan parquet"):
+        roots = plan.relation().location().rootPaths()
+        return [roots.apply(i).toString() for i in range(roots.size())]
+    paths = []
+    children = plan.children()
+    for i in range(children.size()):
+        paths += _scanned_paths(children.apply(i))
+    return paths
+
+
+def test_frontier_commit_reads_frontier_once_and_no_robots(
+    spark, fixture_tables, tmp_path, monkeypatch
+):
+    """Round 1's frontier commit settles found, missed and robots-disabled
+    rows in one join against one frontier scan: the disabled rows come
+    from the round's claim cache, so the commit reads the robots table
+    zero times and the frontier once."""
+    from tripwire_spark.operators import crawl
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    pages, seeds, robots = fixture_tables
+    robots.write.parquet(str(tmp_path / "robots_dim"))
+    robots = spark.read.parquet(str(tmp_path / "robots_dim"))
+    plans = {}
+    real_commit = SnapshotTable.commit
+
+    def spy(self, df, summary=None):
+        plans[self.name, (summary or {}).get("round")] = df._jdf.queryExecution().executedPlan()
+        return real_commit(self, df, summary)
+
+    monkeypatch.setattr(SnapshotTable, "commit", spy)
+    st = crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=1, default_budget=2,
+        checkpoint_dir=str(tmp_path / "ck"),
+    )
+    assert st.frontier.filter(F.col("status") == "disabled").count() > 0
+    paths = _scanned_paths(plans["frontier", 1])
+    assert not [p for p in paths if "robots_dim" in p], paths
+    assert len([p for p in paths if "/frontier/" in p]) == 1, paths
+
+
+def test_disabled_rows_add_no_clicked_text(spark, fixture_tables, monkeypatch):
+    """A row the schedule disables is never claimed, so its ``ck`` does
+    not join the clicked-text (D2) state: round 2's ``clicked`` holds no
+    ``ck`` that only a row disabled in round 2 carries.  Even hosts
+    disallow ``/p1``, which round 1's pages link to (the seeds are
+    ``/p0``, so the fixture's own robots block nothing after round 1)."""
+    from tripwire_spark.operators import crawl
+
+    pages, seeds, robots = fixture_tables
+    robots = robots.withColumn(
+        "disallow_prefixes",
+        F.when(F.expr("cast(substr(host, 5, 4) as int) % 2 = 0"), F.array(F.lit("/p1")))
+        .otherwise(F.array().cast("array<string>")),
+    )
+    schedules, clicked = {}, {}
+    real_schedule, real_discover = crawl.politeness_schedule, crawl.discover
+
+    def schedule_spy(frontier, *args, **kwargs):
+        out = real_schedule(frontier, *args, **kwargs)
+        schedules[kwargs["round_no"]] = (
+            out.collect(),
+            {r.ck for r in frontier.filter((F.col("status") == "completed") | (F.col("try") > 0))
+             .select("ck").collect()},
+        )
+        return out
+
+    def discover_spy(*args, **kwargs):
+        if kwargs["clicked"] is not None:
+            clicked[kwargs["round_no"]] = {r.ck for r in kwargs["clicked"].collect()}
+        return real_discover(*args, **kwargs)
+
+    monkeypatch.setattr(crawl, "politeness_schedule", schedule_spy)
+    monkeypatch.setattr(crawl, "discover", discover_spy)
+    crawl.run_crawl(
+        spark, seeds, pages, robots, BLACKLIST_PATTERNS, max_rounds=2, default_budget=2
+    ).release()
+    rows, claimed_before = schedules[2]
+    running = {r.ck for r in rows if r.status == "running"}
+    disabled_only = {r.ck for r in rows if r.status == "disabled"} - running - claimed_before
+    assert disabled_only, "round 2 disabled no row with a ck of its own"
+    assert not disabled_only & clicked[2], disabled_only & clicked[2]
+    assert running - {None} <= clicked[2]
+
+
 def test_round_caches_released_when_round_ends_or_raises(spark, fixture_tables, monkeypatch):
     """A round releases what it pinned when it ends and when it raises:
     no frame the crawl persisted stays cached and no RDD it persisted

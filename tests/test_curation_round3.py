@@ -397,13 +397,13 @@ def test_scorecard_budget_feeds_politeness(spark):
         "qid long, url string, url_hash long, host string, alexa int, try int, "
         "status string, queue string, vid int, round_added int, weight double, ck long",
     )
-    claimed, disabled = politeness_schedule(frontier, robots=budgets)
+    schedule = politeness_schedule(frontier, robots=budgets)
     per_host = {
-        r["host"]: r["n"]
-        for r in claimed.groupBy("host").agg(F.count(F.lit(1)).alias("n")).collect()
+        (r["host"], r["status"]): r["n"]
+        for r in schedule.groupBy("host", "status").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert per_host == {"good.test": 4, "farm.test": 1}
-    assert disabled.count() == 0
+    # no row is disabled: the scorecard dim disallows nothing
+    assert per_host == {("good.test", "running"): 4, ("farm.test", "running"): 1}
 
 
 # ---------- review-finding regressions -------------------------------------

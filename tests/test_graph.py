@@ -68,11 +68,40 @@ def test_host_rank_weights_drive_claim_order(spark):
     w = {r.host: r.weight for r in weighted.collect()}
     assert w["site2.test"] == 0.9 and w["site0.test"] == 0.1
     assert w["site1.test"] is None  # unranked host keeps NULL weight
-    claimed, _ = politeness_schedule(weighted, default_budget=1)
-    rows = claimed.orderBy("host").collect()
+    rows = politeness_schedule(weighted, default_budget=1).orderBy("host").collect()
+    assert {r.status for r in rows} == {"running"}
     # every host still gets its politeness slot; ordering is per-round
     # claim priority which claim_order pins (weight desc nulls last)
     assert {r.host for r in rows} == {f"site{i}.test" for i in range(4)}
+
+
+def test_anchor_text_profile_canonicalizes_each_link_once(spark):
+    """The profile's plan evaluates the link canonicalizer once per link:
+    one ArrowEvalPython node for it, none copied into the NULL filter.
+    The shared ``resolve_canonicalize`` the crawl uses stays
+    deterministic."""
+    from tripwire_spark.functions.urls import resolve_canonicalize
+    from tripwire_spark.operators.graph import anchor_text_profile
+    from tripwire_spark.sources.synth import synth_pages
+
+    def udf_nodes(plan):
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            return udf_nodes(plan.executedPlan())
+        names = []
+        if plan.nodeName() == "ArrowEvalPython":
+            udfs = plan.udfs()
+            names += [udfs.apply(i).name() for i in range(udfs.size())]
+        children = plan.children()
+        for i in range(children.size()):
+            names += udf_nodes(children.apply(i))
+        return names
+
+    out = anchor_text_profile(synth_pages(spark, 40, 8, 3))
+    names = udf_nodes(out._jdf.queryExecution().executedPlan())
+    assert names.count("resolve_canonicalize") == 1, names
+    assert names.count("extract_links") == 1, names
+    assert resolve_canonicalize.deterministic
+    assert out.count() > 0
 
 
 def test_checkpoint_every_bounds_lineage(spark):

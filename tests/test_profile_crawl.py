@@ -1,5 +1,6 @@
 """tools/profile_crawl.py's event-log reader: task concurrency is counted
-from executor-side task times, so it never exceeds the task slots."""
+from executor-side task times, so it never exceeds the task slots, and
+the job-description view counts the jobs each description started."""
 
 from __future__ import annotations
 
@@ -46,7 +47,7 @@ def test_concurrency_never_exceeds_two_slots(tmp_path):
     log = tmp_path / "app-1"
     log.write_text("".join(json.dumps(e) + "\n" for e in events))
 
-    _, tasks = profile_crawl.read_eventlog(str(log))
+    _, tasks, _ = profile_crawl.read_eventlog(str(log))
     assert sorted(tasks) == [(0, 100), (0, 120), (100, 250), (120, 200), (400, 500), (500, 600)]
     by_level, gaps = profile_crawl.concurrency(tasks, 0, 600)
     assert max(lvl for lvl, sec in by_level.items() if sec > 0) == 2
@@ -56,3 +57,65 @@ def test_concurrency_never_exceeds_two_slots(tmp_path):
     late = [(e["Task Info"]["Launch Time"], e["Task Info"]["Finish Time"])
             for e in events if e["Event"] == "SparkListenerTaskEnd"]
     assert max(profile_crawl.concurrency(late, 0, 600)[0]) > 2
+
+
+def _job_start(job: int, sub: int, desc: str | None, stages: list[int]) -> dict:
+    props = {"spark.job.description": desc} if desc is not None else {}
+    return {"Event": "SparkListenerJobStart", "Job ID": job, "Submission Time": sub,
+            "Stage IDs": stages, "Properties": props}
+
+
+def _stage_done(stage: int, sub: int, done: int, tasks: int, run_ms: int) -> dict:
+    return {"Event": "SparkListenerStageCompleted", "Stage Info": {
+        "Stage ID": stage, "Stage Name": f"stage {stage}", "Number of Tasks": tasks,
+        "Submission Time": sub, "Completion Time": done,
+        "Accumulables": [{"Name": "internal.metrics.executorRunTime", "Value": run_ms}],
+    }}
+
+
+def test_jobs_counted_per_description(tmp_path, capsys):
+    """Every job start counts under its description, also a job whose
+    stages were all skipped (no completed stage) and a job with none;
+    stage sums stay per description, and the report prints the counts
+    of the jobs submitted inside its window."""
+    sys.path.insert(0, str(ROOT / "tools"))
+    import profile_crawl
+
+    events = [
+        _job_start(0, 1000, "round 1: drain count", [0]),
+        _stage_done(0, 1000, 1050, 2, 40),
+        _job_start(1, 1060, "round 1: frontier commit (admit+settle)", [1, 2]),
+        _stage_done(1, 1060, 1100, 4, 120),
+        _stage_done(2, 1100, 1150, 1, 30),
+        # all stages skipped: a job start with no completed stage
+        _job_start(2, 1160, "round 1: frontier commit (admit+settle)", [3]),
+        _job_start(3, 1170, None, [4]),
+        _stage_done(4, 1170, 1200, 1, 10),
+        _task_end(0, 1000, 0, 40, 0, 1050),
+        _task_end(1, 1060, 0, 90, 0, 1150),
+        _task_end(4, 1170, 0, 30, 0, 1200),
+        # submitted after the last task ends: outside the default window
+        _job_start(4, 1900, "round 2: drain count", []),
+    ]
+    log = tmp_path / "app-2"
+    log.write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    stages, tasks, jobs = profile_crawl.read_eventlog(str(log))
+    assert [d for _, d in jobs] == [
+        "round 1: drain count", "round 1: frontier commit (admit+settle)",
+        "round 1: frontier commit (admit+settle)", "", "round 2: drain count",
+    ]
+    got = {k: dict(v) for k, v in profile_crawl.by_description(stages, jobs).items()}
+    assert got == {
+        "round 1: drain count": {"jobs": 1, "run_s": 0.04, "cpu_s": 0.0, "tasks": 2},
+        "round 1: frontier commit (admit+settle)": {
+            "jobs": 2, "run_s": 0.15, "cpu_s": 0.0, "tasks": 5,
+        },
+        "(no description)": {"jobs": 1, "run_s": 0.01, "cpu_s": 0.0, "tasks": 1},
+        "round 2: drain count": {"jobs": 1},
+    }
+    profile_crawl.report(stages, tasks, jobs)
+    out = capsys.readouterr().out
+    assert "by job description (jobs, run_s, cpu_s, tasks); 4 jobs:" in out
+    assert "     2      0.1      0.0      5  round 1: frontier commit (admit+settle)" in out
+    assert "round 2: drain count" not in out

@@ -97,10 +97,43 @@ def test_parsed_robots_feed_politeness_schedule(spark):
             "crawl_budget"
         ),
     )
-    claimed, disabled = politeness_schedule(frontier, robots, default_budget=10)
-    assert [r.url for r in disabled.collect()] == ["http://h.test/cgi-bin/x"]
-    got = sorted(r.url for r in claimed.collect())
-    assert got == ["http://h.test/ok1", "http://h.test/ok2"]  # FIFO under budget 2
+    schedule = politeness_schedule(frontier, robots, default_budget=10)
+    got = sorted((r.status, r.url) for r in schedule.collect())
+    assert got == [
+        ("disabled", "http://h.test/cgi-bin/x"),
+        ("running", "http://h.test/ok1"),  # FIFO under budget 2
+        ("running", "http://h.test/ok2"),
+    ]
+
+
+def test_blocked_rows_take_no_budget_rank(spark):
+    """A host whose first rows in claim order are disallowed still claims
+    its full budget of allowed rows, and every queued blocked row comes
+    back ``disabled`` (a row not queued is not touched), under one salt
+    bucket and under many."""
+    from tripwire_spark.operators.frontier import FRONTIER_COLS, politeness_schedule
+
+    rows = [
+        (qid, f"http://h.test/{'private' if qid <= 6 else 'pub'}/{qid}", qid * 7, "h.test",
+         None, 0, "completed" if qid == 1 else "queued", "default", 1, 0, None, None)
+        for qid in range(1, 13)
+    ]
+    frontier = spark.createDataFrame(
+        rows,
+        "qid long, url string, url_hash long, host string, alexa int, try int, "
+        "status string, queue string, vid int, round_added int, weight double, ck long",
+    )
+    robots = spark.createDataFrame(
+        [("h.test", ["/private"], 3)],
+        "host string, disallow_prefixes array<string>, crawl_budget int",
+    )
+    for salts in (1, 4, 16):
+        schedule = politeness_schedule(frontier, robots, salt_buckets=salts)
+        assert schedule.columns == FRONTIER_COLS
+        got = sorted((r.status, r.qid) for r in schedule.collect())
+        assert got == [("disabled", q) for q in range(2, 7)] + [
+            ("running", q) for q in (7, 8, 9)
+        ], salts
 
 
 def test_parsed_robots_drive_full_crawl(spark):

@@ -298,3 +298,56 @@ def test_iceberg_table_reads_base_as_whole_table(tmp_path):
     assert t.read_base() == ("whole table", None)
     assert t.read_base(1) == ("whole table", 1)
     assert t.read_deltas() is None and t.read_deltas(2) is None
+
+
+def test_ids_that_name_no_snapshot_are_refused(spark, tmp_path):
+    """A read, a rollback or an expiry by an id or ``keep_last`` that
+    names no snapshot raises ``ValueError`` naming the table, before the
+    manifest or any data is touched: ``rollback(0)`` would otherwise drop
+    every snapshot and its data, and ``keep_last=0`` expire nothing."""
+    import pytest
+
+    from tripwire_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path), "log")
+    t.commit(_df(spark, 0, 100))
+    t.commit_append(_df(spark, 100, 150))
+    manifest = (tmp_path / "log" / "manifest.json").read_text()
+    data = sorted(os.listdir(tmp_path / "log"))
+    for read in (t.read, t.read_base, t.read_deltas):
+        with pytest.raises(ValueError, match="table log: no snapshot 7"):
+            read(7)
+    for sid in (0, 3):
+        with pytest.raises(ValueError, match=f"table log: no snapshot {sid}"):
+            t.rollback(sid)
+    with pytest.raises(ValueError, match="table log: keep_last must be at least 1, got 0"):
+        t.expire_snapshots(keep_last=0)
+    assert (tmp_path / "log" / "manifest.json").read_text() == manifest
+    assert sorted(os.listdir(tmp_path / "log")) == data
+    assert t.read().count() == 150
+
+
+def test_iceberg_ids_that_name_no_snapshot_are_refused(tmp_path):
+    """The Iceberg twin refuses the same ids before any catalog call
+    (built over a hand-written ledger with no session: a call that
+    reached Spark would fail on ``spark`` being None)."""
+    import pytest
+
+    from tripwire_spark.sources.snapshots import IcebergSnapshotTable
+
+    t = IcebergSnapshotTable.__new__(IcebergSnapshotTable)
+    t.name, t.dir, t.spark = "log", str(tmp_path / "log"), None
+    t.identifier = "cat.db.log"
+    t._manifest_path = os.path.join(t.dir, "manifest.json")
+    os.makedirs(t.dir)
+    ledger = [{"id": 1, "parent": None, "op": "overwrite", "iceberg_snapshot_id": 7001,
+               "ts": 0.0, "summary": {}}]
+    t._write_manifest({"table": t.name, "snapshots": ledger})
+    with pytest.raises(ValueError, match="table log: no snapshot 2"):
+        t.read(2)
+    for sid in (0, 2):
+        with pytest.raises(ValueError, match=f"table log: no snapshot {sid}"):
+            t.rollback(sid)
+    with pytest.raises(ValueError, match="table log: keep_last must be at least 1, got 0"):
+        t.expire_snapshots(keep_last=0)
+    assert t.snapshots() == ledger

@@ -8,7 +8,8 @@ Either way it attributes wall time:
 
   * per stage: wall (submission -> completion), executor run, CPU and
     GC time, shuffle read/write, input and result bytes, tasks
-  * per job description (``setJobDescription``): run, CPU, tasks
+  * per job description (``setJobDescription``): jobs started, run,
+    CPU, tasks
   * time at each task-concurrency level; level 0 is DRIVER GAP time —
     the serial time Amdahl's c is made of (broadcast builds, plan
     compilation, driver-side bookkeeping) — attributed to the job
@@ -82,14 +83,16 @@ def task_span(ti: dict, tm: dict | None) -> tuple[int, int]:
     return launch, min(launch + busy, ti["Finish Time"])
 
 
-def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]]]:
-    """(completed stages, task (launch, end) intervals) of one log."""
+def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]], list[tuple[int, str]]]:
+    """(completed stages, task (launch, end) intervals, job (submission
+    ms, description) starts) of one log."""
     stage_desc: dict[int, str] = {}
-    stages, tasks = [], []
+    stages, tasks, jobs = [], [], []
     for ev in iter_events(path):
         t = ev.get("Event")
         if t == "SparkListenerJobStart":
             desc = (ev.get("Properties") or {}).get("spark.job.description") or ""
+            jobs.append((ev.get("Submission Time", 0), desc))
             for sid in ev.get("Stage IDs", []):
                 stage_desc[sid] = desc
         elif t == "SparkListenerStageCompleted":
@@ -114,7 +117,7 @@ def read_eventlog(path: str) -> tuple[list[dict], list[tuple[int, int]]]:
             })
         elif t == "SparkListenerTaskEnd":
             tasks.append(task_span(ev["Task Info"], ev.get("Task Metrics")))
-    return stages, tasks
+    return stages, tasks, jobs
 
 
 def concurrency(tasks: list[tuple[int, int]], t0: int, t1: int):
@@ -138,7 +141,23 @@ def concurrency(tasks: list[tuple[int, int]], t0: int, t1: int):
 STAGE_COLS = ("run_s", "cpu_s", "gc_s", "tasks", "shr_mb", "shw_mb", "in_mb", "res_mb")
 
 
-def report(stages: list[dict], tasks: list[tuple[int, int]], window=None) -> None:
+def by_description(stages: list[dict], jobs: list[tuple[int, str]]) -> dict[str, dict]:
+    """Job description -> {jobs, run_s, cpu_s, tasks}: ``jobs`` counts the
+    job starts (a job whose stages were all skipped still counts), the
+    rest sums its completed stages."""
+    out: dict[str, dict] = defaultdict(lambda: defaultdict(float))
+    for _, desc in jobs:
+        out[desc or "(no description)"]["jobs"] += 1
+    for s in stages:
+        d = out[s["desc"] or "(no description)"]
+        for k in ("run_s", "cpu_s", "tasks"):
+            d[k] += s[k]
+    return out
+
+
+def report(
+    stages: list[dict], tasks: list[tuple[int, int]], jobs: list[tuple[int, str]], window=None
+) -> None:
     """Print every view over ``window`` = (t0_ms, t1_ms); default: the
     span of the log's tasks."""
     if not tasks:
@@ -146,6 +165,7 @@ def report(stages: list[dict], tasks: list[tuple[int, int]], window=None) -> Non
         return
     t0, t1 = window or (min(a for a, _ in tasks), max(b for _, b in tasks))
     stages = [s for s in stages if s["done"] >= t0 and s["sub"] <= t1]
+    jobs = [j for j in jobs if t0 <= j[0] <= t1]
     tasks = [(max(a, t0), min(b, t1)) for a, b in tasks if b > t0 and a < t1]
     wall = (t1 - t0) / 1000
 
@@ -164,14 +184,11 @@ def report(stages: list[dict], tasks: list[tuple[int, int]], window=None) -> Non
             f"{a['shr_mb']:7.0f} {a['shw_mb']:7.0f} {a['in_mb']:7.0f} {a['res_mb']:7.2f}  x{int(a['n']):<3d} {tag}{label}"
         )
 
-    print("== by job description (run_s, cpu_s, tasks):")
-    by_desc: dict[str, dict] = defaultdict(lambda: defaultdict(float))
-    for s in stages:
-        d = by_desc[s["desc"] or "(no description)"]
-        for k in ("run_s", "cpu_s", "tasks"):
-            d[k] += s[k]
-    for desc, d in sorted(by_desc.items(), key=lambda x: -x[1]["run_s"]):
-        print(f"  {d['run_s']:8.1f} {d['cpu_s']:8.1f} {int(d['tasks']):6d}  {desc[:80]}")
+    print(f"== by job description (jobs, run_s, cpu_s, tasks); {len(jobs)} jobs:")
+    for desc, d in sorted(by_description(stages, jobs).items(), key=lambda x: -x[1]["run_s"]):
+        print(
+            f"  {int(d['jobs']):4d} {d['run_s']:8.1f} {d['cpu_s']:8.1f} {int(d['tasks']):6d}  {desc[:80]}"
+        )
 
     by_level, gaps = concurrency(tasks, t0, t1)
     print("== time at task concurrency level (s); 0 running = driver gap:")

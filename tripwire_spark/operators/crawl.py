@@ -9,8 +9,8 @@ one "round" = one deterministic batch over the whole claimable set
 instead of one worker claiming one row.
 
 Per round:
-1. politeness schedule (W2 two-phase salted rank under budget, robots
-   filter)
+1. politeness schedule in one pass (W2 two-phase salted rank under
+   budget, robots gate): the claim cache, ``running`` or ``disabled`` rows
 2. fetch = claimed keys joined to pages on the 64-bit url hash (broadcast
    keys; both sides hash-exchanged past ``FETCH_JOIN_THRESHOLD`` claims)
 3. extraction: byte-identical text (pageUtils.js:58-61), link + form
@@ -20,7 +20,8 @@ Per round:
    ONE cogrouped seen-state pass (seen.py SeenState.admit): in-round
    dedup + exact membership + the new delta segment in a single
    shuffle — D7 / F2 analog
-5. settle: status transitions (T2), hash-derived qids for discoveries
+5. settle: status transitions (T2) of the found, missed and disabled
+   rows in one frontier join, hash-derived qids for discoveries
 6. four commits (= Iceberg snapshots; resume = read the latest committed
    round): the frontier rewrite, then the fetch_log (S10, one row per
    claimed url; a found one carries its page, S7), decision_log (S9) and
@@ -31,9 +32,9 @@ Every crawl commits its rounds to snapshot tables, under
 ``checkpoint_dir`` or, without one, under a private scratch directory
 that ``CrawlState.release()`` deletes.
 
-Driver actions per round: the fetch+extract checkpoint, the drain
-count on the cached claim set, and the commits of step 6 (the admit
-chain runs inside the frontier commit); each carries its own job
+Driver actions per round: the fetch+extract checkpoint, the drain count
+on the claim cache, and the commits of step 6 (the admit chain runs in
+the frontier commit; it reads no robots); each has its own job
 description ("round r: ..."), so an event log splits a round by phase.
 Task budget: a stage's task count follows its rows.  Only the html
 parse (one task per input split) and the cogroup admit run wide, and
@@ -69,7 +70,9 @@ from tripwire_spark.functions.urls import reg_domain, resolve_canonicalize, url_
 from tripwire_spark.operators.frontier import (
     FRONTIER_COLS,
     ST_COMPLETED,
+    ST_DISABLED,
     ST_QUEUED,
+    ST_RUNNING,
     blacklist_regex,
     politeness_schedule,
     seed_decision_log,
@@ -697,14 +700,16 @@ def run_crawl(
 
     budget_cap = None  # T8: None = healthy, no throttle
     for r in range(start_round, max_rounds + 1):
-        claimed, disabled = politeness_schedule(
+        # The claim cache: every claim consumer reads its `running` rows;
+        # its `disabled` (robots-blocked) rows only settle.
+        schedule = politeness_schedule(
             state.frontier, robots, default_budget=default_budget, round_no=r,
             budget_cap=budget_cap,
-        )
-        claimed = claimed.persist()
+        ).persist()
+        claimed = schedule.filter(F.col("status") == ST_RUNNING)
         # every frame the round pins; all are dropped when it ends,
         # also when it raises
-        round_caches = [claimed]
+        round_caches = [schedule]
         try:
             if identities is not None:
                 # Sticky identity claim: mapped hosts reuse, new hosts take
@@ -825,12 +830,12 @@ def run_crawl(
                 F.spark_partition_id().alias("partition_id"), "text", "lang", "warc_ts",
             )
 
-            settled = settle(
-                state.frontier,
-                fetched.select("qid", "round_added", "try", "found"),
-                new_urls=new_rows,
-                disabled=disabled,
+            # a disabled row was never fetched: it settles with found NULL
+            disabled = schedule.filter(F.col("status") == ST_DISABLED)
+            outcomes = fetched.select("qid", "round_added", "try", "found").unionByName(
+                disabled.select("qid", "round_added", "try"), allowMissingColumns=True
             )
+            settled = settle(state.frontier, outcomes, new_urls=new_rows)
 
             # Mutating tables (frontier, assignments) rewrite; every
             # append-only table commits ONLY this round's delta (the Iceberg

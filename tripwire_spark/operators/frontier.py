@@ -137,106 +137,96 @@ def politeness_schedule(
     round_no: int = 1,
     salt_buckets: int = 16,
     budget_cap: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Claim this round's jobs: per-host FIFO rank under the politeness
-    budget (W2: rank by qid within host; common_queries.py:42-56).
+) -> DataFrame:
+    """Claim this round's jobs and gate them on robots in one pass: per-host
+    FIFO rank under the politeness budget (W2: rank by qid within host;
+    common_queries.py:42-56).
 
     Skew design (the salted host-hash strategy of SURVEY.md §4 #2): a
     mega-host with 10^7 pending URLs must not pin one window partition.
     Top-B per host is computed in two phases —
 
-    1. rank within (host, salt) where salt = xxhash64(url) % S: each hot
-       host fans out over S partitions; keep rank <= budget per salt
-       (the global per-host top-B is a subset of the union of per-salt
-       top-Bs, so phase 1 loses nothing);
+    1. rank within (host, blocked, salt) where salt = xxhash64(url) % S:
+       each hot host fans out over S partitions; keep rank <= budget per
+       salt (the global per-host top-B is a subset of the union of
+       per-salt top-Bs, so phase 1 loses nothing);
     2. exact rank over (host) on the <= S*B survivors per host.
 
-    Returns (claimed, disabled_by_robots).  ``robots`` is broadcast —
-    a per-host dimension table, tiny next to the frontier.
+    Returns one frame of FRONTIER_COLS: claimed rows ``running``,
+    robots-blocked rows ``disabled`` (one status pass, as the reference
+    makes over ``queues``).  A blocked row takes no budget rank and stays
+    salted in phase 2, so 10^7 disallowed URLs of one host spread too.
+    ``robots`` is broadcast — a per-host dimension table, tiny next to
+    the frontier — and read once.
     """
     claimable = frontier.filter((F.col("status") == ST_QUEUED) & (F.col("try") < MAX_TRIES))
+    budget = F.lit(default_budget)
+    blocked = F.lit(False)
     if robots is not None:
-        r = F.broadcast(robots)
-        claimable = claimable.join(r, "host", "left")
+        claimable = claimable.join(F.broadcast(robots), "host", "left")
         path = url_path(F.col("url"))
         blocked = F.exists(
             F.coalesce(F.col("disallow_prefixes"), F.array().cast("array<string>")),
             lambda p: path.startswith(p),
         )
-        disabled = claimable.filter(blocked).select(*FRONTIER_COLS).withColumn(
-            "status", F.lit(ST_DISABLED)
-        )
-        claimable = claimable.filter(~blocked)
-        budget = F.coalesce(F.col("crawl_budget"), F.lit(default_budget))
-    else:
-        disabled = claimable.limit(0).select(*FRONTIER_COLS)
-        claimable = claimable.withColumn("crawl_budget", F.lit(default_budget))
-        budget = F.col("crawl_budget")
-
+        budget = F.coalesce(F.col("crawl_budget"), budget)
     if budget_cap is not None:
         # T8 backpressure: an unhealthy previous round caps every host's
         # budget this round (run_queue_nowrap:219-231 gate analog).
         budget = F.least(budget, F.lit(budget_cap))
-    salted = claimable.withColumn("__salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
-    w1 = Window.partitionBy("queue", "host", "__salt").orderBy(*claim_order())
-    survivors = salted.withColumn("__rn1", F.row_number().over(w1)).filter(F.col("__rn1") <= budget)
-    w2 = Window.partitionBy("queue", "host").orderBy(*claim_order())
-    claimed = (
-        survivors.withColumn("__rank", F.row_number().over(w2))
-        .filter(F.col("__rank") <= budget)
-        .select(*FRONTIER_COLS)
-        .withColumn("status", F.lit(ST_RUNNING))
+    salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
+    salted = claimable.withColumn("__blocked", blocked).withColumn("__salt", salt)
+    w1 = Window.partitionBy("queue", "host", "__blocked", "__salt").orderBy(*claim_order())
+    survivors = salted.withColumn("__rn1", F.row_number().over(w1)).filter(
+        F.col("__blocked") | (F.col("__rn1") <= budget)
     )
-    return claimed, disabled
+    w2 = Window.partitionBy("queue", "host", F.when(F.col("__blocked"), F.col("__salt")))
+    return (
+        survivors.withColumn("__rank", F.row_number().over(w2.orderBy(*claim_order())))
+        .filter(F.col("__blocked") | (F.col("__rank") <= budget))
+        .withColumn("status", F.when(F.col("__blocked"), ST_DISABLED).otherwise(ST_RUNNING))
+        .select(*FRONTIER_COLS)
+    )
 
 
 def settle(
     frontier: DataFrame,
-    claimed_outcomes: DataFrame,
+    outcomes: DataFrame,
     new_urls: DataFrame | None = None,
-    disabled: DataFrame | None = None,
 ) -> DataFrame:
     """Apply one round's status transitions (T2 exit-code policy,
-    run_queue_nowrap:49-80,641-649) — the batch MERGE INTO:
+    run_queue_nowrap:49-80,641-649) — the batch MERGE INTO, one join:
 
     - found           -> completed
     - miss & try<RETRY_MAX -> queued, try+1   (requeue)
     - miss & try>=RETRY_MAX -> failed
     - robots-blocked  -> disabled
     plus appended newly-discovered queued rows.
+
+    ``outcomes`` (qid, round_added, try, found): ``found`` is true or
+    false for a claimed row, NULL for a robots-disabled one.
     """
     # The frontier's unique key is the COMPOUND (qid, round_added): a
     # seed's qid (file_order) may numerically equal a discovery's qid
     # (url_hash), but never within the same round_added.
-    outcome = claimed_outcomes.select(
+    outcome = outcomes.select(
         "qid",
         "round_added",
-        F.when(F.col("found"), F.lit(ST_COMPLETED))
+        F.when(F.col("found").isNull(), F.lit(ST_DISABLED))
+        .when(F.col("found"), F.lit(ST_COMPLETED))
         .when(F.col("try") < RETRY_MAX, F.lit(ST_QUEUED))
         .otherwise(F.lit(ST_FAILED))
         .alias("__new_status"),
         F.when(~F.col("found"), F.lit(1)).otherwise(F.lit(0)).alias("__try_inc"),
     )
-    dis = (
-        disabled.select("qid", "round_added", F.lit(ST_DISABLED).alias("__dis"))
-        if disabled is not None
-        else None
-    )
-
-    upd = frontier.join(outcome, ["qid", "round_added"], "left")
-    if dis is not None:
-        upd = upd.join(dis, ["qid", "round_added"], "left")
-        new_status = F.coalesce(F.col("__dis"), F.col("__new_status"), F.col("status"))
-    else:
-        new_status = F.coalesce(F.col("__new_status"), F.col("status"))
-    merged = upd.select(
+    merged = frontier.join(outcome, ["qid", "round_added"], "left").select(
         "qid",
         "url",
         "url_hash",
         "host",
         "alexa",
         (F.col("try") + F.coalesce(F.col("__try_inc"), F.lit(0))).alias("try"),
-        new_status.alias("status"),
+        F.coalesce(F.col("__new_status"), F.col("status")).alias("status"),
         "queue",
         "vid",
         "round_added",

@@ -120,22 +120,29 @@ def anchor_text_profile(
 
     Plan: links are extracted ONCE per page (same single-parse
     discipline as the crawl); hrefs resolve/canonicalize against the
-    page url scan-side; then one partial-agg groupBy (target, text) —
-    Zipf-skewed texts collapse map-side — and a per-target window over
-    the already-aggregated (distinct-text-sized) rows.  Page html never
+    page url scan-side, once per link; then one partial-agg groupBy
+    (target, text) — Zipf-skewed texts collapse map-side — and a
+    per-target window over the already-aggregated (distinct-text-sized)
+    rows.  Page html never
     enters a shuffle; the exchanged rows are (url, text, long).
     """
     from pyspark.sql import Window
+    from pyspark.sql.types import StringType
 
     from tripwire_spark.functions.html import extract_links
     from tripwire_spark.functions.urls import resolve_canonicalize
 
+    # The NULL filter below would be pushed under the projection with a
+    # deterministic UDF copied into it (two canonicalizer passes per
+    # link).  A nondeterministic twin stays in the projection; the shared
+    # resolve_canonicalize, which the crawl plans use, stays deterministic.
+    canonicalize_once = F.pandas_udf(resolve_canonicalize.func, StringType()).asNondeterministic()
     links = pages.select(
         F.col(url_col), F.explode(extract_links(F.col(html_col))).alias("l")
     )
     per = (
         links.select(
-            resolve_canonicalize(url_col, F.col("l.href")).alias("target"),
+            canonicalize_once(url_col, F.col("l.href")).alias("target"),
             F.col("l.text").alias("text"),
         )
         # javascript:/malformed hrefs canonicalize to NULL — drop them

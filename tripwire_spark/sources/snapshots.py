@@ -233,7 +233,22 @@ class SnapshotTable:
             raise FileNotFoundError(f"table {self.name}: no snapshots")
         if snapshot_id is None:
             return snaps[-1]
-        return next(s for s in snaps if s["id"] == snapshot_id)
+        return self._snapshot(snaps, snapshot_id)
+
+    def _snapshot(self, snaps: list[dict], snapshot_id: int) -> dict:
+        """The snapshot ``snapshot_id`` names; ``ValueError`` when none
+        does, so no caller reads, keeps or drops by an id that is not
+        there."""
+        for s in snaps:
+            if s["id"] == snapshot_id:
+                return s
+        raise ValueError(f"table {self.name}: no snapshot {snapshot_id}")
+
+    def _check_keep_last(self, keep_last: int) -> None:
+        if keep_last < 1:
+            raise ValueError(
+                f"table {self.name}: keep_last must be at least 1, got {keep_last}"
+            )
 
     def _read_bucketed(self, snap: dict) -> DataFrame:
         """Catalog-table read of a bucketed full snapshot; re-registers
@@ -323,6 +338,7 @@ class SnapshotTable:
         Data dirs still referenced by a kept snapshot (append lineage)
         survive; only orphaned dirs are deleted."""
         man = self._manifest()
+        self._snapshot(man["snapshots"], snapshot_id)
         keep, drop = [], []
         for s in man["snapshots"]:
             (keep if s["id"] <= snapshot_id else drop).append(s)
@@ -339,6 +355,7 @@ class SnapshotTable:
     def expire_snapshots(self, keep_last: int = 2) -> None:
         """GC data dirs reachable only from expired snapshots, keeping
         manifest history (Iceberg expire_snapshots)."""
+        self._check_keep_last(keep_last)
         man = self._manifest()
         kept = man["snapshots"][-keep_last:]
         referenced = {p for s in kept for p in self._data_dirs(s)}
@@ -435,12 +452,7 @@ class IcebergSnapshotTable(SnapshotTable):
         return self._record("append", summary)
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
-        snaps = self.snapshots()
-        if not snaps:
-            raise FileNotFoundError(f"table {self.name}: no snapshots")
-        snap = snaps[-1] if snapshot_id is None else next(
-            s for s in snaps if s["id"] == snapshot_id
-        )
+        snap = self._select(snapshot_id)
         return (
             self.spark.read.option("snapshot-id", snap["iceberg_snapshot_id"])
             .table(self.identifier)
@@ -481,9 +493,8 @@ class IcebergSnapshotTable(SnapshotTable):
 
     def rollback(self, snapshot_id: int) -> None:
         man = self._manifest()
+        self._snapshot(man["snapshots"], snapshot_id)
         keep = [s for s in man["snapshots"] if s["id"] <= snapshot_id]
-        if not keep:
-            raise ValueError(f"snapshot {snapshot_id} not found")
         catalog = self.identifier.split(".", 1)[0]
         self.spark.sql(
             f"CALL {catalog}.system.rollback_to_snapshot('{self.identifier.split('.', 1)[1]}', "
@@ -493,6 +504,7 @@ class IcebergSnapshotTable(SnapshotTable):
         self._write_manifest(man)
 
     def expire_snapshots(self, keep_last: int = 2) -> None:
+        self._check_keep_last(keep_last)
         man = self._manifest()
         old = man["snapshots"][:-keep_last]
         if not old:
